@@ -25,10 +25,20 @@ The job is resumable: re-running with the same --output continues from
 the lineage table (see ocr_spark/checkpoint.py); completed buckets are
 skipped, half-written buckets are overwritten idempotently.
 
-Sizing guidance at 10^12 turns: buckets ~= executors * 8 (resume
-granularity well under one executor-hour), chunk-buckets ~= executors
-(one commit per "wave"), salt >= 8 so a 10^5-turn conversation spreads
-over that many tasks.
+Sizing guidance at 10^12 turns:
+
+- ``--buckets`` ~= executors * 8: the resume granularity, well under one
+  executor-hour of work per bucket.
+- ``--chunk-buckets`` sets the commit granularity AND the task size.  Each
+  chunk runs its kernel stage as one task per core (the session's default
+  parallelism), so a task carries about (chunk turns / total cores) turns
+  and the chunk writes about chunk-buckets * cores data files.  Every task
+  pays a fixed cost (Python worker hand-off, kernel call setup, one parquet
+  file per bucket it touches; measured in SCALE.md §6), so pick it large
+  enough that tasks carry thousands of turns, and small enough that
+  redoing one chunk after a crash stays cheap.
+- ``--salt`` >= 8 so a 10^5-turn conversation spreads over that many
+  tasks.
 """
 
 from __future__ import annotations
@@ -41,14 +51,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def build_session(app: str, shuffle_partitions: int | None):
+def build_session(app: str):
     from pyspark.sql import SparkSession
 
-    b = SparkSession.builder.appName(app)
-    if shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return (
-        b.config("spark.sql.adaptive.enabled", "true")
+        SparkSession.builder.appName(app)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
@@ -68,7 +76,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--salt", type=int, default=8)
     p.add_argument("--max-chunks", type=int, default=None,
                    help="stop after N chunk commits (testing / bounded runs)")
-    p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument("--synthetic", type=int, default=None, metavar="N_CONVS",
                    help="ignore --input; run on deterministic synthetic transcripts")
     p.add_argument("--deep-audit", action="store_true",
@@ -79,7 +86,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.synthetic is None and not args.input:
         p.error("either --input or --synthetic is required")
 
-    spark = build_session("ocr-spark-extract", args.shuffle_partitions)
+    spark = build_session("ocr-spark-extract")
     spark.sparkContext.setLogLevel("WARN")
 
     from ocr_spark.checkpoint import CheckpointedExtraction

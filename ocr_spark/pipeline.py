@@ -135,9 +135,10 @@ def extract_transcripts(
         partition-count heuristics apply ONLY to scan-shaped inputs
         (Relation/Filter/Project plans), where file splits are
         size-bounded and per-task work is bounded regardless of
-        conversation length: >= the target partition count gets a narrow
-        ``coalesce`` to even the task waves (no exchange); >= the
-        session's default parallelism passes through untouched.  An input
+        conversation length: at least as many partitions as the kernel
+        stage's task count (``partitions``, else one per core) gets a
+        narrow ``coalesce`` down to it (no exchange); >= the session's
+        default parallelism passes through untouched.  An input
         whose plan contains a wide node (groupBy, join, sort, repartition
         by key, ...) keeps the salted repartition REGARDLESS of partition
         count — after a shuffle keyed on conv_id, one partition can hold
@@ -148,6 +149,12 @@ def extract_transcripts(
         pmod(hash(turn_idx), salt))``).
       - 0: never repartition (caller vouches for the input partitioning,
         e.g. a bucketed table feeding a bucketed sink).
+    ``partitions``: task count of the kernel stage whenever it is
+      repartitioned or coalesced.  Default: the session's
+      ``defaultParallelism``, one task per core — every kernel task and
+      ``extract_batch`` call pays a fixed cost, so more, smaller tasks than
+      cores only add overhead (SCALE.md §6).  ``spark.sql.shuffle.partitions``
+      sizes the session's other shuffles and is not read here.
     ``reassemble``:
       - ``True``: stable-order window columns (turn_rank, conv_turns) over
         (conv_id, turn_idx) — one hash exchange; full-fidelity artifacts.
@@ -163,7 +170,7 @@ def extract_transcripts(
     (the byte-parity suite, scripts/run_extract.py e2e output).
     """
     spark = df.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = partitions or spark.sparkContext.defaultParallelism
 
     pruned = df.select(*INPUT_COLUMNS)
     staged = pruned
@@ -177,7 +184,7 @@ def extract_transcripts(
             eff_salt = DEFAULT_SALT
         elif n_in >= n_part:
             # over-partitioned scan (e.g. many small files): narrow merge to
-            # the target wave count — adjacent partitions concatenate, no
+            # the target task count — adjacent partitions concatenate, no
             # shuffle, and a no-op when counts already match
             staged = pruned.coalesce(n_part)
             eff_salt = 0

@@ -28,7 +28,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.pipeline import OUTPUT_SCHEMA, _extract_map
+from ocr_spark.pipeline import DEFAULT_SALT, extract_transcripts
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -61,19 +61,22 @@ def stream_extract(
     partitions: int | None = None,
     available_now: bool = True,
 ):
-    """readStream -> salted repartition -> mapInPandas kernel -> parquet
-    sink.  Returns the started StreamingQuery; callers awaitTermination().
+    """readStream -> `extract_transcripts` (salted repartition ->
+    mapInPandas kernel) -> parquet sink.  Returns the started
+    StreamingQuery; callers awaitTermination().  ``partitions`` sizes the
+    repartition exactly as in `extract_transcripts`.
 
     No window reassembly inside the stream (a global row_number window is
     not streamable); readers apply the stable-order window at query time,
     exactly as the batch path's `result()` does.
     """
-    src = stream_source(spark, input_dir)
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    salted = src.repartition(
-        n_part, F.hash(F.col("conv_id")), F.pmod(F.hash(F.col("turn_idx")), F.lit(8))
+    extracted = extract_transcripts(
+        stream_source(spark, input_dir),
+        salt=DEFAULT_SALT,
+        partitions=partitions,
+        reassemble=False,
+        spans=True,
     )
-    extracted = salted.mapInPandas(_extract_map, OUTPUT_SCHEMA)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)

@@ -77,6 +77,18 @@ def test_no_reassembly_means_single_shuffle(spark, tmp_path):
     assert executed.count("Exchange") == 1  # only the salt repartition
 
 
+def test_default_partitions_is_one_task_per_core(spark, tmp_path):
+    """With no ``partitions``, the salted repartition runs one kernel task
+    per core.  The test session sets spark.sql.shuffle.partitions=8 on
+    local[4], so this also pins that the SQL conf is not read."""
+    path = str(tmp_path / "t6.parquet")
+    spark.createDataFrame(synth.generate_local(10)).write.parquet(path)
+    out = extract_transcripts(spark.read.parquet(path), salt=4, reassemble=False)
+    cores = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != cores
+    assert out.rdd.getNumPartitions() == cores
+
+
 def test_auto_salt_sorted_reassembly_is_exchange_free(spark, tmp_path):
     """The at-scale posture (the benched job): a well-partitioned file scan
     with salt="auto" and bucketed-sink local-sort reassembly must be ONE

@@ -90,6 +90,28 @@ def test_empty_buckets_complete_and_rerun_is_noop(spark, tmp_path):
     assert job2.run() == 0
 
 
+def test_chunk_writes_at_most_one_file_per_bucket_per_core(spark, tmp_path):
+    """Each chunk's kernel stage runs one task per core, so a chunk writes
+    at most chunk_buckets x defaultParallelism data files — not one per
+    bucket per spark.sql.shuffle.partitions task."""
+    import collections
+    import pathlib
+
+    pdf = synth.generate_local(N_CONVS, shuffled=True)
+    out = tmp_path / "ckpt_files"
+    job = CheckpointedExtraction(
+        spark, spark.createDataFrame(pdf), str(out), buckets=8, chunk_buckets=4, salt=8
+    )
+    assert job.run() == 2
+    chunk_of = {r.bucket: r.chunk_id for r in job.lineage().collect()}
+    files = collections.Counter(
+        chunk_of[int(f.parent.name.split("=")[1])]
+        for f in pathlib.Path(out, "data").glob("bucket=*/*.parquet")
+    )
+    assert sorted(files) == [0, 1]
+    assert max(files.values()) <= 4 * spark.sparkContext.defaultParallelism, files
+
+
 def test_bucket_scheme_mismatch_refused(spark, tmp_path):
     """Resuming the same output_dir with a different --buckets would mix
     two hash schemes (duplicates from stale partitions + missing rows from
