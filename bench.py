@@ -169,7 +169,7 @@ def worker(cpus: int, parquet: str) -> None:
     # sorted sink warms exactly the timed job's operator set — mapInPandas
     # codegen, Python worker fork, Arrow writer init, local sort — with no
     # exchange.  Moving this first-run cost out of the timed window is
-    # worth ~1.0 s at local[32] (exp_shape.py: mean 6.46 s -> 5.42 s,
+    # worth ~1.0 s at local[32] (SCALE.md §7: mean 6.46 s -> 5.42 s,
     # interleaved best-of-3).
     _force(
         extract_transcripts(

@@ -86,7 +86,6 @@ class CheckpointedExtraction:
         salt: int = 8,
         run_id: str | None = None,
         table_format: str = "parquet",
-        spans: bool = False,
     ):
         if table_format not in ("parquet", "iceberg"):
             raise ValueError(f"unknown table_format {table_format!r}")
@@ -96,7 +95,6 @@ class CheckpointedExtraction:
         self.buckets = buckets
         self.chunk_buckets = chunk_buckets
         self.salt = salt
-        self.spans = spans
         self.run_id = run_id or f"run_{int(time.time() * 1000):x}"
         self.table_format = table_format
         if table_format == "iceberg":
@@ -186,40 +184,44 @@ class CheckpointedExtraction:
         lin = self.lineage()
         if lin is None:
             return set()
+        # one read of the lineage feeds both resume guards and the bucket
+        # set; columns that legacy lineage lacks read as null
+        rows = (
+            lin.select(
+                "bucket",
+                *(
+                    F.col(c) if c in lin.columns else F.lit(None).alias(c)
+                    for c in ("buckets", "spans")
+                ),
+            )
+            .distinct()
+            .collect()
+        )
         # Resume guard: the bucketing scheme is part of the lineage contract.
         # Resuming the same output with a different ``buckets`` would mix two
         # hash schemes — stale data partitions from the old scheme survive
         # dynamic overwrite (duplicates) while buckets "complete" under the
         # old numbering cover different key sets under the new one (missing
         # rows).  Each lineage row records its scheme; refuse a mismatch.
-        if "buckets" in lin.columns:
-            schemes = {r.buckets for r in lin.select("buckets").distinct().collect()}
-            if schemes - {self.buckets}:
-                raise ValueError(
-                    f"resume bucket-scheme mismatch: lineage at {self.lineage_dir} "
-                    f"was written with buckets={sorted(schemes)} but this run uses "
-                    f"buckets={self.buckets}; rerun with the original setting or "
-                    "use a fresh output_dir"
-                )
-        # same guard for the output schema: resuming a spans=True output
-        # with spans=False (or vice versa) would mix data files with and
-        # without the spans_json column under one data table.  Lineage
-        # written before the 'spans' column existed is legacy data that was
-        # always written WITH spans_json — treat it as spans=True so the
-        # guard still fires instead of silently resuming under the current
-        # spans=False default.
-        if "spans" in lin.columns:
-            modes = {bool(r.spans) for r in lin.select("spans").distinct().collect()}
-        else:
-            modes = {True}
-        if modes - {self.spans}:
+        schemes = {r.buckets for r in rows if r.buckets is not None}
+        if schemes - {self.buckets}:
+            raise ValueError(
+                f"resume bucket-scheme mismatch: lineage at {self.lineage_dir} "
+                f"was written with buckets={sorted(schemes)} but this run uses "
+                f"buckets={self.buckets}; rerun with the original setting or "
+                "use a fresh output_dir"
+            )
+        # Same guard for the output schema: lineage that says spans=true, or
+        # predates the spans column, belongs to a legacy output whose data
+        # files carry spans_json; resuming it would mix two schemas under
+        # one data table.
+        if any(r.spans is not False for r in rows):
             raise ValueError(
                 f"resume span-mode mismatch: lineage at {self.lineage_dir} was "
-                f"written with spans={sorted(modes)} but this run uses "
-                f"spans={self.spans}; rerun with the original setting or use a "
-                "fresh output_dir"
+                "written by a legacy run with inline spans_json; use a fresh "
+                "output_dir"
             )
-        return {r.bucket for r in lin.select("bucket").distinct().collect()}
+        return {r.bucket for r in rows}
 
     def pending_buckets(self) -> list[int]:
         done = self.completed_buckets()
@@ -259,7 +261,6 @@ class CheckpointedExtraction:
                     subset.drop("bucket"),
                     salt=self.salt,
                     reassemble=False,
-                    spans=self.spans,
                 )
                 # persisted so the data write and the lineage aggregation
                 # share ONE kernel pass (not two)
@@ -284,7 +285,9 @@ class CheckpointedExtraction:
                         ],
                     )
                     .withColumn("buckets", F.lit(self.buckets))
-                    .withColumn("spans", F.lit(self.spans))
+                    # constant, but kept: the lineage table is durable and
+                    # an Iceberg append() needs a stable schema
+                    .withColumn("spans", F.lit(False))
                     .withColumn("run_id", F.lit(self.run_id))
                     .withColumn("chunk_id", F.lit(chunk_id))
                     .withColumn("committed_at", F.current_timestamp())

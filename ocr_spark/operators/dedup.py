@@ -575,8 +575,7 @@ def connected_components(edges, rounds: int | None = None,
     return labels.select("doc_id", F.col("label").alias("cluster_rep"))
 
 
-def connected_components_star(edges, max_rounds: int = 64,
-                              convergence: str = "exact"):
+def connected_components_star(edges, max_rounds: int = 64):
     """Connected components by alternating large-star / small-star edge
     rewrites (Kiveris et al. 2014, "Connected Components in MapReduce and
     Beyond") — the O(log^2 n)-round production form for graphs whose
@@ -601,25 +600,7 @@ def connected_components_star(edges, max_rounds: int = 64,
     set is a union of stars rooted at each component's minimum, so labels
     read off as min over neighbors.  ``localCheckpoint`` per half-round
     truncates lineage (the iterative-DataFrame plan-doubling trap).
-
-    ``convergence`` picks the per-round stability test on the star-shaped
-    (distinct) edge relation:
-
-    - ``"exact"`` (default): two-sided ``exceptAll`` set difference —
-      deterministic, but 2 extra full-relation shuffles per round;
-    - ``"checksum"``: compare (row count, order-insensitive sum of
-      32-bit ``hash(u, v)`` values in a 64-bit accumulator — 32-bit terms
-      so the sum cannot overflow under ANSI semantics below ~2^32 edges)
-      — one map-side-combined aggregate per relation, no extra shuffle of
-      the edges themselves.  A false "converged" needs a changed edge set
-      whose count AND hash sum both collide in the same round (≲2^-32 per
-      round) and WOULD stop on a non-star edge set, i.e. this mode trades
-      a one-in-four-billion-per-round mislabel risk for removing 2 of the
-      ~6 per-round shuffles; the scale mode for 10^9-edge graphs, while
-      the oracle-checked query path keeps the exact mode.
     """
-    if convergence not in ("exact", "checksum"):
-        raise ValueError(f"convergence must be exact|checksum, got {convergence!r}")
     raw = edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     # node set from the RAW relation: a self-loop row contributes its node
     # (as a singleton component) even though the loop edge itself is dropped
@@ -660,25 +641,12 @@ def connected_components_star(edges, max_rounds: int = 64,
             .distinct()
         )
 
-    def _edge_digest(d):
-        r = d.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.hash("u", "v").cast("bigint")).alias("h"),
-        ).collect()[0]
-        return r["n"], r["h"]
-
-    digest = _edge_digest(e) if convergence == "checksum" else None
     for _ in range(max_rounds):
         e_next = _small_star(_large_star(e).localCheckpoint()).localCheckpoint()
-        if convergence == "checksum":
-            next_digest = _edge_digest(e_next)
-            changed = next_digest != digest
-            digest = next_digest
-        else:
-            # set equality via two-sided difference on the distinct relations
-            changed = (
-                e_next.exceptAll(e).count() + e.exceptAll(e_next).count()
-            ) > 0
+        # set equality via two-sided difference on the distinct relations
+        changed = (
+            e_next.exceptAll(e).count() + e.exceptAll(e_next).count()
+        ) > 0
         e = e_next
         if not changed:
             break

@@ -152,7 +152,7 @@ def mm_feature_extract(spark, sf_dir):
     a = assets(spark, sf_dir).select(
         "asset_id", "kind", "width", "height", "sample_rate", "payload"
     )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = spark.sparkContext.defaultParallelism
     return a.repartition(n_part, "asset_id").mapInPandas(_feature_map, FEATURE_SCHEMA)
 
 

@@ -98,7 +98,7 @@ def extract_status_counts(spark, sf_dir):
 
 # the pinned constants — after an intentional kernel/corpus change,
 # re-derive with `extract_status_counts(spark, None).toPandas()` and paste
-# the new values (tests/test_parity.py + the e2e run_extract flow pin the
+# the new values (tests/test_parity.py + the e2e jobs/extract_job.py run pin the
 # same kernel, so an unintentional drift fails there too)
 EXTRACT_STATUS_SQL = """
 SELECT * FROM (VALUES

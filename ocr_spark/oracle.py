@@ -77,7 +77,8 @@ def oracle_enrich(extracted: pd.DataFrame, lexicon: list[str]) -> pd.DataFrame:
     cache: dict[str, str | None] = {}
     rows = []
     for r in extracted.itertuples(index=False):
-        toks = [t for t in re.split(r"\s+", r.extracted_text or "") if t]
+        text = r.extracted_text if isinstance(r.extracted_text, str) else ""
+        toks = [t for t in re.split(r"\s+", text) if t]
         if not toks:
             rows.append((r.conv_id, r.turn_idx, r.status, "", 0, "und"))
             continue

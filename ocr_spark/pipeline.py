@@ -33,6 +33,12 @@ Design notes (100 TB posture):
     derivable at read time within a bucket.
 - only (conv_id, turn_idx, role, text, tool) cross the JVM->Python Arrow
   boundary; ts and any extra columns are joined back by key only if needed.
+- one output schema (``OUTPUT_SCHEMA``) for every entry point — batch,
+  checkpointed and streaming.  It carries no inline ``spans_json``: the
+  span relation is a pure function of ``extracted_text`` (canonical
+  separators), derived losslessly JVM-side by
+  ``ocr_spark.operators.transcripts.derive_spans`` instead of paying ~45%
+  of the output bytes through the Arrow hop and the sink (SCALE.md §7).
 - the whole cleanup chain is ONE mapInPandas stage: each extra UDF hop would
   pay Arrow serialization twice (SURVEY §4 "pipelining").
 """
@@ -56,7 +62,6 @@ OUTPUT_SCHEMA = StructType(
         StructField("conv_id", StringType()),
         StructField("turn_idx", IntegerType()),
         StructField("extracted_text", StringType()),
-        StructField("spans_json", StringType()),
         StructField("fields_json", StringType()),
         StructField("n_blocks", LongType()),
         StructField("n_lines", LongType()),
@@ -66,24 +71,10 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# at-scale output: spans_json omitted — the span relation is a pure
-# function of extracted_text (canonical separators) and is derived
-# losslessly JVM-side by ocr_spark.operators.transcripts.derive_spans,
-# instead of paying ~45% of the output bytes through the Arrow hop and
-# the reassembly shuffle (measured; see SCALE.md §7)
-OUTPUT_SCHEMA_NO_SPANS = StructType(
-    [f for f in OUTPUT_SCHEMA.fields if f.name != "spans_json"]
-)
-
 INPUT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool"]
 
 
 def _extract_map(batches):
-    for pdf in batches:
-        yield extract_batch(pdf)
-
-
-def _extract_map_no_spans(batches):
     for pdf in batches:
         yield extract_batch(pdf, with_spans=False)
 
@@ -126,7 +117,6 @@ def extract_transcripts(
     salt: int | str = "auto",
     partitions: int | None = None,
     reassemble: bool | str = True,
-    spans: bool = False,
 ) -> DataFrame:
     """Run the extraction kernel over a transcripts DataFrame.
 
@@ -163,11 +153,9 @@ def extract_transcripts(
         with NO exchange, no extra columns.
       - ``False``: raw kernel output order.
 
-    ``spans=False`` (default, the at-scale posture) omits the inline
-    ``spans_json`` column; derive the identical span relation from
-    ``extracted_text`` with ``transcripts.derive_spans`` when needed.
-    ``spans=True`` keeps the inline JSON for full-fidelity artifacts
-    (the byte-parity suite, scripts/run_extract.py e2e output).
+    The output has no ``spans_json`` column (``OUTPUT_SCHEMA``); derive
+    the span relation from ``extracted_text`` with
+    ``transcripts.derive_spans``.
     """
     spark = df.sparkSession
     n_part = partitions or spark.sparkContext.defaultParallelism
@@ -199,10 +187,7 @@ def extract_transcripts(
             F.hash(F.col("conv_id")),
             F.pmod(F.hash(F.col("turn_idx")), F.lit(eff_salt)),
         )
-    if spans:
-        extracted = staged.mapInPandas(_extract_map, OUTPUT_SCHEMA)
-    else:
-        extracted = staged.mapInPandas(_extract_map_no_spans, OUTPUT_SCHEMA_NO_SPANS)
+    extracted = staged.mapInPandas(_extract_map, OUTPUT_SCHEMA)
 
     if reassemble == "sorted":
         return extracted.sortWithinPartitions("conv_id", "turn_idx")

@@ -62,9 +62,10 @@ def stream_extract(
     available_now: bool = True,
 ):
     """readStream -> `extract_transcripts` (salted repartition ->
-    mapInPandas kernel) -> parquet sink.  Returns the started
-    StreamingQuery; callers awaitTermination().  ``partitions`` sizes the
-    repartition exactly as in `extract_transcripts`.
+    mapInPandas kernel) -> parquet sink, with the batch output's columns
+    (``pipeline.OUTPUT_SCHEMA``).  Returns the started StreamingQuery;
+    callers awaitTermination().  ``partitions`` sizes the repartition
+    exactly as in `extract_transcripts`.
 
     No window reassembly inside the stream (a global row_number window is
     not streamable); readers apply the stable-order window at query time,
@@ -75,7 +76,6 @@ def stream_extract(
         salt=DEFAULT_SALT,
         partitions=partitions,
         reassemble=False,
-        spans=True,
     )
     writer = (
         extracted.writeStream.format("parquet")

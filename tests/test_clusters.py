@@ -150,33 +150,6 @@ def test_star_on_minhash_pair_graph(spark):
     assert got == expected
 
 
-def test_star_checksum_convergence_matches_exact(spark):
-    # the scale-mode stability test (count + order-insensitive hash sum,
-    # no per-round exceptAll shuffles) converges to the same answer as
-    # the exact set-difference mode on a general graph and a long chain
-    for edges in (
-        spark.createDataFrame(
-            [(10, 11), (11, 12), (12, 10), (20, 21), (5, 40), (40, 41)],
-            "doc_a long, doc_b long",
-        ),
-        _chain_edges(spark, 20),
-    ):
-        exact = sorted(
-            map(tuple, dedup.connected_components_star(edges).collect())
-        )
-        checksum = sorted(
-            map(
-                tuple,
-                dedup.connected_components_star(
-                    edges, convergence="checksum"
-                ).collect(),
-            )
-        )
-        assert exact == checksum
-    with pytest.raises(ValueError, match="exact|checksum"):
-        dedup.connected_components_star(edges, convergence="bogus")
-
-
 def test_verify_converged_post_check(spark):
     # the cheap one-extra-round guard: raises on a diameter > rounds
     # component, passes (and returns the exact answer) when rounds suffice

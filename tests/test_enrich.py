@@ -105,6 +105,19 @@ def test_oracle_mirror_matches_spark_enrichment(spark):
         assert list(got[col]) == list(mirror[col]), col
 
 
+def test_oracle_mirror_nan_text_is_tokenless():
+    """A null extracted_text reaches the mirror as pandas NaN (truthy, not
+    a str); it must read as a token-less turn instead of raising."""
+    from ocr_spark.oracle import oracle_enrich
+
+    extracted = pd.DataFrame(
+        {"conv_id": ["c0"], "turn_idx": [0], "status": ["empty"],
+         "extracted_text": [float("nan")]}
+    )
+    r = oracle_enrich(extracted, LEXICON).iloc[0]
+    assert (r.corrected_text, r.n_corrections, r.language) == ("", 0, "und")
+
+
 def test_enriched_counts_pin_derives_from_oracle_mirror(spark):
     """EXTRACT_ENRICHED_SQL's pinned constants are now DERIVED ground
     truth, not an implementation capture (round-4 ADVICE): the pandas

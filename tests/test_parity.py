@@ -6,38 +6,58 @@ equality under stable turn ordering; verify with `python -m pytest -x -q`".
 The Spark side runs the full scale harness (salted repartition ->
 mapInPandas -> window reassembly) at parallelism 4 on deliberately shuffled
 input; the oracle runs the same kernel row-at-a-time single-threaded.
-Equality is byte-for-byte on extracted_text, spans_json and fields_json.
+Equality is byte-for-byte on extracted_text and fields_json; span parity
+is the span relation derived from the Spark output (``derive_spans``)
+equal to the oracle kernel's inline spans_json.
 """
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 
 from ocr_spark import synth
+from ocr_spark.operators.transcripts import derive_spans
 from ocr_spark.oracle import oracle_extract
 from ocr_spark.pipeline import extract_transcripts, failure_spans, partition_metrics
 
 N_CONVS = 60  # ~10^3 turns with the Zipf tail
 
 
-def _spark_result(spark, pdf):
-    sdf = spark.createDataFrame(pdf)
-    out = extract_transcripts(sdf, salt=4, partitions=8, spans=True)
-    res = out.orderBy("conv_id", "turn_idx").toPandas()
-    return res
+def _kernel_span_relation(want):
+    """The kernel's inline spans_json (oracle side) as a set of
+    (conv_id, turn_idx, block_id, line_id, pos, token) rows."""
+    rel = set()
+    for _, row in want.iterrows():
+        for rec in json.loads(row["spans_json"]):
+            # json.loads already decoded the kernel's escaping: rec["t"]
+            # items are the raw tokens
+            for p, tok in enumerate(rec["t"]):
+                rel.add((row["conv_id"], row["turn_idx"], rec["b"], rec["l"], p, tok))
+    return rel
+
+
+def _derived_span_relation(out):
+    return {
+        (r.conv_id, r.turn_idx, r.block_id, r.line_id, r.pos, r.token)
+        for r in derive_spans(out).collect()
+    }
 
 
 def test_spark_matches_oracle_byte_for_byte(spark):
     pdf = synth.generate_local(N_CONVS, shuffled=True)
     want = oracle_extract(pdf)
-    got = _spark_result(spark, pdf)
+    out = extract_transcripts(spark.createDataFrame(pdf), salt=4, partitions=8)
+    assert "spans_json" not in out.columns
+    got = out.orderBy("conv_id", "turn_idx").toPandas()
 
     assert len(got) == len(want)
     key_got = list(zip(got["conv_id"], got["turn_idx"]))
     key_want = list(zip(want["conv_id"], want["turn_idx"]))
     assert key_got == key_want  # stable (conv_id, turn_idx) ordering
 
-    for col in ("extracted_text", "spans_json", "fields_json", "status"):
+    for col in ("extracted_text", "fields_json", "status"):
         mism = (got[col].to_numpy() != want[col].to_numpy()).nonzero()[0]
         assert len(mism) == 0, (
             f"{col}: {len(mism)} mismatches, first at "
@@ -48,53 +68,30 @@ def test_spark_matches_oracle_byte_for_byte(spark):
     for col in ("n_blocks", "n_lines", "n_tokens", "n_fields"):
         assert (got[col].to_numpy() == want[col].to_numpy()).all(), col
 
+    # span parity: the JVM-side derivation over the Spark output equals the
+    # oracle kernel's inline spans_json relation
+    assert _derived_span_relation(out) == _kernel_span_relation(want)
+
 
 def test_derived_spans_match_kernel(spark):
     """The JVM-side span derivation (split/posexplode over extracted_text,
-    the at-scale spans path) reproduces the Python kernel's span relation
-    exactly, and the spans=False pipeline's count columns equal the
-    spans=True kernel's."""
-    import json
-
-    from ocr_spark.operators.transcripts import derive_spans
-
+    the only spans path) reproduces the Python kernel's span relation
+    exactly, and the pipeline's count columns equal the kernel's."""
     pdf = synth.generate_local(25, shuffled=True)
     want = oracle_extract(pdf)  # kernel with inline spans
 
-    out = extract_transcripts(
-        spark.createDataFrame(pdf), salt=4, partitions=8, spans=False
-    )
-    assert "spans_json" not in out.columns
+    out = extract_transcripts(spark.createDataFrame(pdf), salt=4, partitions=8)
     got_counts = out.orderBy("conv_id", "turn_idx").toPandas()
     for col in ("n_blocks", "n_lines", "n_tokens"):
         assert (got_counts[col].to_numpy() == want[col].to_numpy()).all(), col
 
-    derived = {
-        (r.conv_id, r.turn_idx, r.block_id, r.line_id, r.pos, r.token)
-        for r in derive_spans(out).collect()
-    }
-    kernel_rel = set()
-    for _, row in want.iterrows():
-        for rec in json.loads(row["spans_json"]):
-            # json.loads already decoded the kernel's escaping: rec["t"]
-            # items are the raw tokens
-            for p, tok in enumerate(rec["t"]):
-                kernel_rel.add(
-                    (row["conv_id"], row["turn_idx"], rec["b"], rec["l"], p, tok)
-                )
-    assert derived == kernel_rel
+    assert _derived_span_relation(out) == _kernel_span_relation(want)
 
 
 def test_derived_spans_adversarial_tokens(spark):
     """Tokens containing JSON-special characters (quote, backslash,
     unicode) — the kernel escapes them inside spans_json while
     derive_spans splits raw text; both must yield the same raw tokens."""
-    import json
-
-    import pandas as pd
-
-    from ocr_spark.operators.transcripts import derive_spans
-
     texts = [
         'he said "hi there" back',
         "wind\\up path\\\\double über naïve",
@@ -109,21 +106,9 @@ def test_derived_spans_adversarial_tokens(spark):
             "tool": [""] * len(texts),
         }
     )
-    out = extract_transcripts(
-        spark.createDataFrame(pdf), salt=2, partitions=2, spans=False
-    )
-    derived = {
-        (r.conv_id, r.block_id, r.line_id, r.pos, r.token)
-        for r in derive_spans(out).collect()
-    }
-    kernel_rel = set()
-    for _, row in oracle_extract(pdf).iterrows():
-        for rec in json.loads(row["spans_json"]):
-            # json.loads already decoded the kernel's escaping: rec["t"]
-            # items are the raw tokens
-            for p, tok in enumerate(rec["t"]):
-                kernel_rel.add((row["conv_id"], rec["b"], rec["l"], p, tok))
-    assert derived == kernel_rel
+    out = extract_transcripts(spark.createDataFrame(pdf), salt=2, partitions=2)
+    derived = _derived_span_relation(out)
+    assert derived == _kernel_span_relation(oracle_extract(pdf))
     assert derived  # non-degenerate: the adversarial tokens survived cleanup
 
 

@@ -135,28 +135,54 @@ def test_bucket_scheme_mismatch_refused(spark, tmp_path):
 
 
 def test_span_mode_mismatch_refused(spark, tmp_path):
-    """Resuming a spans=False output with spans=True (or vice versa) would
-    mix data files with and without the spans_json column under one data
-    dir; the lineage records the mode and a mismatched resume must refuse."""
+    """Outputs written before spans_json left the schema carry it in their
+    data files; their lineage says spans=true, or predates the spans
+    column.  Resuming one would mix two data schemas, so it must refuse,
+    while a fresh output resumes fine and has no spans_json."""
     import pytest
 
     pdf = synth.generate_local(6, shuffled=True)
     sdf = spark.createDataFrame(pdf)
-    out = str(tmp_path / "ckpt_spans")
-    CheckpointedExtraction(
-        spark, sdf, out, buckets=8, chunk_buckets=4, salt=2, spans=False
-    ).run(max_chunks=1)
-    bad = CheckpointedExtraction(
-        spark, sdf, out, buckets=8, chunk_buckets=4, salt=2, spans=True
+    legacy = {
+        "spans_true": ([(0, 8, True)], "bucket INT, buckets INT, spans BOOLEAN"),
+        "no_spans_column": ([(0, 8)], "bucket INT, buckets INT"),
+    }
+    for name, (rows, schema) in legacy.items():
+        out = str(tmp_path / name)
+        spark.createDataFrame(rows, schema).write.parquet(f"{out}/_lineage")
+        bad = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2)
+        with pytest.raises(ValueError, match="span-mode mismatch"):
+            bad.run()
+
+    out = str(tmp_path / "fresh")
+    CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2).run(
+        max_chunks=1
     )
-    with pytest.raises(ValueError, match="span-mode mismatch"):
-        bad.run()
-    ok = CheckpointedExtraction(
-        spark, sdf, out, buckets=8, chunk_buckets=4, salt=2, spans=False
-    )
+    ok = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2)
     ok.run()
     assert ok.validate(deep=True)["complete"]
     assert "spans_json" not in ok.result().columns
+
+
+def test_job_script_runs_without_pythonpath(tmp_path):
+    """`python jobs/extract_job.py --synthetic N` from any directory with no
+    PYTHONPATH: Spark's Python workers must still import ocr_spark."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [
+            sys.executable, os.path.join(root, "jobs", "extract_job.py"),
+            "--synthetic", "3", "--buckets", "2", "--chunk-buckets", "2",
+            "--output", str(tmp_path / "out"),
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "'complete': True" in proc.stdout
 
 
 def test_iceberg_backend_detection(spark, tmp_path):
