@@ -111,12 +111,9 @@ def main(argv: list[str] | None = None) -> int:
         salt=args.salt,
         table_format=args.table_format,
     )
-    pending_before = len(job.pending_buckets())
     n = job.run(max_chunks=args.max_chunks)
     audit = job.validate(deep=args.deep_audit)
-    print(
-        f"committed {n} chunks ({pending_before} buckets were pending); audit: {audit}"
-    )
+    print(f"committed {n} chunks; audit: {audit}")
     spark.stop()
     return 0 if (audit["complete"] or args.max_chunks is not None) else 1
 

@@ -16,12 +16,16 @@ Buckets are processed in chunks; after each chunk the job commits
 2. one lineage row per bucket to ``<output>/_lineage`` — (bucket, conv_id
    range, turn range, status counters, token/field totals, run_id,
    chunk_id) — the generalized flags model of the reference
-   (``NFT_OCR.py:1470-1478,1510`` per-file status lists).
+   (``NFT_OCR.py:1470-1478,1510`` per-file status lists).  The rows are
+   built in the JVM (no ``createDataFrame`` of a Python list, which would
+   run a PythonRDD through a second worker pool) and written by one task
+   as one file per chunk.
 
 On restart, completed buckets are read from the lineage table and skipped
 (the anti-join resume of SURVEY §2.10; the reference's precedent is its
 memoized skip-seen-keys loop, ``Ingredients_OCR.py:222-224``,
-``Google_OCR_API.py:74-75``).
+``Google_OCR_API.py:74-75``).  A job reads the lineage once before its
+first chunk and once in ``validate()``.
 
 On a real deployment the same structure maps 1:1 onto Iceberg: the chunk
 commit becomes an Iceberg snapshot (atomic MERGE/overwrite of the bucket
@@ -41,13 +45,50 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
-from ocr_spark.pipeline import extract_transcripts
+from ocr_spark.pipeline import extract_transcripts, metrics_agg
 
 LINEAGE_SUBDIR = "_lineage"
 DATA_SUBDIR = "data"
+
+_COUNTS = (
+    "turn_count", "ok_count", "empty_count", "rejected_count", "failed_count",
+    "token_count", "field_count",
+)
+
+# what ``run`` appends per bucket: ``metrics_agg`` over the bucket, then the
+# run bookkeeping.  Lineage is read with this schema, so columns that
+# legacy lineage lacks read as null and an unreadable file raises.
+LINEAGE_SCHEMA = StructType(
+    [
+        StructField("bucket", IntegerType()),
+        StructField("conv_id_min", StringType()),
+        StructField("conv_id_max", StringType()),
+        StructField("turn_idx_min", IntegerType()),
+        StructField("turn_idx_max", IntegerType()),
+        *(StructField(c, LongType()) for c in _COUNTS),
+        StructField("buckets", IntegerType()),
+        StructField("spans", BooleanType()),
+        StructField("run_id", StringType()),
+        StructField("chunk_id", IntegerType()),
+        StructField("committed_at", TimestampType()),
+    ]
+)
+
+# the only read errors that mean "nothing committed yet"
+_NO_LINEAGE = {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"}
 
 
 def _bucketed(df: DataFrame, buckets: int) -> DataFrame:
@@ -146,6 +187,20 @@ class CheckpointedExtraction:
             return self.spark.read.table(target)
         return self.spark.read.parquet(target)
 
+    def _read_lineage(self) -> DataFrame:
+        if self.table_format == "iceberg":
+            lin = self.spark.read.table(self.lineage_dir)
+            return lin.select(
+                *(
+                    F.col(f.name) if f.name in lin.columns
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in LINEAGE_SCHEMA
+                )
+            )
+        # a declared schema also reads a directory with no data files
+        # (an empty frame, where inference would fail)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
+
     def _commit_data(self, out: DataFrame) -> None:
         """Idempotent per-bucket commit: only the bucket partitions present
         in ``out`` are replaced (Iceberg: an overwrite-by-partition
@@ -175,26 +230,25 @@ class CheckpointedExtraction:
     # -- resume bookkeeping -------------------------------------------------
 
     def lineage(self) -> DataFrame | None:
+        """The lineage table, or None before the first commit.  Any other
+        read failure raises: treating an unreadable lineage as a first run
+        would recompute every bucket and skip the resume guards."""
         try:
-            return self._read(self.lineage_dir)
-        except Exception:
-            return None  # first run: no lineage yet
+            return self._read_lineage()
+        except AnalysisException as exc:
+            if exc.getCondition() in _NO_LINEAGE:
+                return None
+            raise
 
-    def completed_buckets(self) -> set[int]:
+    def _lineage_turns(self) -> dict[int, int]:
+        """Completed bucket -> its lineage turn count, from one read and one
+        collect of the lineage, after both resume guards."""
         lin = self.lineage()
         if lin is None:
-            return set()
-        # one read of the lineage feeds both resume guards and the bucket
-        # set; columns that legacy lineage lacks read as null
+            return {}
         rows = (
-            lin.select(
-                "bucket",
-                *(
-                    F.col(c) if c in lin.columns else F.lit(None).alias(c)
-                    for c in ("buckets", "spans")
-                ),
-            )
-            .distinct()
+            lin.groupBy("bucket", "buckets", "spans")
+            .agg(F.max("turn_count").alias("turn_count"))
             .collect()
         )
         # Resume guard: the bucketing scheme is part of the lineage contract.
@@ -221,7 +275,13 @@ class CheckpointedExtraction:
                 "written by a legacy run with inline spans_json; use a fresh "
                 "output_dir"
             )
-        return {r.bucket for r in rows}
+        turns: dict[int, int] = {}
+        for r in rows:
+            turns[r.bucket] = max(turns.get(r.bucket, 0), r.turn_count or 0)
+        return turns
+
+    def completed_buckets(self) -> set[int]:
+        return set(self._lineage_turns())
 
     def pending_buckets(self) -> list[int]:
         done = self.completed_buckets()
@@ -235,8 +295,6 @@ class CheckpointedExtraction:
         ``max_chunks`` bounds work for tests (simulating a crash between
         chunk commits); production passes None and runs to completion.
         """
-        from ocr_spark.pipeline import metrics_agg
-
         pending = self.pending_buckets()
         chunks = [
             pending[i : i + self.chunk_buckets]
@@ -269,21 +327,15 @@ class CheckpointedExtraction:
                 # lineage left-joined with the chunk's bucket list so
                 # buckets with zero input rows still get a (zeroed) lineage
                 # row — without it they would never be marked complete and
-                # every resume would rerun them forever.
-                chunk_df = self.spark.createDataFrame(
-                    [(int(b),) for b in chunk], "bucket INT"
+                # every resume would rerun them forever.  The list is a
+                # one-partition JVM relation with the aggregate broadcast
+                # onto it: one Python-free task writes one lineage file.
+                chunk_df = self.spark.range(0, 1, 1, 1).select(
+                    F.explode(F.array(*(F.lit(int(b)) for b in chunk))).alias("bucket")
                 )
-                agg = metrics_agg(out, "bucket")
                 lineage_rows = (
-                    chunk_df.join(agg, "bucket", "left")
-                    .fillna(
-                        0,
-                        subset=[
-                            "turn_count", "ok_count", "empty_count",
-                            "rejected_count", "failed_count",
-                            "token_count", "field_count",
-                        ],
-                    )
+                    chunk_df.join(F.broadcast(metrics_agg(out, "bucket")), "bucket", "left")
+                    .fillna(0, subset=list(_COUNTS))
                     .withColumn("buckets", F.lit(self.buckets))
                     # constant, but kept: the lineage table is durable and
                     # an Iceberg append() needs a stable schema
@@ -329,23 +381,16 @@ class CheckpointedExtraction:
         reports complete).  Append-while-resuming inputs must either run
         ``deep=True`` on the final chunk or route new data through a new
         output_dir / run."""
-        lin = self.lineage()
-        done = self.completed_buckets()
-        n_lineage = (
-            lin.groupBy("bucket").agg(F.max("turn_count").alias("tc")).agg(
-                F.sum("tc")
-            ).collect()[0][0]
-            if lin is not None
-            else 0
-        )
+        turns = self._lineage_turns()
+        n_lineage = sum(turns.values())
         out = {
             "buckets_total": self.buckets,
-            "buckets_done": len(done),
-            "lineage_turns": int(n_lineage or 0),
-            "complete": len(done) == self.buckets,
+            "buckets_done": len(turns),
+            "lineage_turns": n_lineage,
+            "complete": len(turns) == self.buckets,
         }
         if deep:
             n_input = self.input_df.count()
             out["input_turns"] = n_input
-            out["complete"] = out["complete"] and int(n_lineage or 0) == n_input
+            out["complete"] = out["complete"] and n_lineage == n_input
         return out

@@ -19,9 +19,11 @@ calls it per Arrow batch inside ``mapInPandas``).  Stages:
 6. field extraction + conflict/absence   — kernel.fields
 7. token spans + counters                — vectorized explode pipeline.
 
-Output columns (stable schema, see ``OUTPUT_SCHEMA`` in pipeline.py):
-    conv_id, turn_idx, extracted_text, spans_json, fields_json,
+Output columns (``OUTPUT_SCHEMA`` in pipeline.py):
+    conv_id, turn_idx, extracted_text, fields_json,
     n_blocks, n_lines, n_tokens, n_fields, status
+``with_spans=True`` (the oracle side) adds ``spans_json`` after
+``extracted_text``; the Spark pipeline derives spans JVM-side instead.
 """
 
 from __future__ import annotations

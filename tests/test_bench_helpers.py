@@ -96,3 +96,31 @@ def test_history_summary_filters_cutoff_and_contamination(tmp_path):
 
 def test_history_summary_missing_file_returns_none(tmp_path):
     assert bench._history_summary(str(tmp_path / "nope.md")) is None
+
+
+def test_scaling_levels_fit_the_machine(monkeypatch):
+    """The scaling pairs use levels the machine has: 1->4 on 4 cores,
+    8->32 plus 2->8 on 32."""
+    monkeypatch.delenv("SPARK_GRAFT_SCALE_N", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SCALE_N2", raising=False)
+    assert bench._levels(4) == (1, None)
+    assert bench._levels(8) == (2, None)
+    assert bench._levels(32) == (8, 2)
+    assert bench._levels(2) == (None, None)
+    # an override that does not fit is skipped; one equal to the
+    # secondary runs once
+    monkeypatch.setenv("SPARK_GRAFT_SCALE_N", "2")
+    assert bench._levels(4) == (None, None)
+    assert bench._levels(32) == (2, None)
+
+
+def test_pin_cores_stays_inside_the_machine():
+    import pytest
+
+    assert bench._pin_cores(1, 4) == range(3, 4)
+    assert bench._pin_cores(4, 4) == range(0, 4)
+    assert bench._pin_cores(8, 32) == range(24, 32)
+    assert bench._pin_cores(32, 32) == range(0, 32)
+    for k in (0, 8):
+        with pytest.raises(ValueError):
+            bench._pin_cores(k, 4)

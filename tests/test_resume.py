@@ -4,11 +4,25 @@ missing turns)."""
 
 from __future__ import annotations
 
+import pytest
+
 from ocr_spark import synth
-from ocr_spark.checkpoint import CheckpointedExtraction
-from ocr_spark.pipeline import extract_transcripts
+from ocr_spark.checkpoint import LINEAGE_SCHEMA, CheckpointedExtraction
+from ocr_spark.pipeline import extract_transcripts, metrics_agg
 
 N_CONVS = 40
+
+
+@pytest.fixture(scope="module")
+def committed(spark, tmp_path_factory):
+    """One uninterrupted run: 8 buckets in 2 chunks, some buckets empty."""
+    pdf = synth.generate_local(6, shuffled=True)
+    out = str(tmp_path_factory.mktemp("ckpt_commit") / "out")
+    job = CheckpointedExtraction(
+        spark, spark.createDataFrame(pdf), out, buckets=8, chunk_buckets=4, salt=2
+    )
+    assert job.run() == 2
+    return job
 
 
 def _keys(df):
@@ -112,13 +126,91 @@ def test_chunk_writes_at_most_one_file_per_bucket_per_core(spark, tmp_path):
     assert max(files.values()) <= 4 * spark.sparkContext.defaultParallelism, files
 
 
+def test_chunk_commits_one_lineage_file(committed):
+    """Each chunk's lineage is written by one task: one file per chunk."""
+    import pathlib
+
+    import pyarrow.parquet as pq
+
+    files = sorted(pathlib.Path(committed.lineage_dir).glob("*.parquet"))
+    chunk_ids = [set(pq.read_table(f).column("chunk_id").to_pylist()) for f in files]
+    assert sorted(map(sorted, chunk_ids)) == [[0], [1]], chunk_ids
+
+
+def test_lineage_rows_match_reference(spark, committed):
+    """Lineage columns, types, order and values (``committed_at`` aside)
+    equal a per-bucket ``metrics_agg`` of the committed data left-joined
+    onto the chunk's bucket list with zeroed counts, and match the schema
+    the lineage is read with."""
+    from pyspark.sql import functions as F
+
+    counts = [
+        "turn_count", "ok_count", "empty_count", "rejected_count",
+        "failed_count", "token_count", "field_count",
+    ]
+    data = spark.read.parquet(committed.data_dir)
+    ref = (
+        spark.createDataFrame([(b,) for b in range(8)], "bucket INT")
+        .join(metrics_agg(data, "bucket"), "bucket", "left")
+        .fillna(0, subset=counts)
+        .withColumn("buckets", F.lit(8))
+        .withColumn("spans", F.lit(False))
+        .withColumn("run_id", F.lit(committed.run_id))
+        .withColumn("chunk_id", F.expr("bucket div 4").cast("int"))
+        .withColumn("committed_at", F.current_timestamp())
+    )
+    lin = spark.read.parquet(committed.lineage_dir)
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in ref.schema
+    ]
+    assert lin.schema == LINEAGE_SCHEMA
+    assert data.select("bucket").distinct().count() < 8  # empty buckets zeroed
+    assert sorted(lin.drop("committed_at").collect()) == sorted(
+        ref.drop("committed_at").collect()
+    )
+
+
+def test_validate_reads_lineage_once(committed, monkeypatch):
+    calls = []
+    read = CheckpointedExtraction.lineage
+
+    def spy(self):
+        calls.append(1)
+        return read(self)
+
+    monkeypatch.setattr(CheckpointedExtraction, "lineage", spy)
+    audit = committed.validate()
+    assert audit["complete"] and audit["lineage_turns"] > 0, audit
+    assert len(calls) == 1
+
+
+def test_unreadable_lineage_raises(spark, tmp_path):
+    """Only a missing lineage or one with no data files means "nothing
+    committed"; an unreadable file must raise, not resume as a first run
+    that recomputes every bucket past the resume guards."""
+    sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
+
+    def job(name):
+        return CheckpointedExtraction(
+            spark, sdf, str(tmp_path / name), buckets=8, chunk_buckets=4, salt=2
+        )
+
+    assert job("missing").pending_buckets() == list(range(8))
+    (tmp_path / "no_files" / "_lineage").mkdir(parents=True)
+    (tmp_path / "no_files" / "_lineage" / "_SUCCESS").touch()
+    assert job("no_files").pending_buckets() == list(range(8))
+
+    (tmp_path / "garbage" / "_lineage").mkdir(parents=True)
+    (tmp_path / "garbage" / "_lineage" / "part-00000.parquet").write_bytes(b"garbage" * 16)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        job("garbage").pending_buckets()
+
+
 def test_bucket_scheme_mismatch_refused(spark, tmp_path):
     """Resuming the same output_dir with a different --buckets would mix
     two hash schemes (duplicates from stale partitions + missing rows from
     renumbered 'complete' buckets); the lineage records its scheme and a
     mismatched resume must refuse to run."""
-    import pytest
-
     pdf = synth.generate_local(6, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt_scheme")
@@ -139,8 +231,6 @@ def test_span_mode_mismatch_refused(spark, tmp_path):
     data files; their lineage says spans=true, or predates the spans
     column.  Resuming one would mix two data schemas, so it must refuse,
     while a fresh output resumes fine and has no spans_json."""
-    import pytest
-
     pdf = synth.generate_local(6, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     legacy = {
@@ -190,8 +280,6 @@ def test_iceberg_backend_detection(spark, tmp_path):
     writeTo snapshot commits); in an environment without the
     iceberg-spark-runtime jar it must fail fast at construction with
     guidance, and bogus formats are rejected outright."""
-    import pytest
-
     pdf = synth.generate_local(2, shuffled=False)
     sdf = spark.createDataFrame(pdf)
     with pytest.raises(ValueError, match="unknown table_format"):
