@@ -677,12 +677,14 @@ def dedup_clusters(spark, sf_dir):
     closure — the canonical "keep one per duplicate CLUSTER" contract.
 
     Runs exactly ``CC_ROUNDS`` propagation rounds so the DuckDB oracle can
-    unroll the identical computation; 8 rounds covers component diameters
-    far beyond anything a near-dup graph at the checked scale produces
-    (tests assert the fixed-round result equals the convergence loop's)."""
+    unroll the identical computation, then one verification round: a
+    component of diameter > ``CC_ROUNDS`` raises ("labels still moving")
+    instead of returning the under-merged labels that the unrolled oracle
+    would match."""
     return connected_components(
         dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"),
         rounds=CC_ROUNDS,
+        verify_converged=True,
     )
 
 
@@ -692,10 +694,9 @@ def dedup_clusters_star(spark, sf_dir):
     of fixed-round min-label propagation.  Connected components are
     algorithm-independent, so it shares ``DEDUP_CLUSTERS_SQL`` — the
     unrolled min-label oracle is exact whenever component diameters fit
-    its rounds (they do at the checked scale, asserted by
-    ``verify_converged`` in tests/test_clusters.py), which gives the star
-    algorithm its own cross-engine value stamp rather than only the
-    fixture-level union-find pin."""
+    its rounds (they do at the checked scale: ``dedup_clusters`` raises
+    otherwise), which gives the star algorithm its own cross-engine value
+    stamp rather than only the fixture-level union-find pin."""
     return connected_components_star(
         dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     )

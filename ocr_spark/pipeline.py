@@ -4,33 +4,21 @@ Replaces the reference's sequential per-file loop
 (``NFT_OCR.py:1574-1579`` ``for infile in Path(indir).glob(...)``) with:
 
     read -> select (column prune before Arrow transfer)
-         -> [conditional partitioning stage] -> mapInPandas
-         -> [reassembly: global window | local sort | none]
+         -> salted repartition -> mapInPandas
+         -> [reassembly: global window | none]
 
 Design notes (100 TB posture):
-- the kernel is per-turn pure, so extraction itself needs NO grouping and
-  NO shuffle.  Both wide stages that used to be unconditional are now
-  conditional (round-3 verdict: the two exchanges were the measured ~2.2 s
-  Spark overhead at 32 cores, SCALE.md §7):
-
-  * **partitioning** (``salt="auto"``, the default): file-scan inputs have
-    size-bounded splits (``spark.sql.files.maxPartitionBytes`` caps any
-    task's bytes), so a 10^5-turn conversation cannot pin a task and the
-    salted repartition is dead weight — skipped, with a narrow
-    ``coalesce`` when the scan over-partitions.  The full salted shuffle
-    (``repartition(hash(conv_id), pmod(hash(turn_idx), salt))``) runs
-    when the input arrives with fewer partitions than the session's
-    parallelism (an upstream agg, a handful of giant unsplittable inputs)
-    OR when its plan contains a wide node that can correlate partition
-    membership with key values (a groupBy/sort/repartition on conv_id
-    co-locates whole conversations, so partition count alone proves
-    nothing) — exactly the cases where skew insurance pays for its
-    shuffle.
-  * **reassembly** (``reassemble``): the global (conv_id, turn_idx) window
-    stays for full-fidelity artifacts, but the at-scale bucketed-sink
-    posture is ``"sorted"`` — ``sortWithinPartitions`` gives each output
-    file (conv, turn)-sorted rows with NO exchange; rank/size columns are
-    derivable at read time within a bucket.
+- the kernel is per-turn pure, so extraction itself needs NO grouping.
+  The one shuffle before it is skew insurance: ``repartition(hash(conv_id),
+  pmod(hash(turn_idx), salt))`` spreads each conversation over ``salt``
+  buckets, so a 10^5-turn conversation cannot pin one task.  A file scan
+  does not give that for free: a split bounds bytes, not turns, so a long
+  conversation written contiguously sits in one split (SCALE.md §2).
+  ``salt=0`` skips the shuffle for a caller that vouches for its input
+  partitioning.
+- **reassembly** (``reassemble=True``): a global (conv_id, turn_idx)
+  window for full-fidelity artifacts; the checkpointed job writes the
+  raw kernel output (``reassemble=False``) partitioned by bucket.
 - only (conv_id, turn_idx, role, text, tool) cross the JVM->Python Arrow
   boundary; ts and any extra columns are joined back by key only if needed.
 - one output schema (``OUTPUT_SCHEMA``) for every entry point — batch,
@@ -81,116 +69,45 @@ def _extract_map(batches):
 
 DEFAULT_SALT = 8
 
-# Logical-plan nodes after which partition layout can CORRELATE with key
-# values (a groupBy/repartition/sort/join by conv_id co-locates whole
-# conversations, so one partition can hold a 10^5-turn conversation even
-# when the partition COUNT looks healthy).  A plain file scan
-# (Relation/Filter/Project only) has size-bounded splits instead —
-# `spark.sql.files.maxPartitionBytes` caps any task's bytes regardless of
-# conversation length — which is the only case where skipping the salted
-# repartition is safe.
-_KEY_CORRELATED_NODES = (
-    "Aggregate",
-    "Join",
-    "Window",
-    "Sort",
-    "RepartitionByExpression",
-    "Deduplicate",
-    "GlobalLimit",
-    "LogicalRDD",  # opaque RDD-backed input: partitioning unknowable, assume the worst
-)
-
-
-def _partitioning_may_correlate(df: DataFrame) -> bool:
-    """True when the input's optimized logical plan contains any node that
-    can make partition membership a function of key values (see
-    ``_KEY_CORRELATED_NODES``) — the case where partition-count heuristics
-    are blind to long-conversation skew and salt="auto" must keep the
-    salted repartition."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return any(node in plan for node in _KEY_CORRELATED_NODES)
-
 
 def extract_transcripts(
     df: DataFrame,
     *,
-    salt: int | str = "auto",
+    salt: int = DEFAULT_SALT,
     partitions: int | None = None,
-    reassemble: bool | str = True,
+    reassemble: bool = True,
 ) -> DataFrame:
     """Run the extraction kernel over a transcripts DataFrame.
 
     ``salt``:
-      - ``"auto"`` (default): shuffle only when it pays.  The
-        partition-count heuristics apply ONLY to scan-shaped inputs
-        (Relation/Filter/Project plans), where file splits are
-        size-bounded and per-task work is bounded regardless of
-        conversation length: at least as many partitions as the kernel
-        stage's task count (``partitions``, else one per core) gets a
-        narrow ``coalesce`` down to it (no exchange); >= the session's
-        default parallelism passes through untouched.  An input
-        whose plan contains a wide node (groupBy, join, sort, repartition
-        by key, ...) keeps the salted repartition REGARDLESS of partition
-        count — after a shuffle keyed on conv_id, one partition can hold
-        a 10^5-turn conversation while the count looks healthy — as does
-        an under-partitioned input (fewer partitions than cores).
-      - int > 0: unconditional skew insurance — spread each conversation
-        over ``salt`` shuffle buckets (``repartition(hash(conv_id),
-        pmod(hash(turn_idx), salt))``).
+      - int > 0 (default ``DEFAULT_SALT``): skew insurance — spread each
+        conversation over ``salt`` shuffle buckets
+        (``repartition(hash(conv_id), pmod(hash(turn_idx), salt))``).
       - 0: never repartition (caller vouches for the input partitioning,
         e.g. a bucketed table feeding a bucketed sink).
-    ``partitions``: task count of the kernel stage whenever it is
-      repartitioned or coalesced.  Default: the session's
-      ``defaultParallelism``, one task per core — every kernel task and
-      ``extract_batch`` call pays a fixed cost, so more, smaller tasks than
-      cores only add overhead (SCALE.md §6).  ``spark.sql.shuffle.partitions``
-      sizes the session's other shuffles and is not read here.
+    ``partitions``: task count of the salted repartition.  Default: the
+      session's ``defaultParallelism``, one task per core — every kernel
+      task and ``extract_batch`` call pays a fixed cost, so more, smaller
+      tasks than cores only add overhead (SCALE.md §6).
+      ``spark.sql.shuffle.partitions`` sizes the session's other shuffles
+      and is not read here.
     ``reassemble``:
       - ``True``: stable-order window columns (turn_rank, conv_turns) over
         (conv_id, turn_idx) — one hash exchange; full-fidelity artifacts.
-      - ``"sorted"``: ``sortWithinPartitions(conv_id, turn_idx)`` — the
-        bucketed-sink posture: each output partition is (conv, turn)-sorted
-        with NO exchange, no extra columns.
       - ``False``: raw kernel output order.
 
     The output has no ``spans_json`` column (``OUTPUT_SCHEMA``); derive
     the span relation from ``extracted_text`` with
     ``transcripts.derive_spans``.
     """
-    spark = df.sparkSession
-    n_part = partitions or spark.sparkContext.defaultParallelism
-
-    pruned = df.select(*INPUT_COLUMNS)
-    staged = pruned
-    eff_salt = salt
-    if salt == "auto":
-        n_in = pruned.rdd.getNumPartitions()
-        if _partitioning_may_correlate(pruned):
-            # shuffled/grouped/sorted upstream: partition membership can be
-            # a function of conv_id, so a healthy partition COUNT proves
-            # nothing about per-task work — keep the skew insurance
-            eff_salt = DEFAULT_SALT
-        elif n_in >= n_part:
-            # over-partitioned scan (e.g. many small files): narrow merge to
-            # the target task count — adjacent partitions concatenate, no
-            # shuffle, and a no-op when counts already match
-            staged = pruned.coalesce(n_part)
-            eff_salt = 0
-        elif n_in >= spark.sparkContext.defaultParallelism:
-            # adequate parallelism and size-bounded splits: run in place
-            eff_salt = 0
-        else:
-            eff_salt = DEFAULT_SALT
-    if eff_salt:
-        staged = pruned.repartition(
-            n_part,
+    staged = df.select(*INPUT_COLUMNS)
+    if salt:
+        staged = staged.repartition(
+            partitions or df.sparkSession.sparkContext.defaultParallelism,
             F.hash(F.col("conv_id")),
-            F.pmod(F.hash(F.col("turn_idx")), F.lit(eff_salt)),
+            F.pmod(F.hash(F.col("turn_idx")), F.lit(salt)),
         )
     extracted = staged.mapInPandas(_extract_map, OUTPUT_SCHEMA)
-
-    if reassemble == "sorted":
-        return extracted.sortWithinPartitions("conv_id", "turn_idx")
     if not reassemble:
         return extracted
 

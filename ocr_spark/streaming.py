@@ -28,7 +28,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.pipeline import DEFAULT_SALT, extract_transcripts
+from ocr_spark.pipeline import extract_transcripts
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -73,7 +73,6 @@ def stream_extract(
     """
     extracted = extract_transcripts(
         stream_source(spark, input_dir),
-        salt=DEFAULT_SALT,
         partitions=partitions,
         reassemble=False,
     )

@@ -4,9 +4,9 @@ The driver captures only the LAST 2000 chars of bench output; round 4's
 full-detail JSON line exceeded that and BENCH_r04.json recorded
 ``parsed: null`` — the most load-bearing artifact of the round was
 unreadable.  This test pins the fix: the compact projection of a
-FULLY-POPULATED result (every optional block present, worst-case rep
-counts, rescue audit fields, complete history) must stay under 1800
-chars, leaving ≥200 chars of slack inside the capture window.
+FULLY-POPULATED result (every optional block present, every rep's
+seconds at both levels) must stay under 1800 chars, leaving ≥200 chars of
+slack inside the capture window.
 """
 
 import json
@@ -18,30 +18,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench
 
 
-def _full_pair(lo: int, hi: int, reps: int) -> dict:
+def _full_extraction(reps: int) -> dict:
     def lvl(sec):
+        runs = [round(sec * (1 + 0.037 * i), 2) for i in range(reps)]
         return {
-            "sec": sec,
-            "turns_per_sec": round(311269 / sec, 1),
-            "all_runs_sec": [round(sec * (1 + 0.37 * i), 2) for i in range(reps)],
+            "sec": runs[reps // 2],
+            "turns_per_sec": round(42839 / runs[reps // 2], 1),
+            "all_runs_sec": runs,
         }
 
     return {
-        "turns": 311269,
-        "levels": [lo, hi],
-        f"local[{lo}]": lvl(24.77),
-        f"local[{hi}]": lvl(11.96),
-        "scaling_efficiency": 0.518,
-        "control": {
-            f"mp[{lo}]": lvl(14.53),
-            f"mp[{hi}]": lvl(4.42),
-            "efficiency": 0.823,
-        },
-        "normalized_efficiency": 0.629,
-        "convs": 60000,
-        "collapsed": True,
-        "rescue_reps": 1,
-        "pre_rescue": {"scaling_efficiency": 0.119, "normalized_efficiency": 0.145},
+        "turns": 42839,
+        "convs": 8000,
+        "levels": [8, 32],
+        "local[8]": lvl(61.77),
+        "local[32]": lvl(27.96),
+        "scaling_efficiency": 0.552,
     }
 
 
@@ -49,8 +41,8 @@ def _full_result() -> dict:
     queries = {q: 12.34 for q in bench.HEADLINE}
     return {
         "metric": (
-            "headline ops wall-clock at sf + extraction turns/sec at two "
-            "parallelism levels"
+            "headline ops wall-clock at sf + shipped extraction job at N and "
+            "4N cores"
         ),
         "value": round(sum(queries.values()), 2),
         "unit": "sec",
@@ -95,28 +87,7 @@ def _full_result() -> dict:
                 "n_dropped_rows": 0,
             },
         },
-        "extraction": {
-            **_full_pair(8, 32, 5),
-            "secondary": {**_full_pair(2, 8, 2), "convs": 20000},
-            "peak": {"cores": 16, "sec": 4.48, "turns_per_sec": 69479.7},
-        },
-        "history": {
-            "since": bench.FIX_CUTOFF,
-            "note": "x" * 300,  # prose must NOT survive into the printed line
-            "extraction": {
-                "primary_raw": {"n": 30, "median": 0.51, "best": 0.65},
-                "primary_norm": {"n": 30, "median": 0.727, "best": 0.903},
-                "secondary_raw": {"n": 29, "median": 0.767, "best": 0.976},
-                "secondary_norm": {"n": 29, "median": 0.844, "best": 1.076},
-                "peak_turns_per_sec": {"n": 17, "median": 50448.8, "best": 69479.7},
-            },
-            "headline": {
-                "n": 9,
-                "total_median": 18.19,
-                "total_best": 13.17,
-                "per_query_best": {q: 1.77 for q in bench.HEADLINE},
-            },
-        },
+        "extraction": _full_extraction(5),
     }
 
 
@@ -130,16 +101,11 @@ def test_compact_keeps_driver_contract_keys():
     for key in ("metric", "value", "unit", "queries", "sf"):
         assert key in out
     assert set(out["queries"]) == set(bench.HEADLINE)
-    # scaling evidence survives: both pairs' efficiencies + audit flags
+    # scaling evidence survives: every rep, the medians and the efficiency
     ex = out["extraction"]
-    assert ex["eff"] == 0.518 and ex["norm_eff"] == 0.629
-    assert ex["collapsed"] is True and ex["pre_rescue_norm"] == 0.145
-    assert ex["secondary"]["eff"] == 0.518
-    assert ex["peak_tps"] == 69479
-    # history numbers survive; prose and per-query maps do not
-    hist = out["history"]
-    assert hist["primary_norm"] == {"n": 30, "median": 0.727, "best": 0.903}
-    assert "note" not in hist and "per_query_best" not in json.dumps(hist)
+    assert ex["levels"] == [8, 32] and ex["turns"] == 42839
+    assert ex["runs"][0] == [61.77, 64.06, 66.34, 68.63, 70.91]
+    assert ex["sec"] == [66.34, 30.03] and ex["eff"] == 0.552
     # guard collapses to one audit scalar (nonzero drop stays visible)
     assert out["lsh_guard"] == {"dropped_rows": 712}
 

@@ -1,10 +1,8 @@
 """Physical-plan regression guards for the extraction pipeline's scale
-posture (SCALE.md §1/§3/§7): exactly one Python/Arrow stage, a 5-column
-scan, and CONDITIONAL exchanges — explicit salt + window reassembly keep
-their two shuffles, while the at-scale posture (salt="auto" over a
-well-partitioned file scan, reassemble="sorted") must compile to ZERO
-exchanges: scan -> coalesce -> mapInPandas -> local sort -> sink in one
-stage."""
+posture (SCALE.md §1/§3): exactly one Python/Arrow stage, a 5-column
+scan, and the exchanges the arguments ask for — an explicit salt keeps its
+repartition, window reassembly adds one more, and ``reassemble=False``
+leaves only the salt."""
 
 from __future__ import annotations
 
@@ -87,68 +85,6 @@ def test_default_partitions_is_one_task_per_core(spark, tmp_path):
     cores = spark.sparkContext.defaultParallelism
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) != cores
     assert out.rdd.getNumPartitions() == cores
-
-
-def test_auto_salt_sorted_reassembly_is_exchange_free(spark, tmp_path):
-    """The at-scale posture (the benched job): a well-partitioned file scan
-    with salt="auto" and bucketed-sink local-sort reassembly must be ONE
-    stage — no Exchange anywhere in the plan, the round-4 fix for the
-    measured ~2.2 s two-exchange overhead at 32 cores (SCALE.md §7)."""
-    path = str(tmp_path / "t3.parquet")
-    spark.createDataFrame(synth.generate_local(40)).repartition(8).write.parquet(path)
-    df = spark.read.parquet(path)
-    out = extract_transcripts(df, salt="auto", partitions=8, reassemble="sorted")
-    _, executed = _plan(out)
-    assert executed.count("Exchange") == 0, executed
-    assert executed.count("MapInPandas") == 1
-    assert "Sort" in executed  # the local (within-partition) sort is present
-
-
-def test_auto_salt_falls_back_to_repartition_when_underpartitioned(spark):
-    """An input with fewer partitions than the session's parallelism (an
-    upstream agg, a giant unsplittable file) still gets the salted-shuffle
-    skew insurance under salt="auto"."""
-    pdf = synth.generate_local(10)
-    df = spark.createDataFrame(pdf).coalesce(1)
-    out = extract_transcripts(df, salt="auto", partitions=8, reassemble=False)
-    _, executed = _plan(out)
-    assert executed.count("Exchange") == 1  # the auto-triggered salt repartition
-
-
-def test_auto_salt_keeps_insurance_on_key_correlated_input(spark, tmp_path):
-    """salt="auto" must NOT trust partition count when the input's plan
-    contains a wide node: after repartition("conv_id") (or a groupBy/sort
-    on it) whole conversations are co-located, so a healthy-looking
-    partition count can still hide a 10^5-turn conversation in one task.
-    The salted repartition must survive for such inputs."""
-    path = str(tmp_path / "t5.parquet")
-    spark.createDataFrame(synth.generate_local(40)).write.parquet(path)
-    df = spark.read.parquet(path).repartition(8, "conv_id")  # >= n_part, keyed
-    out = extract_transcripts(df, salt="auto", partitions=8, reassemble=False)
-    _, executed = _plan(out)
-    # exactly one salt exchange directly feeding the kernel (the user's own
-    # repartition(8, conv_id) collapses into it: Catalyst drops a
-    # repartition that is immediately re-shuffled)
-    assert executed.count("Exchange") >= 1, executed
-    assert "pmod" in executed, executed  # the salt expression is present
-
-
-def test_auto_sorted_output_matches_salted_windowed(spark, tmp_path):
-    """Mode equivalence: the exchange-free posture yields the same row SET
-    as the full salted+windowed pipeline (minus the derivable window
-    columns), and every output partition is (conv_id, turn_idx)-sorted."""
-    path = str(tmp_path / "t4.parquet")
-    spark.createDataFrame(synth.generate_local(30)).repartition(8).write.parquet(path)
-    df = spark.read.parquet(path)
-    fast = extract_transcripts(df, salt="auto", partitions=8, reassemble="sorted")
-    full = extract_transcripts(df, salt=4, partitions=8, reassemble=True)
-    cols = ["conv_id", "turn_idx", "extracted_text", "fields_json", "status"]
-    got = sorted(map(tuple, fast.select(*cols).collect()))
-    want = sorted(map(tuple, full.select(*cols).collect()))
-    assert got == want
-    for part in fast.select("conv_id", "turn_idx").rdd.glom().collect():
-        keys = [(r.conv_id, r.turn_idx) for r in part]
-        assert keys == sorted(keys)
 
 
 def test_ann_plans_are_array_form(spark):
