@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark import operators
-from ocr_spark.pipeline import extract_transcripts
+from ocr_spark.pipeline import extract_transcripts, reassemble
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -48,7 +48,7 @@ def entry(spark: SparkSession) -> DataFrame:
         .alias("text"),
         F.when(F.col("doc_id") % 3 == 2, tool_payload).otherwise(F.lit("")).alias("tool"),
     )
-    return extract_transcripts(turns, salt=8)
+    return reassemble(extract_transcripts(turns, salt=8))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

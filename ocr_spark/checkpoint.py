@@ -58,7 +58,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.pipeline import extract_transcripts, metrics_agg
+from ocr_spark.pipeline import extract_transcripts, metrics_agg, reassemble
 
 LINEAGE_SUBDIR = "_lineage"
 DATA_SUBDIR = "data"
@@ -315,11 +315,7 @@ class CheckpointedExtraction:
             src = _bucketed(self.input_df, self.buckets)
             for chunk_id, chunk in enumerate(chunks):
                 subset = src.filter(F.col("bucket").isin(chunk))
-                extracted = extract_transcripts(
-                    subset.drop("bucket"),
-                    salt=self.salt,
-                    reassemble=False,
-                )
+                extracted = extract_transcripts(subset.drop("bucket"), salt=self.salt)
                 # persisted so the data write and the lineage aggregation
                 # share ONE kernel pass (not two)
                 out = _bucketed(extracted, self.buckets).persist()
@@ -360,14 +356,7 @@ class CheckpointedExtraction:
 
     def result(self) -> DataFrame:
         """Extracted rows with the stable-order reassembly window applied."""
-        from pyspark.sql import Window
-
-        out = self._read(self.data_dir)
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        wc = Window.partitionBy("conv_id")
-        return out.withColumn("turn_rank", F.row_number().over(w)).withColumn(
-            "conv_turns", F.count(F.lit(1)).over(wc)
-        )
+        return reassemble(self._read(self.data_dir))
 
     def validate(self, deep: bool = False) -> dict:
         """Coverage audit from lineage alone (no input rescan): complete

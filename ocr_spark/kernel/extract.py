@@ -37,7 +37,7 @@ from ocr_spark.kernel import bilingual
 from ocr_spark.kernel.cleanup import cleanup_series
 from ocr_spark.kernel.fields import extract_fields_series
 from ocr_spark.kernel.html import html_extract, looks_like_html
-from ocr_spark.kernel.layout import layout_extract, looks_like_layout
+from ocr_spark.kernel.layout import layout_extract, looks_like_layout, scrub_surrogates
 
 _PARA_SPLIT_RE = re.compile(r"\n\s*\n")
 
@@ -106,17 +106,20 @@ OUTPUT_COLUMNS = [
 
 
 def _tool_output(raw: str) -> str | None:
-    """Parse a tool-turn JSON payload; None signals a parse failure."""
+    """Parse a tool-turn JSON payload; None signals a parse failure
+    (nesting too deep for the JSON parser included)."""
     try:
         doc = json.loads(raw)
-    except (ValueError, TypeError):
+        if isinstance(doc, dict):
+            doc = doc.get("output", "")
+        if isinstance(doc, str):
+            return scrub_surrogates(doc)
+        # non-string JSON (nested 'output', or a top-level list/number/
+        # null): canonical JSON text, never Python repr; the default
+        # ensure_ascii escapes any lone surrogate
+        return json.dumps(doc, sort_keys=True)
+    except (ValueError, TypeError, RecursionError):
         return None
-    if isinstance(doc, dict):
-        out = doc.get("output", "")
-        return out if isinstance(out, str) else json.dumps(out, sort_keys=True)
-    # non-dict JSON (list/number/null): canonical JSON text, same encoding
-    # as the nested non-string 'output' case above — never Python repr
-    return doc if isinstance(doc, str) else json.dumps(doc, sort_keys=True)
 
 
 def _spans_and_counts(

@@ -41,8 +41,20 @@ coordinates).
 from __future__ import annotations
 
 import json
+import re
 
 LINE_GAP = 4  # max |y_i - y_j| for two line records to merge into one line
+
+_SURROGATE_RE = re.compile("[\ud800-\udfff]")
+
+
+def scrub_surrogates(text: str) -> str:
+    """Replace lone UTF-16 surrogates (a JSON ``\\ud800`` escape decodes
+    to one) with U+FFFD; UTF-8 and Arrow cannot carry them.  A valid pair
+    is already one code point after ``json.loads`` and is unchanged."""
+    if _SURROGATE_RE.search(text) is None:
+        return text
+    return text.encode("utf-16-le", "surrogatepass").decode("utf-16-le", "replace")
 
 
 def _order_blocks(blocks: list[dict]) -> list[dict]:
@@ -86,13 +98,14 @@ def layout_extract(payload: str) -> list[str]:
 
     Returns a list of block strings; within a block, lines are joined by a
     single ``\\n`` and spans within a line by a single space.  Malformed
-    payloads yield ``[]`` (the caller records a failure span — the
-    existence-guard pattern of ``NFT_OCR.py:1491``).
+    payloads, nesting too deep for the JSON parser included, yield ``[]``
+    (the caller records a failure span — the existence-guard pattern of
+    ``NFT_OCR.py:1491``).
     """
     try:
         doc = json.loads(payload)
         pages = doc["pages"]
-    except (ValueError, TypeError, KeyError):
+    except (ValueError, TypeError, KeyError, RecursionError):
         return []
 
     blocks_out: list[str] = []
@@ -118,7 +131,7 @@ def layout_extract(payload: str) -> list[str]:
                     if txt:
                         line_texts.append(txt)
                 if line_texts:
-                    blocks_out.append("\n".join(line_texts))
+                    blocks_out.append(scrub_surrogates("\n".join(line_texts)))
     except (TypeError, AttributeError, IndexError, KeyError):
         # e.g. a bbox list with <2 elements — malformed payloads must
         # degrade to [] (failure span), never crash the Arrow batch

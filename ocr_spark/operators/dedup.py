@@ -484,106 +484,17 @@ FROM m LEFT JOIN near n ON n.doc_b = m.doc_id
 """
 
 
-CC_ROUNDS = 8  # fixed label-propagation rounds for the oracle-checked query
+CC_ROUNDS = 8  # unrolled min-label rounds in the DuckDB oracle
+CC_MAX_ROUNDS = 64  # star rounds before connected_components gives up
 
 
-def connected_components(edges, rounds: int | None = None,
-                         verify_converged: bool = False):
+def connected_components(edges):
     """Connected components over an undirected (doc_a, doc_b) edge relation
-    by iterative min-label propagation: every node starts labeled with its
-    own id, and each round takes the min of its label and its neighbors'
-    labels.  After ``d`` rounds every component of diameter <= d carries
-    its minimum member id as the label.
-
-    ``rounds=None`` iterates to convergence (one driver-side changed-count
-    per round — the honest fixpoint for library use); an int runs exactly
-    that many rounds, which is what the oracle-checked ``dedup_clusters``
-    query uses so the DuckDB side can unroll the identical computation.
-
-    Scale notes: each round is one groupBy(min) + one equi-join, both on
-    doc_id — AQE co-partitions them, so a round costs ~2 exchanges over the
-    label relation (nodes, not edges, after the first neighbor join).
-    ``localCheckpoint`` truncates lineage every round; without it the plan
-    doubles per iteration and the optimizer chokes by round ~10 (the
-    classic iterative-DataFrame trap).  Min-propagation needs O(diameter)
-    rounds; for 10^9-edge graphs with long chains the production
-    refinement is the alternating large-star/small-star algorithm
-    (O(log^2 n) rounds, same per-round operator set) — implemented as
-    :func:`connected_components_star` with the same output contract.
-
-    ``verify_converged=True`` (with fixed ``rounds``) runs ONE extra
-    propagation round and raises if any label still moves — the cheap
-    post-check for the silent under-merge a component of diameter >
-    ``rounds`` would cause (the DuckDB oracle unrolls the identical
-    rounds, so the cross-engine gate alone cannot catch it)."""
-    pairs = edges.select("doc_a", "doc_b")
-    und = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-    labels = (
-        und.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    max_rounds = rounds if rounds is not None else 1_000_000
-    for _ in range(max_rounds):
-        nbr = (
-            und.join(labels, und["doc_b"] == labels["doc_id"])
-            .groupBy("doc_a")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, labels["doc_id"] == nbr["doc_a"], "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        if rounds is None:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels = new_labels
-    if verify_converged and rounds is not None:
-        nbr = (
-            und.join(labels, und["doc_b"] == labels["doc_id"])
-            .groupBy("doc_a")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        moved = (
-            labels.join(nbr, labels["doc_id"] == nbr["doc_a"])
-            .filter(F.col("nbr_min") < F.col("label"))
-            .count()
-        )
-        if moved:
-            raise ValueError(
-                f"connected_components: {moved} labels still moving after "
-                f"{rounds} fixed rounds — a component has diameter > rounds; "
-                "raise rounds or use connected_components_star"
-            )
-    return labels.select("doc_id", F.col("label").alias("cluster_rep"))
-
-
-def connected_components_star(edges, max_rounds: int = 64):
-    """Connected components by alternating large-star / small-star edge
-    rewrites (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the O(log^2 n)-round production form for graphs whose
-    component diameter makes per-hop min-label propagation
-    (:func:`connected_components`) too many rounds at 10^9-edge scale
-    (SCALE.md §9).  Same output contract: (doc_id, cluster_rep) with
-    cluster_rep = the component's minimum doc_id, for every node that
-    appears in ``edges``.
+    by alternating large-star / small-star edge rewrites (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond"): O(log^2 n)
+    rounds, exact at any component diameter (SCALE.md §9).  Output:
+    (doc_id, cluster_rep) with cluster_rep = the component's minimum
+    doc_id, for every node that appears in ``edges``.
 
     Per round, each node u with neighborhood Γ(u) and
     m(u) = min(Γ(u) ∪ {u}):
@@ -593,13 +504,13 @@ def connected_components_star(edges, max_rounds: int = 64):
     - small-star rewires every smaller-or-equal neighbor (and u itself)
       to m(u): emit (v, m(u)) for v ∈ Γ(u) ∪ {u}, v <= u.
 
-    Both are one groupBy(min) + one equi-join on the node key — the same
-    per-round operator set (and the same AQE co-partitioning) as min-label
-    propagation, but the rewires hop edges toward component minima
-    GEOMETRICALLY instead of one hop per round.  At convergence the edge
-    set is a union of stars rooted at each component's minimum, so labels
-    read off as min over neighbors.  ``localCheckpoint`` per half-round
+    Each is one groupBy(min) + one equi-join on the node key (AQE
+    co-partitions them); the rewires hop edges toward component minima
+    geometrically, not one hop per round.  At convergence the edge set is
+    a union of stars rooted at each component's minimum, so labels read
+    off as min over neighbors.  ``localCheckpoint`` per half-round
     truncates lineage (the iterative-DataFrame plan-doubling trap).
+    Raises if the edge set still moves after ``CC_MAX_ROUNDS`` rounds.
     """
     raw = edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     # node set from the RAW relation: a self-loop row contributes its node
@@ -641,7 +552,7 @@ def connected_components_star(edges, max_rounds: int = 64):
             .distinct()
         )
 
-    for _ in range(max_rounds):
+    for _ in range(CC_MAX_ROUNDS):
         e_next = _small_star(_large_star(e).localCheckpoint()).localCheckpoint()
         # set equality via two-sided difference on the distinct relations
         changed = (
@@ -652,7 +563,7 @@ def connected_components_star(edges, max_rounds: int = 64):
             break
     else:
         raise ValueError(
-            f"connected_components_star did not converge in {max_rounds} "
+            f"connected_components did not converge in {CC_MAX_ROUNDS} "
             "rounds (expected O(log^2 n))"
         )
     labels = (
@@ -676,37 +587,23 @@ def dedup_clusters(spark, sf_dir):
     ``dedup_pipeline`` resolves chains only one hop; this is the full
     closure — the canonical "keep one per duplicate CLUSTER" contract.
 
-    Runs exactly ``CC_ROUNDS`` propagation rounds so the DuckDB oracle can
-    unroll the identical computation, then one verification round: a
-    component of diameter > ``CC_ROUNDS`` raises ("labels still moving")
-    instead of returning the under-merged labels that the unrolled oracle
-    would match."""
+    The DuckDB oracle (``DEDUP_CLUSTERS_SQL``) unrolls ``CC_ROUNDS``
+    min-label rounds, which is exact whenever every node is within
+    ``CC_ROUNDS`` hops of its component minimum (pinned at the gated sf
+    dirs by tests/test_clusters.py).  Past that bound the oracle is the
+    side that under-merges, and the gate reports a value FAIL."""
     return connected_components(
-        dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"),
-        rounds=CC_ROUNDS,
-        verify_converged=True,
-    )
-
-
-def dedup_clusters_star(spark, sf_dir):
-    """``dedup_clusters`` computed by the production O(log^2 n)
-    large-star/small-star form (:func:`connected_components_star`) instead
-    of fixed-round min-label propagation.  Connected components are
-    algorithm-independent, so it shares ``DEDUP_CLUSTERS_SQL`` — the
-    unrolled min-label oracle is exact whenever component diameters fit
-    its rounds (they do at the checked scale: ``dedup_clusters`` raises
-    otherwise), which gives the star algorithm its own cross-engine value
-    stamp rather than only the fixture-level union-find pin."""
-    return connected_components_star(
         dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     )
 
 
 def _cc_sql() -> str:
-    # every l{k} references l{k-1} twice and und once; DuckDB inlines
-    # (re-evaluates) plain CTEs per reference, which would make l8 expand
-    # the whole minhash chain 2^8 times — MATERIALIZED pins each round to
-    # one evaluation, exactly like the Spark side's localCheckpoint
+    # CC_ROUNDS unrolled min-label rounds: the same relation as the Spark
+    # star form while every node is within CC_ROUNDS hops of its
+    # component minimum.  Every l{k} references l{k-1} twice and und once;
+    # DuckDB inlines (re-evaluates) plain CTEs per reference, which would
+    # make l8 expand the whole minhash chain 2^8 times — MATERIALIZED pins
+    # each round to one evaluation
     rounds = []
     for k in range(1, CC_ROUNDS + 1):
         prev = f"l{k - 1}"
@@ -1090,7 +987,6 @@ QUERIES = {
     "dedup_minhash_lsh": (dedup_minhash_lsh, DEDUP_MINHASH_SQL),
     "dedup_pipeline": (dedup_pipeline, DEDUP_PIPELINE_SQL),
     "dedup_clusters": (dedup_clusters, DEDUP_CLUSTERS_SQL),
-    "dedup_clusters_star": (dedup_clusters_star, DEDUP_CLUSTERS_SQL),
     "dedup_simhash": (dedup_simhash, DEDUP_SIMHASH_SQL),
     "dedup_ngram_jaccard": (dedup_ngram_jaccard, DEDUP_NGRAM_SQL),
 }

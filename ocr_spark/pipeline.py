@@ -5,7 +5,7 @@ Replaces the reference's sequential per-file loop
 
     read -> select (column prune before Arrow transfer)
          -> salted repartition -> mapInPandas
-         -> [reassembly: global window | none]
+         [-> reassemble: global (conv_id, turn_idx) window]
 
 Design notes (100 TB posture):
 - the kernel is per-turn pure, so extraction itself needs NO grouping.
@@ -16,9 +16,10 @@ Design notes (100 TB posture):
   conversation written contiguously sits in one split (SCALE.md §2).
   ``salt=0`` skips the shuffle for a caller that vouches for its input
   partitioning.
-- **reassembly** (``reassemble=True``): a global (conv_id, turn_idx)
-  window for full-fidelity artifacts; the checkpointed job writes the
-  raw kernel output (``reassemble=False``) partitioned by bucket.
+- **reassembly** (``reassemble``): a global (conv_id, turn_idx) window
+  for full-fidelity artifacts, applied by the caller that reads
+  ``turn_rank``/``conv_turns``; the checkpointed job writes the raw kernel
+  output partitioned by bucket and applies it in ``result()``.
 - only (conv_id, turn_idx, role, text, tool) cross the JVM->Python Arrow
   boundary; ts and any extra columns are joined back by key only if needed.
 - one output schema (``OUTPUT_SCHEMA``) for every entry point — batch,
@@ -70,47 +71,41 @@ def _extract_map(batches):
 DEFAULT_SALT = 8
 
 
-def extract_transcripts(
-    df: DataFrame,
-    *,
-    salt: int = DEFAULT_SALT,
-    partitions: int | None = None,
-    reassemble: bool = True,
-) -> DataFrame:
-    """Run the extraction kernel over a transcripts DataFrame.
+def extract_transcripts(df: DataFrame, *, salt: int = DEFAULT_SALT) -> DataFrame:
+    """Run the extraction kernel over a transcripts DataFrame; returns the
+    kernel output (``OUTPUT_SCHEMA``) in no particular order.
 
     ``salt``:
       - int > 0 (default ``DEFAULT_SALT``): skew insurance — spread each
         conversation over ``salt`` shuffle buckets
         (``repartition(hash(conv_id), pmod(hash(turn_idx), salt))``).
+        The repartition runs one task per core (the session's
+        ``defaultParallelism``): every kernel task and ``extract_batch``
+        call pays a fixed cost, so more, smaller tasks than cores only add
+        overhead (SCALE.md §6).  ``spark.sql.shuffle.partitions`` sizes
+        the session's other shuffles and is not read here.
       - 0: never repartition (caller vouches for the input partitioning,
         e.g. a bucketed table feeding a bucketed sink).
-    ``partitions``: task count of the salted repartition.  Default: the
-      session's ``defaultParallelism``, one task per core — every kernel
-      task and ``extract_batch`` call pays a fixed cost, so more, smaller
-      tasks than cores only add overhead (SCALE.md §6).
-      ``spark.sql.shuffle.partitions`` sizes the session's other shuffles
-      and is not read here.
-    ``reassemble``:
-      - ``True``: stable-order window columns (turn_rank, conv_turns) over
-        (conv_id, turn_idx) — one hash exchange; full-fidelity artifacts.
-      - ``False``: raw kernel output order.
 
-    The output has no ``spans_json`` column (``OUTPUT_SCHEMA``); derive
-    the span relation from ``extracted_text`` with
-    ``transcripts.derive_spans``.
+    The output has no ``spans_json`` column; derive the span relation from
+    ``extracted_text`` with ``transcripts.derive_spans``.  Wrap it in
+    :func:`reassemble` for the stable per-conversation turn order.
     """
     staged = df.select(*INPUT_COLUMNS)
     if salt:
         staged = staged.repartition(
-            partitions or df.sparkSession.sparkContext.defaultParallelism,
+            df.sparkSession.sparkContext.defaultParallelism,
             F.hash(F.col("conv_id")),
             F.pmod(F.hash(F.col("turn_idx")), F.lit(salt)),
         )
-    extracted = staged.mapInPandas(_extract_map, OUTPUT_SCHEMA)
-    if not reassemble:
-        return extracted
+    return staged.mapInPandas(_extract_map, OUTPUT_SCHEMA)
 
+
+def reassemble(extracted: DataFrame) -> DataFrame:
+    """Stable-order reassembly: ``turn_rank`` (dense 1..n in ``turn_idx``
+    order) and ``conv_turns`` per ``conv_id`` — one hash exchange on
+    conv_id; for full-fidelity artifacts, never inside the checkpointed
+    job or a stream (a global window is not streamable)."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     wc = Window.partitionBy("conv_id")
     return extracted.withColumn("turn_rank", F.row_number().over(w)).withColumn(

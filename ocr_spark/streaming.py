@@ -58,24 +58,18 @@ def stream_extract(
     output_dir: str,
     checkpoint_dir: str,
     *,
-    partitions: int | None = None,
     available_now: bool = True,
 ):
     """readStream -> `extract_transcripts` (salted repartition ->
     mapInPandas kernel) -> parquet sink, with the batch output's columns
     (``pipeline.OUTPUT_SCHEMA``).  Returns the started StreamingQuery;
-    callers awaitTermination().  ``partitions`` sizes the repartition
-    exactly as in `extract_transcripts`.
+    callers awaitTermination().
 
     No window reassembly inside the stream (a global row_number window is
-    not streamable); readers apply the stable-order window at query time,
+    not streamable); readers apply `pipeline.reassemble` at query time,
     exactly as the batch path's `result()` does.
     """
-    extracted = extract_transcripts(
-        stream_source(spark, input_dir),
-        partitions=partitions,
-        reassemble=False,
-    )
+    extracted = extract_transcripts(stream_source(spark, input_dir))
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)

@@ -1,20 +1,20 @@
 """Transitive dedup clusters (connected components over near-dup pairs).
 
-1. ``connected_components`` converges on graphs whose diameter exceeds any
-   fixed round count (a 12-hop chain) — the library fixpoint mode;
-2. the fixed-round mode used by the oracle-checked ``dedup_clusters``
-   query is exact whenever rounds >= diameter, and equals the fixpoint;
-3. ``dedup_clusters`` matches a hand union-find over the verified
+1. ``connected_components`` (alternating large-star/small-star, the only
+   CC implementation) equals a hand union-find on a general fixture, on a
+   31-node path whose diameter exceeds the oracle's ``CC_ROUNDS``, and on
+   the real ``dedup_minhash_lsh`` pair graph;
+2. ``dedup_clusters`` matches a hand union-find over the verified
    ``dedup_minhash_lsh`` pair graph;
-4. ``connected_components_star`` (alternating large-star/small-star, the
-   O(log^2 n)-round production form) equals union-find and the min-label
-   fixpoint on general fixtures, a long chain whose diameter exceeds the
-   oracle's fixed rounds, and the real pair graph;
-5. the ``verify_converged`` post-check catches diameter > rounds
-   under-merges and passes when rounds suffice (incl. at the checked sf).
+3. the oracle's precondition holds at the sf dirs ``check_oracle.py``
+   gates: every node of the pair graph is within ``CC_ROUNDS`` hops of its
+   component minimum, so the unrolled min-label SQL is exact there.
 """
 
 from __future__ import annotations
+
+import os
+from collections import defaultdict, deque
 
 import pytest
 
@@ -33,41 +33,6 @@ def _chain_edges(spark, n):
     return spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
-
-
-def test_convergence_beats_fixed_rounds_on_long_chain(spark):
-    # a 13-node path: diameter 12, so min-label propagation needs 12
-    # rounds; 3 rounds must NOT finish, the fixpoint loop must
-    edges = _chain_edges(spark, 12)
-    converged = {
-        r.doc_id: r.cluster_rep
-        for r in dedup.connected_components(edges).collect()
-    }
-    assert converged == {i: 0 for i in range(13)}
-
-    partial = {
-        r.doc_id: r.cluster_rep
-        for r in dedup.connected_components(edges, rounds=3).collect()
-    }
-    assert partial != converged
-    assert partial[3] == 0 and partial[12] == 9  # exactly 3 hops propagated
-
-
-def test_fixed_rounds_exact_within_diameter(spark):
-    # two components (a triangle-ish pair cluster + a 4-path), diameter 3
-    edges = spark.createDataFrame(
-        [(10, 11), (11, 12), (20, 21), (21, 22), (22, 23)],
-        "doc_a long, doc_b long",
-    )
-    fixed = sorted(
-        map(tuple, dedup.connected_components(edges, rounds=dedup.CC_ROUNDS).collect())
-    )
-    fixpoint = sorted(map(tuple, dedup.connected_components(edges).collect()))
-    assert fixed == fixpoint
-    assert fixed == [
-        (10, 10), (11, 10), (12, 10),
-        (20, 20), (21, 20), (22, 20), (23, 20),
-    ]
 
 
 def _union_find(pairs):
@@ -100,8 +65,8 @@ def test_dedup_clusters_matches_union_find(spark):
     assert got == expected
 
 
-def test_star_matches_union_find_and_min_label(spark):
-    # multiple components, ties, a cycle, shared minima — the general case
+def test_star_matches_union_find(spark):
+    # multiple components, ties, a cycle, shared minima, a self-loop
     edges = spark.createDataFrame(
         [(10, 11), (11, 12), (12, 10), (20, 21), (21, 22), (22, 23),
          (5, 40), (40, 41), (3, 3)],
@@ -111,32 +76,20 @@ def test_star_matches_union_find_and_min_label(spark):
     expected = _union_find(pairs)
     star = {
         r.doc_id: r.cluster_rep
-        for r in dedup.connected_components_star(edges).collect()
-    }
-    fixpoint = {
-        r.doc_id: r.cluster_rep
         for r in dedup.connected_components(edges).collect()
     }
-    assert star == expected == fixpoint
+    assert star == expected
 
 
 def test_star_long_chain_beyond_fixed_round_diameter(spark):
-    # a 31-node path: diameter 30 >> CC_ROUNDS=8.  Min-label at the
-    # oracle's fixed rounds silently under-merges (the ADVICE round-4
-    # diameter-bound caveat); large-star/small-star converges in
-    # O(log^2 n) rounds and matches union-find exactly.
+    # a 31-node path: diameter 30 >> CC_ROUNDS=8; large-star/small-star
+    # converges in O(log^2 n) rounds and labels the whole path 0
     edges = _chain_edges(spark, 30)
-    expected = {i: 0 for i in range(31)}
     star = {
         r.doc_id: r.cluster_rep
-        for r in dedup.connected_components_star(edges).collect()
+        for r in dedup.connected_components(edges).collect()
     }
-    assert star == expected
-    fixed = {
-        r.doc_id: r.cluster_rep
-        for r in dedup.connected_components(edges, rounds=dedup.CC_ROUNDS).collect()
-    }
-    assert fixed != expected  # the documented under-merge the star form fixes
+    assert star == {i: 0 for i in range(31)}
 
 
 def test_star_on_minhash_pair_graph(spark):
@@ -145,29 +98,33 @@ def test_star_on_minhash_pair_graph(spark):
     expected = _union_find(pairs)
     got = {
         r.doc_id: r.cluster_rep
-        for r in dedup.connected_components_star(pairs_df).collect()
+        for r in dedup.connected_components(pairs_df).collect()
     }
     assert got == expected
 
 
-def test_verify_converged_post_check(spark):
-    # the cheap one-extra-round guard: raises on a diameter > rounds
-    # component, passes (and returns the exact answer) when rounds suffice
-    edges = _chain_edges(spark, 12)
-    with pytest.raises(ValueError, match="still moving"):
-        dedup.connected_components(edges, rounds=3, verify_converged=True)
-    ok = {
-        r.doc_id: r.cluster_rep
-        for r in dedup.connected_components(
-            edges, rounds=12, verify_converged=True
-        ).collect()
-    }
-    assert ok == {i: 0 for i in range(13)}
-
-
-def test_dedup_clusters_fixed_rounds_converged_at_sf(spark):
-    # the oracle-checked query runs CC_ROUNDS fixed rounds and then raises
-    # if a label still moves: the near-dup graph at the checked scale must
-    # be inside that diameter bound (the post-check the DuckDB unrolled
-    # oracle cannot perform)
-    dedup.dedup_clusters(spark, SF_DIR).collect()
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_oracle_rounds_reach_every_member_at_sf(spark, sf):
+    # DEDUP_CLUSTERS_SQL unrolls CC_ROUNDS min-label rounds: it is exact
+    # iff a BFS from each component's minimum reaches every member within
+    # CC_ROUNDS hops.  Past that bound the oracle under-merges and the
+    # gate fails by value, so pin the bound where the gate runs.
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    nbrs = defaultdict(set)
+    for r in dedup.dedup_minhash_lsh(spark, sf_dir).collect():
+        nbrs[r.doc_a].add(r.doc_b)
+        nbrs[r.doc_b].add(r.doc_a)
+    assert nbrs, "fixture must exercise at least one pair"
+    hops: dict = {}
+    for root in sorted(nbrs):
+        if root in hops:
+            continue  # reached from a smaller root: not a component minimum
+        hops[root] = 0
+        queue = deque([root])
+        while queue:
+            u = queue.popleft()
+            for v in nbrs[u]:
+                if v not in hops:
+                    hops[v] = hops[u] + 1
+                    queue.append(v)
+    assert max(hops.values()) <= dedup.CC_ROUNDS

@@ -372,3 +372,56 @@ def test_expiry_field():  # extract_expiry port (Ingredients_OCR.py:295-305)
         "vitamin a 1 % vitamin c 2 % vitamin d 3 %"
     )
     assert rej["status"] == "rejected" and rej["fields_json"] == "{}"
+
+
+# --- malformed JSON payloads cannot take the batch down ---------------------
+
+_HEALTHY = {"role": "user", "text": "sodium 120 mg\n\nprotein 5 g", "tool": ""}
+_DEEP = "[" * 5000 + "]" * 5000
+
+
+def _layout(span_text):
+    page = {"page": 1, "blocks": [{"bbox": [0, 0, 9, 9], "lines": [
+        {"y": 1, "spans": [{"x": 0, "text": span_text}]}]}]}
+    return json.dumps({"pages": [page]})
+
+
+_POISON = {
+    "tool_surrogate": {"role": "tool", "text": "", "tool": '{"output":"salt \\ud800 free"}'},
+    "layout_surrogate": {"role": "user", "text": _layout("salt \ud800 free"), "tool": ""},
+    "tool_deep": {"role": "tool", "text": "", "tool": _DEEP},
+    "layout_deep": {"role": "user", "text": '{"pages": ' + _DEEP + "}", "tool": ""},
+}
+
+
+def _batch(*rows):
+    return pd.DataFrame([
+        {"conv_id": f"c{i}", "turn_idx": 0, **r} for i, r in enumerate(rows)
+    ])
+
+
+@pytest.mark.parametrize("name", sorted(_POISON))
+def test_malformed_payload_spares_its_batch(name):
+    alone = extract_batch(_batch(_HEALTHY)).iloc[0].drop("conv_id")
+    out = extract_batch(_batch(_POISON[name], _HEALTHY))
+    assert out.iloc[1].drop("conv_id").equals(alone)
+    # nesting too deep for the JSON parser reads as malformed
+    if name == "tool_deep":
+        assert out.iloc[0]["status"] == "tool_parse_error"
+    if name == "layout_deep":
+        assert layout_extract(_POISON[name]["text"]) == []
+
+
+@pytest.mark.parametrize("name", ["tool_surrogate", "layout_surrogate"])
+def test_lone_surrogate_reads_as_replacement_char(name):
+    row = _POISON[name]
+    literal = {k: v.replace("\\ud800", "�") for k, v in row.items()}
+    got = extract_batch(_batch(row))
+    want = extract_batch(_batch(literal))
+    assert got.equals(want)
+    assert "�" in got.iloc[0]["extracted_text"]
+
+
+def test_valid_surrogate_pair_survives():
+    r = extract_turn("", tool='{"output":"salt \\ud83d\\ude00 free"}', role="tool")
+    assert "\U0001F600" in r["extracted_text"]

@@ -20,7 +20,12 @@ import pandas as pd
 from ocr_spark import synth
 from ocr_spark.operators.transcripts import derive_spans
 from ocr_spark.oracle import oracle_extract
-from ocr_spark.pipeline import extract_transcripts, failure_spans, partition_metrics
+from ocr_spark.pipeline import (
+    extract_transcripts,
+    failure_spans,
+    partition_metrics,
+    reassemble,
+)
 
 N_CONVS = 60  # ~10^3 turns with the Zipf tail
 
@@ -48,7 +53,7 @@ def _derived_span_relation(out):
 def test_spark_matches_oracle_byte_for_byte(spark):
     pdf = synth.generate_local(N_CONVS, shuffled=True)
     want = oracle_extract(pdf)
-    out = extract_transcripts(spark.createDataFrame(pdf), salt=4, partitions=8)
+    out = extract_transcripts(spark.createDataFrame(pdf), salt=4)
     assert "spans_json" not in out.columns
     got = out.orderBy("conv_id", "turn_idx").toPandas()
 
@@ -80,7 +85,7 @@ def test_derived_spans_match_kernel(spark):
     pdf = synth.generate_local(25, shuffled=True)
     want = oracle_extract(pdf)  # kernel with inline spans
 
-    out = extract_transcripts(spark.createDataFrame(pdf), salt=4, partitions=8)
+    out = extract_transcripts(spark.createDataFrame(pdf), salt=4)
     got_counts = out.orderBy("conv_id", "turn_idx").toPandas()
     for col in ("n_blocks", "n_lines", "n_tokens"):
         assert (got_counts[col].to_numpy() == want[col].to_numpy()).all(), col
@@ -106,7 +111,7 @@ def test_derived_spans_adversarial_tokens(spark):
             "tool": [""] * len(texts),
         }
     )
-    out = extract_transcripts(spark.createDataFrame(pdf), salt=2, partitions=2)
+    out = extract_transcripts(spark.createDataFrame(pdf), salt=2)
     derived = _derived_span_relation(out)
     assert derived == _kernel_span_relation(oracle_extract(pdf))
     assert derived  # non-degenerate: the adversarial tokens survived cleanup
@@ -114,7 +119,7 @@ def test_derived_spans_adversarial_tokens(spark):
 
 def test_window_reassembly_columns(spark):
     pdf = synth.generate_local(20, shuffled=True)
-    out = extract_transcripts(spark.createDataFrame(pdf), salt=4).toPandas()
+    out = reassemble(extract_transcripts(spark.createDataFrame(pdf), salt=4)).toPandas()
     g = out.groupby("conv_id")
     # turn_rank is a dense 1..n per conversation regardless of input order
     assert (g["turn_rank"].max() == g["turn_rank"].count()).all()
@@ -125,7 +130,7 @@ def test_window_reassembly_columns(spark):
 
 def test_lineage_tables(spark):
     pdf = synth.generate_local(25, shuffled=True)
-    extracted = extract_transcripts(spark.createDataFrame(pdf), salt=4, reassemble=False)
+    extracted = extract_transcripts(spark.createDataFrame(pdf), salt=4)
     extracted = extracted.cache()
     try:
         metrics = partition_metrics(extracted).toPandas()

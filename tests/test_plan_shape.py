@@ -1,13 +1,12 @@
 """Physical-plan regression guards for the extraction pipeline's scale
 posture (SCALE.md §1/§3): exactly one Python/Arrow stage, a 5-column
 scan, and the exchanges the arguments ask for — an explicit salt keeps its
-repartition, window reassembly adds one more, and ``reassemble=False``
-leaves only the salt."""
+repartition, and wrapping the output in ``reassemble`` adds one more."""
 
 from __future__ import annotations
 
 from ocr_spark import synth
-from ocr_spark.pipeline import INPUT_COLUMNS, extract_transcripts
+from ocr_spark.pipeline import INPUT_COLUMNS, extract_transcripts, reassemble
 
 
 def _plan(df):
@@ -19,7 +18,7 @@ def test_pipeline_plan_shape(spark, tmp_path):
     spark.createDataFrame(synth.generate_local(20)).write.parquet(path)
     # extra column that must be pruned out of the scan
     df = spark.read.parquet(path)
-    out = extract_transcripts(df, salt=4, partitions=8)
+    out = reassemble(extract_transcripts(df, salt=4))
     optimized, executed = _plan(out)
 
     assert executed.count("MapInPandas") == 1  # ONE Arrow stage, not N
@@ -70,18 +69,18 @@ def test_minhash_signatures_are_map_side(spark):
 def test_no_reassembly_means_single_shuffle(spark, tmp_path):
     path = str(tmp_path / "t2.parquet")
     spark.createDataFrame(synth.generate_local(10)).write.parquet(path)
-    out = extract_transcripts(spark.read.parquet(path), salt=4, partitions=8, reassemble=False)
+    out = extract_transcripts(spark.read.parquet(path), salt=4)
     _, executed = _plan(out)
     assert executed.count("Exchange") == 1  # only the salt repartition
 
 
 def test_default_partitions_is_one_task_per_core(spark, tmp_path):
-    """With no ``partitions``, the salted repartition runs one kernel task
-    per core.  The test session sets spark.sql.shuffle.partitions=8 on
-    local[4], so this also pins that the SQL conf is not read."""
+    """The salted repartition runs one kernel task per core.  The test
+    session sets spark.sql.shuffle.partitions=8 on local[4], so this also
+    pins that the SQL conf is not read."""
     path = str(tmp_path / "t6.parquet")
     spark.createDataFrame(synth.generate_local(10)).write.parquet(path)
-    out = extract_transcripts(spark.read.parquet(path), salt=4, reassemble=False)
+    out = extract_transcripts(spark.read.parquet(path), salt=4)
     cores = spark.sparkContext.defaultParallelism
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) != cores
     assert out.rdd.getNumPartitions() == cores

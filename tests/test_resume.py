@@ -59,7 +59,7 @@ def test_interrupted_run_resumes_exactly_once(spark, tmp_path):
     # no duplicates, no missing turns, and per-turn output identical to a
     # single uninterrupted pipeline run
     got = _keys(job2.result())
-    want = _keys(extract_transcripts(sdf, salt=2, partitions=4))
+    want = _keys(extract_transcripts(sdf, salt=2))
     assert len(got) == len(pdf)
     assert got == want
 

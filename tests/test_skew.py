@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ocr_spark.operators import dedup, similarity
-from ocr_spark.pipeline import INPUT_COLUMNS, extract_transcripts
+from ocr_spark.pipeline import INPUT_COLUMNS, extract_transcripts, reassemble
 
 N_BIG = 20_000
 SALT = 8
@@ -74,9 +74,7 @@ def test_salt_spreads_the_mega_conversation(spark):
 
 def test_skewed_input_extracts_correctly(spark):
     pdf = _skewed_frame()
-    out = extract_transcripts(
-        spark.createDataFrame(pdf), salt=SALT, partitions=PARTS
-    )
+    out = reassemble(extract_transcripts(spark.createDataFrame(pdf), salt=SALT))
     res = out.filter(F.col("conv_id") == "conv_mega").orderBy("turn_idx")
     rows = res.select("turn_idx", "turn_rank", "conv_turns", "extracted_text").collect()
     assert len(rows) == N_BIG

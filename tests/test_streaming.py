@@ -30,24 +30,24 @@ def test_stream_matches_batch_and_resumes_incrementally(spark, tmp_path):
     half = len(pdf) // 2
     _write_chunk(spark, pdf.iloc[:half], indir)
 
-    q = stream_extract(spark, indir, outdir, ckpt, partitions=4)
+    q = stream_extract(spark, indir, outdir, ckpt)
     q.awaitTermination()
     got1 = _keys(spark.read.parquet(outdir))
     assert len(got1) == half
 
     # second micro-deployment: new files land; restart drains ONLY them
     _write_chunk(spark, pdf.iloc[half:], indir)
-    q = stream_extract(spark, indir, outdir, ckpt, partitions=4)
+    q = stream_extract(spark, indir, outdir, ckpt)
     q.awaitTermination()
 
     got = _keys(spark.read.parquet(outdir))
     sdf = spark.createDataFrame(pdf)
-    want = _keys(extract_transcripts(sdf, salt=2, partitions=4))
+    want = _keys(extract_transcripts(sdf, salt=2))
     assert got == want  # no duplicates, no missing, byte-equal text
 
     # re-running with nothing new is a no-op
     n_files = len([f for f in os.listdir(outdir) if f.endswith(".parquet")])
-    q = stream_extract(spark, indir, outdir, ckpt, partitions=4)
+    q = stream_extract(spark, indir, outdir, ckpt)
     q.awaitTermination()
     assert _keys(spark.read.parquet(outdir)) == want
     n_files2 = len([f for f in os.listdir(outdir) if f.endswith(".parquet")])
