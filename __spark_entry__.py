@@ -48,7 +48,7 @@ def entry(spark: SparkSession) -> DataFrame:
         .alias("text"),
         F.when(F.col("doc_id") % 3 == 2, tool_payload).otherwise(F.lit("")).alias("tool"),
     )
-    return reassemble(extract_transcripts(turns, salt=8))
+    return reassemble(extract_transcripts(turns))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -12,7 +12,7 @@ Usage (cluster):
         jobs/extract_job.py \
         --input  <path or iceberg table>  \
         --output <output root>            \
-        --buckets 4096 --chunk-buckets 256 --salt 16
+        --buckets 4096 --chunk-buckets 256
 
 Usage (sandbox smoke; at ``--synthetic 200`` the lineage totals are
 889 ok / 58 rejected / 28 empty turns):
@@ -38,8 +38,8 @@ Sizing guidance at 10^12 turns:
   file per bucket it touches; measured in SCALE.md §6), so pick it large
   enough that tasks carry thousands of turns, and small enough that
   redoing one chunk after a crash stays cheap.
-- ``--salt`` >= 8 so a 10^5-turn conversation spreads over that many
-  tasks.
+- nothing to size for skew: the kernel stage hashes the row key
+  (conv_id, turn_idx), so a 10^5-turn conversation spreads over every core.
 """
 
 from __future__ import annotations
@@ -75,7 +75,6 @@ def main(argv: list[str] | None = None) -> int:
                         "catalog; --output is then a table-identifier prefix)")
     p.add_argument("--buckets", type=int, default=32)
     p.add_argument("--chunk-buckets", type=int, default=8)
-    p.add_argument("--salt", type=int, default=8)
     p.add_argument("--max-chunks", type=int, default=None,
                    help="stop after N chunk commits (testing / bounded runs)")
     p.add_argument("--synthetic", type=int, default=None, metavar="N_CONVS",
@@ -87,6 +86,10 @@ def main(argv: list[str] | None = None) -> int:
         p.error("--synthetic requires a positive conversation count")
     if args.synthetic is None and not args.input:
         p.error("either --input or --synthetic is required")
+    if args.buckets < 1 or args.chunk_buckets < 1:
+        p.error("--buckets and --chunk-buckets must be >= 1")
+    if args.max_chunks is not None and args.max_chunks < 0:
+        p.error("--max-chunks must be >= 0")
 
     spark = build_session("ocr-spark-extract")
     spark.sparkContext.setLogLevel("WARN")
@@ -108,7 +111,6 @@ def main(argv: list[str] | None = None) -> int:
         args.output,
         buckets=args.buckets,
         chunk_buckets=args.chunk_buckets,
-        salt=args.salt,
         table_format=args.table_format,
     )
     n = job.run(max_chunks=args.max_chunks)

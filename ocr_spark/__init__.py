@@ -13,8 +13,8 @@ Layout
   absence inference.  One code path shared by the single-threaded oracle and
   the pandas-on-Arrow UDF → parity by construction.
 - ``ocr_spark.oracle``    — single-threaded ground-truth runner (row loop).
-- ``ocr_spark.pipeline``  — the Spark pipeline: salted repartition →
-  mapInPandas extraction → window reassembly → lineage/metrics.
+- ``ocr_spark.pipeline``  — the Spark pipeline: repartition on the row key
+  (conv_id, turn_idx) → mapInPandas extraction → window reassembly → lineage/metrics.
 - ``ocr_spark.synth``     — deterministic transcript generator (local pandas
   and distributed Spark variants derive every row from a pure function of
   (conv_idx, turn_idx) — identical output at any parallelism).

@@ -108,7 +108,6 @@ class CheckpointedExtraction:
         ``<prefix>_data``, lineage in ``<prefix>_lineage``.
     buckets : stable hash buckets over conv_id (the resume granularity)
     chunk_buckets : buckets committed per chunk (the failure granularity)
-    salt : skew salt forwarded to the extraction repartition
     table_format : "parquet" (default; dynamic-partition-overwrite
         emulation, works everywhere) or "iceberg" (real snapshot commits
         via the V2 writeTo API; requires the iceberg-spark-runtime jar
@@ -124,18 +123,20 @@ class CheckpointedExtraction:
         *,
         buckets: int = 32,
         chunk_buckets: int = 8,
-        salt: int = 8,
         run_id: str | None = None,
         table_format: str = "parquet",
     ):
         if table_format not in ("parquet", "iceberg"):
             raise ValueError(f"unknown table_format {table_format!r}")
+        if buckets < 1 or chunk_buckets < 1:
+            raise ValueError(
+                f"buckets={buckets} and chunk_buckets={chunk_buckets} must be >= 1"
+            )
         self.spark = spark
         self.input_df = input_df
         self.output_dir = output_dir.rstrip("/")
         self.buckets = buckets
         self.chunk_buckets = chunk_buckets
-        self.salt = salt
         self.run_id = run_id or f"run_{int(time.time() * 1000):x}"
         self.table_format = table_format
         if table_format == "iceberg":
@@ -295,6 +296,8 @@ class CheckpointedExtraction:
         ``max_chunks`` bounds work for tests (simulating a crash between
         chunk commits); production passes None and runs to completion.
         """
+        if max_chunks is not None and max_chunks < 0:
+            raise ValueError(f"max_chunks must be >= 0, got {max_chunks}")
         pending = self.pending_buckets()
         chunks = [
             pending[i : i + self.chunk_buckets]
@@ -315,7 +318,7 @@ class CheckpointedExtraction:
             src = _bucketed(self.input_df, self.buckets)
             for chunk_id, chunk in enumerate(chunks):
                 subset = src.filter(F.col("bucket").isin(chunk))
-                extracted = extract_transcripts(subset.drop("bucket"), salt=self.salt)
+                extracted = extract_transcripts(subset.drop("bucket"))
                 # persisted so the data write and the lineage aggregation
                 # share ONE kernel pass (not two)
                 out = _bucketed(extracted, self.buckets).persist()

@@ -56,11 +56,11 @@ FIELD_SCHEMA = MapType(
 
 
 def extract_pipeline(spark, sf_dir):
-    """Full extraction pipeline over synthetic transcripts: salted
+    """Full extraction pipeline over synthetic transcripts: row-key
     repartition -> Arrow-batch kernel -> stable (conv_id, turn_idx) window
     reassembly.  Deterministic output."""
     df = generate_spark(spark, N_CONVS, partitions=8)
-    out = reassemble(extract_transcripts(df, salt=8))
+    out = reassemble(extract_transcripts(df))
     return out.select(
         "conv_id",
         "turn_idx",
@@ -87,7 +87,7 @@ def extract_status_counts(spark, sf_dir):
     change that alters ANY status, token count, field count, or character
     of extracted text now fails the driver's cross-engine value-hash."""
     df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df, salt=8)
+    out = extract_transcripts(df)
     return out.groupBy("status").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
@@ -114,7 +114,7 @@ def extract_fields_long(spark, sf_dir):
     and exploded to (conv_id, turn_idx, field, qty, unit, dv, status) —
     the reference's return_df shape (NFT_OCR.py:1315-1321) as a table."""
     df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df, salt=8)
+    out = extract_transcripts(df)
     parsed = out.select(
         "conv_id",
         "turn_idx",
@@ -172,14 +172,14 @@ def extract_spans_typed(spark, sf_dir):
     downstream layout operator consumes, derived JVM-side from
     extracted_text (see derive_spans)."""
     df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df, salt=8)
+    out = extract_transcripts(df)
     return derive_spans(out)
 
 
 def extract_lineage(spark, sf_dir):
     """Per-partition lineage/metrics rows for the same run (north_rule)."""
     df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df, salt=8)
+    out = extract_transcripts(df)
     return partition_metrics(out)
 
 
@@ -192,7 +192,7 @@ def extract_enriched(spark, sf_dir):
     from ocr_spark.synth import lexicon_words
 
     df = generate_spark(spark, 60, partitions=8)
-    out = extract_transcripts(df, salt=4)
+    out = extract_transcripts(df)
     return enrich_extracted(out, lexicon_words()).select(
         "conv_id", "turn_idx", "extracted_text", "corrected_text",
         "n_corrections", "language", "status",
@@ -245,7 +245,7 @@ def extract_bilingual(spark, sf_dir):
     from ocr_spark.enrich import EN_MARKERS, FR_MARKERS
 
     df = generate_spark(spark, 60, partitions=8)
-    out = extract_transcripts(df, salt=4)
+    out = extract_transcripts(df)
     blocks = out.select(
         "conv_id",
         "turn_idx",

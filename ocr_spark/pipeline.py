@@ -4,18 +4,17 @@ Replaces the reference's sequential per-file loop
 (``NFT_OCR.py:1574-1579`` ``for infile in Path(indir).glob(...)``) with:
 
     read -> select (column prune before Arrow transfer)
-         -> salted repartition -> mapInPandas
+         -> repartition on (conv_id, turn_idx) -> mapInPandas
          [-> reassemble: global (conv_id, turn_idx) window]
 
 Design notes (100 TB posture):
 - the kernel is per-turn pure, so extraction itself needs NO grouping.
-  The one shuffle before it is skew insurance: ``repartition(hash(conv_id),
-  pmod(hash(turn_idx), salt))`` spreads each conversation over ``salt``
-  buckets, so a 10^5-turn conversation cannot pin one task.  A file scan
-  does not give that for free: a split bounds bytes, not turns, so a long
-  conversation written contiguously sits in one split (SCALE.md §2).
-  ``salt=0`` skips the shuffle for a caller that vouches for its input
-  partitioning.
+  The one shuffle before it is skew insurance: hashing the row key
+  ``(conv_id, turn_idx)`` salts each conversation by its turn index, so a
+  10^5-turn conversation spreads over every kernel task instead of
+  pinning one.  A file scan does not give that for free: a split bounds
+  bytes, not turns, so a long conversation written contiguously sits in
+  one split (SCALE.md §2).
 - **reassembly** (``reassemble``): a global (conv_id, turn_idx) window
   for full-fidelity artifacts, applied by the caller that reads
   ``turn_rank``/``conv_turns``; the checkpointed job writes the raw kernel
@@ -68,37 +67,27 @@ def _extract_map(batches):
         yield extract_batch(pdf, with_spans=False)
 
 
-DEFAULT_SALT = 8
-
-
-def extract_transcripts(df: DataFrame, *, salt: int = DEFAULT_SALT) -> DataFrame:
+def extract_transcripts(df: DataFrame) -> DataFrame:
     """Run the extraction kernel over a transcripts DataFrame; returns the
     kernel output (``OUTPUT_SCHEMA``) in no particular order.
 
-    ``salt``:
-      - int > 0 (default ``DEFAULT_SALT``): skew insurance — spread each
-        conversation over ``salt`` shuffle buckets
-        (``repartition(hash(conv_id), pmod(hash(turn_idx), salt))``).
-        The repartition runs one task per core (the session's
-        ``defaultParallelism``): every kernel task and ``extract_batch``
-        call pays a fixed cost, so more, smaller tasks than cores only add
-        overhead (SCALE.md §6).  ``spark.sql.shuffle.partitions`` sizes
-        the session's other shuffles and is not read here.
-      - 0: never repartition (caller vouches for the input partitioning,
-        e.g. a bucketed table feeding a bucketed sink).
+    The kernel stage is fed by one hash repartition on the row key
+    ``(conv_id, turn_idx)`` into one task per core (the session's
+    ``defaultParallelism``): every conversation spreads over every kernel
+    task, deterministically on task retry, and more, smaller tasks than
+    cores would only add per-task overhead (SCALE.md §6).
+    ``spark.sql.shuffle.partitions`` is not read here.
 
     The output has no ``spans_json`` column; derive the span relation from
     ``extracted_text`` with ``transcripts.derive_spans``.  Wrap it in
     :func:`reassemble` for the stable per-conversation turn order.
     """
-    staged = df.select(*INPUT_COLUMNS)
-    if salt:
-        staged = staged.repartition(
-            df.sparkSession.sparkContext.defaultParallelism,
-            F.hash(F.col("conv_id")),
-            F.pmod(F.hash(F.col("turn_idx")), F.lit(salt)),
-        )
-    return staged.mapInPandas(_extract_map, OUTPUT_SCHEMA)
+    n_tasks = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.select(*INPUT_COLUMNS)
+        .repartition(n_tasks, "conv_id", "turn_idx")
+        .mapInPandas(_extract_map, OUTPUT_SCHEMA)
+    )
 
 
 def reassemble(extracted: DataFrame) -> DataFrame:

@@ -60,7 +60,7 @@ def stream_extract(
     *,
     available_now: bool = True,
 ):
-    """readStream -> `extract_transcripts` (salted repartition ->
+    """readStream -> `extract_transcripts` (row-key repartition ->
     mapInPandas kernel) -> parquet sink, with the batch output's columns
     (``pipeline.OUTPUT_SCHEMA``).  Returns the started StreamingQuery;
     callers awaitTermination().

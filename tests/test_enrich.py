@@ -33,7 +33,7 @@ def test_unique_best_corrects_and_ties_do_not(spark):
             "paprika is already right",  # exact lexicon hit, untouched
         ],
     )
-    out = enrich_extracted(extract_transcripts(df, salt=2), LEXICON)
+    out = enrich_extracted(extract_transcripts(df), LEXICON)
     rows = {r.turn_idx: r for r in out.collect()}
     assert rows[0].corrected_text == "fresh sodium sauce"
     assert rows[0].n_corrections == 1
@@ -51,7 +51,7 @@ def test_language_majority_vote(spark):
             "word salad only",
         ],
     )
-    out = enrich_extracted(extract_transcripts(df, salt=2), LEXICON)
+    out = enrich_extracted(extract_transcripts(df), LEXICON)
     rows = {r.turn_idx: r for r in out.collect()}
     assert rows[0].language == "en"
     assert rows[1].language == "fr"
@@ -60,7 +60,7 @@ def test_language_majority_vote(spark):
 
 def test_word_positions_preserved(spark):
     df = _turns(spark, ["alpha tomato beta gamma"])
-    out = enrich_extracted(extract_transcripts(df, salt=2), LEXICON)
+    out = enrich_extracted(extract_transcripts(df), LEXICON)
     r = out.collect()[0]
     assert r.corrected_text.split(" ")[0] == "alpha"
     assert r.corrected_text.split(" ")[2] == "beta"
@@ -80,7 +80,7 @@ def test_oracle_mirror_matches_spark_enrichment(spark):
         "les sauces avec des sucre pour",  # fr vote
         "",                              # token-less turn
     ]
-    extracted = extract_transcripts(_turns(spark, texts), salt=2)
+    extracted = extract_transcripts(_turns(spark, texts))
     got = (
         enrich_extracted(extracted, LEXICON)
         .select("conv_id", "turn_idx", "status",

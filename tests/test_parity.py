@@ -3,8 +3,8 @@
 BASELINE.json:15 — "per-row invariant vs the reference: per-turn text
 equality under stable turn ordering; verify with `python -m pytest -x -q`".
 
-The Spark side runs the full scale harness (salted repartition ->
-mapInPandas -> window reassembly) at parallelism 4 on deliberately shuffled
+The Spark side runs the full scale harness (repartition on the row key
+(conv_id, turn_idx) -> mapInPandas -> window reassembly) at parallelism 4 on deliberately shuffled
 input; the oracle runs the same kernel row-at-a-time single-threaded.
 Equality is byte-for-byte on extracted_text and fields_json; span parity
 is the span relation derived from the Spark output (``derive_spans``)
@@ -53,7 +53,7 @@ def _derived_span_relation(out):
 def test_spark_matches_oracle_byte_for_byte(spark):
     pdf = synth.generate_local(N_CONVS, shuffled=True)
     want = oracle_extract(pdf)
-    out = extract_transcripts(spark.createDataFrame(pdf), salt=4)
+    out = extract_transcripts(spark.createDataFrame(pdf))
     assert "spans_json" not in out.columns
     got = out.orderBy("conv_id", "turn_idx").toPandas()
 
@@ -85,7 +85,7 @@ def test_derived_spans_match_kernel(spark):
     pdf = synth.generate_local(25, shuffled=True)
     want = oracle_extract(pdf)  # kernel with inline spans
 
-    out = extract_transcripts(spark.createDataFrame(pdf), salt=4)
+    out = extract_transcripts(spark.createDataFrame(pdf))
     got_counts = out.orderBy("conv_id", "turn_idx").toPandas()
     for col in ("n_blocks", "n_lines", "n_tokens"):
         assert (got_counts[col].to_numpy() == want[col].to_numpy()).all(), col
@@ -111,7 +111,7 @@ def test_derived_spans_adversarial_tokens(spark):
             "tool": [""] * len(texts),
         }
     )
-    out = extract_transcripts(spark.createDataFrame(pdf), salt=2)
+    out = extract_transcripts(spark.createDataFrame(pdf))
     derived = _derived_span_relation(out)
     assert derived == _kernel_span_relation(oracle_extract(pdf))
     assert derived  # non-degenerate: the adversarial tokens survived cleanup
@@ -119,7 +119,7 @@ def test_derived_spans_adversarial_tokens(spark):
 
 def test_window_reassembly_columns(spark):
     pdf = synth.generate_local(20, shuffled=True)
-    out = reassemble(extract_transcripts(spark.createDataFrame(pdf), salt=4)).toPandas()
+    out = reassemble(extract_transcripts(spark.createDataFrame(pdf))).toPandas()
     g = out.groupby("conv_id")
     # turn_rank is a dense 1..n per conversation regardless of input order
     assert (g["turn_rank"].max() == g["turn_rank"].count()).all()
@@ -130,7 +130,7 @@ def test_window_reassembly_columns(spark):
 
 def test_lineage_tables(spark):
     pdf = synth.generate_local(25, shuffled=True)
-    extracted = extract_transcripts(spark.createDataFrame(pdf), salt=4)
+    extracted = extract_transcripts(spark.createDataFrame(pdf))
     extracted = extracted.cache()
     try:
         metrics = partition_metrics(extracted).toPandas()

@@ -1,9 +1,11 @@
 """Physical-plan regression guards for the extraction pipeline's scale
 posture (SCALE.md §1/§3): exactly one Python/Arrow stage, a 5-column
-scan, and the exchanges the arguments ask for — an explicit salt keeps its
-repartition, and wrapping the output in ``reassemble`` adds one more."""
+scan, one kernel exchange hashed on the row key (conv_id, turn_idx), and
+one more when the output is wrapped in ``reassemble``."""
 
 from __future__ import annotations
+
+import re
 
 from ocr_spark import synth
 from ocr_spark.pipeline import INPUT_COLUMNS, extract_transcripts, reassemble
@@ -18,15 +20,13 @@ def test_pipeline_plan_shape(spark, tmp_path):
     spark.createDataFrame(synth.generate_local(20)).write.parquet(path)
     # extra column that must be pruned out of the scan
     df = spark.read.parquet(path)
-    out = reassemble(extract_transcripts(df, salt=4))
+    out = reassemble(extract_transcripts(df))
     optimized, executed = _plan(out)
 
     assert executed.count("MapInPandas") == 1  # ONE Arrow stage, not N
     n_exchange = executed.count("Exchange")
-    assert n_exchange == 2, f"expected 2 shuffles (salt + window), got {n_exchange}"
+    assert n_exchange == 2, f"expected 2 shuffles (kernel + window), got {n_exchange}"
     # column pruning: ts never crosses into the scan output
-    import re
-
     scan = re.search(r"ReadSchema: struct<([^>]*)>", executed)
     if scan:  # formatted scan line present
         cols = {c.split(":")[0] for c in scan.group(1).split(",")}
@@ -69,18 +69,21 @@ def test_minhash_signatures_are_map_side(spark):
 def test_no_reassembly_means_single_shuffle(spark, tmp_path):
     path = str(tmp_path / "t2.parquet")
     spark.createDataFrame(synth.generate_local(10)).write.parquet(path)
-    out = extract_transcripts(spark.read.parquet(path), salt=4)
+    out = extract_transcripts(spark.read.parquet(path))
     _, executed = _plan(out)
-    assert executed.count("Exchange") == 1  # only the salt repartition
+    assert executed.count("Exchange") == 1  # only the kernel repartition
+    # the row key is the whole partitioning expression: no salt arithmetic
+    assert re.search(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+, \d+\)", executed)
+    assert "pmod" not in executed
 
 
 def test_default_partitions_is_one_task_per_core(spark, tmp_path):
-    """The salted repartition runs one kernel task per core.  The test
+    """The kernel repartition runs one kernel task per core.  The test
     session sets spark.sql.shuffle.partitions=8 on local[4], so this also
     pins that the SQL conf is not read."""
     path = str(tmp_path / "t6.parquet")
     spark.createDataFrame(synth.generate_local(10)).write.parquet(path)
-    out = extract_transcripts(spark.read.parquet(path), salt=4)
+    out = extract_transcripts(spark.read.parquet(path))
     cores = spark.sparkContext.defaultParallelism
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) != cores
     assert out.rdd.getNumPartitions() == cores

@@ -4,7 +4,8 @@ The load-bearing property of the vectorized kernel is *batch-split
 invariance*: extracting a frame in one batch must equal extracting any
 partition of it batch-by-batch and concatenating — this is exactly what
 guarantees the Spark `mapInPandas` output (arbitrary Arrow batching,
-arbitrary row order per the salted repartition) matches the
+arbitrary row order per the row-key repartition, which splits every
+conversation over all kernel tasks) matches the
 single-threaded oracle byte-for-byte.  Also: the kernel must never crash
 on arbitrary unicode payloads (F11 null-guard semantics).
 """

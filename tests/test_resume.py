@@ -19,7 +19,7 @@ def committed(spark, tmp_path_factory):
     pdf = synth.generate_local(6, shuffled=True)
     out = str(tmp_path_factory.mktemp("ckpt_commit") / "out")
     job = CheckpointedExtraction(
-        spark, spark.createDataFrame(pdf), out, buckets=8, chunk_buckets=4, salt=2
+        spark, spark.createDataFrame(pdf), out, buckets=8, chunk_buckets=4
     )
     assert job.run() == 2
     return job
@@ -38,18 +38,14 @@ def test_interrupted_run_resumes_exactly_once(spark, tmp_path):
     out = str(tmp_path / "ckpt")
 
     # first run "crashes" after 2 of 4 chunk commits
-    job1 = CheckpointedExtraction(
-        spark, sdf, out, buckets=8, chunk_buckets=2, salt=2
-    )
+    job1 = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=2)
     committed = job1.run(max_chunks=2)
     assert committed == 2
     assert len(job1.pending_buckets()) == 4
     assert not job1.validate()["complete"]
 
     # restart: a fresh driver resumes from lineage and finishes
-    job2 = CheckpointedExtraction(
-        spark, sdf, out, buckets=8, chunk_buckets=2, salt=2
-    )
+    job2 = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=2)
     assert len(job2.pending_buckets()) == 4
     job2.run()
     audit = job2.validate()
@@ -59,14 +55,12 @@ def test_interrupted_run_resumes_exactly_once(spark, tmp_path):
     # no duplicates, no missing turns, and per-turn output identical to a
     # single uninterrupted pipeline run
     got = _keys(job2.result())
-    want = _keys(extract_transcripts(sdf, salt=2))
+    want = _keys(extract_transcripts(sdf))
     assert len(got) == len(pdf)
     assert got == want
 
     # re-running a completed job is a no-op
-    job3 = CheckpointedExtraction(
-        spark, sdf, out, buckets=8, chunk_buckets=2, salt=2
-    )
+    job3 = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=2)
     assert job3.run() == 0
     assert _keys(job3.result()) == want
 
@@ -75,7 +69,7 @@ def test_stable_turn_order_after_resume(spark, tmp_path):
     pdf = synth.generate_local(12, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt2")
-    job = CheckpointedExtraction(spark, sdf, out, buckets=4, chunk_buckets=1, salt=2)
+    job = CheckpointedExtraction(spark, sdf, out, buckets=4, chunk_buckets=1)
     job.run(max_chunks=1)
     job.run()
     res = job.result().orderBy("conv_id", "turn_idx").toPandas()
@@ -93,14 +87,14 @@ def test_empty_buckets_complete_and_rerun_is_noop(spark, tmp_path):
     pdf = synth.generate_local(3, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt_sparse")
-    job = CheckpointedExtraction(spark, sdf, out, buckets=32, chunk_buckets=8, salt=2)
+    job = CheckpointedExtraction(spark, sdf, out, buckets=32, chunk_buckets=8)
     job.run()
     assert job.pending_buckets() == []
     audit = job.validate(deep=True)
     assert audit["complete"], audit
     assert audit["lineage_turns"] == len(pdf)
     # a fresh driver over the same output does nothing
-    job2 = CheckpointedExtraction(spark, sdf, out, buckets=32, chunk_buckets=8, salt=2)
+    job2 = CheckpointedExtraction(spark, sdf, out, buckets=32, chunk_buckets=8)
     assert job2.run() == 0
 
 
@@ -114,7 +108,7 @@ def test_chunk_writes_at_most_one_file_per_bucket_per_core(spark, tmp_path):
     pdf = synth.generate_local(N_CONVS, shuffled=True)
     out = tmp_path / "ckpt_files"
     job = CheckpointedExtraction(
-        spark, spark.createDataFrame(pdf), str(out), buckets=8, chunk_buckets=4, salt=8
+        spark, spark.createDataFrame(pdf), str(out), buckets=8, chunk_buckets=4
     )
     assert job.run() == 2
     chunk_of = {r.bucket: r.chunk_id for r in job.lineage().collect()}
@@ -192,7 +186,7 @@ def test_unreadable_lineage_raises(spark, tmp_path):
 
     def job(name):
         return CheckpointedExtraction(
-            spark, sdf, str(tmp_path / name), buckets=8, chunk_buckets=4, salt=2
+            spark, sdf, str(tmp_path / name), buckets=8, chunk_buckets=4
         )
 
     assert job("missing").pending_buckets() == list(range(8))
@@ -214,14 +208,14 @@ def test_bucket_scheme_mismatch_refused(spark, tmp_path):
     pdf = synth.generate_local(6, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt_scheme")
-    CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2).run(
+    CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4).run(
         max_chunks=1
     )
-    bad = CheckpointedExtraction(spark, sdf, out, buckets=16, chunk_buckets=4, salt=2)
+    bad = CheckpointedExtraction(spark, sdf, out, buckets=16, chunk_buckets=4)
     with pytest.raises(ValueError, match="bucket-scheme mismatch"):
         bad.run()
     # the original scheme still resumes fine
-    ok = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2)
+    ok = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4)
     ok.run()
     assert ok.validate(deep=True)["complete"]
 
@@ -240,15 +234,15 @@ def test_span_mode_mismatch_refused(spark, tmp_path):
     for name, (rows, schema) in legacy.items():
         out = str(tmp_path / name)
         spark.createDataFrame(rows, schema).write.parquet(f"{out}/_lineage")
-        bad = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2)
+        bad = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4)
         with pytest.raises(ValueError, match="span-mode mismatch"):
             bad.run()
 
     out = str(tmp_path / "fresh")
-    CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2).run(
+    CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4).run(
         max_chunks=1
     )
-    ok = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4, salt=2)
+    ok = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4)
     ok.run()
     assert ok.validate(deep=True)["complete"]
     assert "spans_json" not in ok.result().columns
@@ -273,6 +267,35 @@ def test_job_script_runs_without_pythonpath(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "'complete': True" in proc.stdout
+
+
+def test_non_positive_sizes_are_refused(spark, tmp_path):
+    """A bucket count below 1 would commit no chunk yet audit complete, and
+    max_chunks=-1 would silently skip the last chunk: the constructor,
+    run() and the job's argparse refuse them."""
+    import os
+    import subprocess
+    import sys
+
+    sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
+    out = str(tmp_path / "ckpt_sizes")
+    for sizes in ({"buckets": 0}, {"chunk_buckets": 0}, {"buckets": -4}):
+        with pytest.raises(ValueError, match="must be >= 1"):
+            CheckpointedExtraction(spark, sdf, out, **sizes)
+    job = CheckpointedExtraction(spark, sdf, out, buckets=4, chunk_buckets=1)
+    with pytest.raises(ValueError, match="max_chunks"):
+        job.run(max_chunks=-1)
+    assert job.pending_buckets() == [0, 1, 2, 3]
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = os.path.join(root, "jobs", "extract_job.py")
+    for bad in (["--buckets", "0"], ["--chunk-buckets", "0"], ["--max-chunks", "-1"]):
+        proc = subprocess.run(
+            [sys.executable, script, "--synthetic", "1", "--output", out, *bad],
+            capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 2, (bad, proc.stdout[-2000:], proc.stderr[-2000:])
+        assert "must be >= " in proc.stderr, bad
 
 
 def test_iceberg_backend_detection(spark, tmp_path):
@@ -302,7 +325,7 @@ def test_overwrite_mode_restored(spark, tmp_path):
     pdf = synth.generate_local(4, shuffled=False)
     job = CheckpointedExtraction(
         spark, spark.createDataFrame(pdf), str(tmp_path / "c"), buckets=4,
-        chunk_buckets=4, salt=2,
+        chunk_buckets=4,
     )
     job.run()
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC") == prev

@@ -42,7 +42,7 @@ def test_stream_matches_batch_and_resumes_incrementally(spark, tmp_path):
 
     got = _keys(spark.read.parquet(outdir))
     sdf = spark.createDataFrame(pdf)
-    want = _keys(extract_transcripts(sdf, salt=2))
+    want = _keys(extract_transcripts(sdf))
     assert got == want  # no duplicates, no missing, byte-equal text
 
     # re-running with nothing new is a no-op
