@@ -12,32 +12,32 @@ Usage (cluster):
         jobs/extract_job.py \
         --input  <path or iceberg table>  \
         --output <output root>            \
-        --buckets 4096 --chunk-buckets 256
+        --buckets 16
 
 Usage (sandbox smoke; at ``--synthetic 200`` the lineage totals are
 889 ok / 58 rejected / 28 empty turns):
 
     python jobs/extract_job.py --synthetic 200 --output /tmp/extract_out
 
-Input is an Iceberg transcripts table (``--format iceberg`` +
-``--catalog-conf`` on a cluster with the Iceberg runtime) or a parquet
-directory of the same schema (conv_id, turn_idx, role, text, tool, ts).
-The job is resumable: re-running with the same --output continues from
-the lineage table (see ocr_spark/checkpoint.py); completed buckets are
-skipped, half-written buckets are overwritten idempotently.
+Input is an Iceberg transcripts table (``--format iceberg`` on a cluster
+with the Iceberg runtime, its catalog configured with ``spark-submit
+--conf spark.sql.catalog.<name>=...``) or a parquet directory of the same
+schema (conv_id, turn_idx, role, text, tool, ts).  The job is resumable:
+re-running with the same --output continues from the lineage table (see
+ocr_spark/checkpoint.py); completed buckets are skipped, a half-written
+bucket is overwritten idempotently.
 
 Sizing guidance at 10^12 turns:
 
-- ``--buckets`` ~= executors * 8: the resume granularity, well under one
-  executor-hour of work per bucket.
-- ``--chunk-buckets`` sets the commit granularity AND the task size.  Each
-  chunk runs its kernel stage as one task per core (the session's default
-  parallelism), so a task carries about (chunk turns / total cores) turns
-  and the chunk writes about chunk-buckets * cores data files.  Every task
-  pays a fixed cost (Python worker hand-off, kernel call setup, one parquet
-  file per bucket it touches; measured in SCALE.md §6), so pick it large
-  enough that tasks carry thousands of turns, and small enough that
-  redoing one chunk after a crash stays cheap.
+- ``--buckets`` is the only size: each bucket is one commit, so it sets the
+  resume granularity, the work redone after a crash AND the task size.
+  Each chunk runs its kernel stage as one task per core (the session's
+  default parallelism), so a task carries about (input turns / buckets /
+  total cores) turns and a chunk writes at most one data file per core.
+  Every task pays a fixed cost (Python worker hand-off, kernel call setup,
+  one parquet file; measured in SCALE.md §6), so pick it small enough that
+  tasks carry thousands of turns, and large enough that redoing one bucket
+  after a crash stays cheap.
 - nothing to size for skew: the kernel stage hashes the row key
   (conv_id, turn_idx), so a 10^5-turn conversation spreads over every core.
 """
@@ -73,8 +73,8 @@ def main(argv: list[str] | None = None) -> int:
                    help="OUTPUT backend: parquet emulation (default) or real "
                         "Iceberg snapshot commits (needs the runtime jar + a "
                         "catalog; --output is then a table-identifier prefix)")
-    p.add_argument("--buckets", type=int, default=32)
-    p.add_argument("--chunk-buckets", type=int, default=8)
+    p.add_argument("--buckets", type=int, default=4,
+                   help="conv_id hash buckets, committed one per chunk")
     p.add_argument("--max-chunks", type=int, default=None,
                    help="stop after N chunk commits (testing / bounded runs)")
     p.add_argument("--synthetic", type=int, default=None, metavar="N_CONVS",
@@ -86,8 +86,8 @@ def main(argv: list[str] | None = None) -> int:
         p.error("--synthetic requires a positive conversation count")
     if args.synthetic is None and not args.input:
         p.error("either --input or --synthetic is required")
-    if args.buckets < 1 or args.chunk_buckets < 1:
-        p.error("--buckets and --chunk-buckets must be >= 1")
+    if args.buckets < 1:
+        p.error("--buckets must be >= 1")
     if args.max_chunks is not None and args.max_chunks < 0:
         p.error("--max-chunks must be >= 0")
 
@@ -110,7 +110,6 @@ def main(argv: list[str] | None = None) -> int:
         df,
         args.output,
         buckets=args.buckets,
-        chunk_buckets=args.chunk_buckets,
         table_format=args.table_format,
     )
     n = job.run(max_chunks=args.max_chunks)

@@ -7,19 +7,22 @@ Model
 The input keyspace is divided into ``buckets`` stable hash buckets of
 ``conv_id`` (`pmod(hash(conv_id), buckets)`) — a conversation always lands
 in the same bucket, so bucket completion is a durable unit of progress.
-Buckets are processed in chunks; after each chunk the job commits
+A bucket is also the unit of commit: each pending bucket is one chunk, and
+after it the job commits
 
 1. the extracted rows, written ``partitionBy(bucket)`` with dynamic
    partition overwrite — re-running a half-finished chunk *overwrites* its
-   buckets instead of duplicating them (idempotent, exactly-once per
+   bucket instead of duplicating it (idempotent, exactly-once per
    bucket), and
-2. one lineage row per bucket to ``<output>/_lineage`` — (bucket, conv_id
-   range, turn range, status counters, token/field totals, run_id,
+2. one lineage row for the bucket to ``<output>/_lineage`` — (bucket,
+   conv_id range, turn range, status counters, token/field totals, run_id,
    chunk_id) — the generalized flags model of the reference
-   (``NFT_OCR.py:1470-1478,1510`` per-file status lists).  The rows are
-   built in the JVM (no ``createDataFrame`` of a Python list, which would
-   run a PythonRDD through a second worker pool) and written by one task
-   as one file per chunk.
+   (``NFT_OCR.py:1470-1478,1510`` per-file status lists).  The row is a
+   global aggregate over the committed ``bucket=b`` partition read back
+   from storage, so it attests what was written (an empty bucket still
+   gets one zeroed row).  It is built in the JVM (no ``createDataFrame`` of
+   a Python list, which would run a PythonRDD through a second worker
+   pool) and written by one task as one file per chunk.
 
 On restart, completed buckets are read from the lineage table and skipped
 (the anti-join resume of SURVEY §2.10; the reference's precedent is its
@@ -58,7 +61,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.pipeline import extract_transcripts, metrics_agg, reassemble
+from ocr_spark.pipeline import OUTPUT_SCHEMA, extract_transcripts, metrics_agg, reassemble
 
 LINEAGE_SUBDIR = "_lineage"
 DATA_SUBDIR = "data"
@@ -67,6 +70,9 @@ _COUNTS = (
     "turn_count", "ok_count", "empty_count", "rejected_count", "failed_count",
     "token_count", "field_count",
 )
+
+# the committed data: ``data/`` is partitioned by bucket
+DATA_SCHEMA = StructType([*OUTPUT_SCHEMA, StructField("bucket", IntegerType())])
 
 # what ``run`` appends per bucket: ``metrics_agg`` over the bucket, then the
 # run bookkeeping.  Lineage is read with this schema, so columns that
@@ -91,10 +97,6 @@ LINEAGE_SCHEMA = StructType(
 _NO_LINEAGE = {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"}
 
 
-def _bucketed(df: DataFrame, buckets: int) -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.hash(F.col("conv_id")), F.lit(buckets)))
-
-
 class CheckpointedExtraction:
     """Drive `extract_transcripts` over an input table in resumable chunks.
 
@@ -106,8 +108,8 @@ class CheckpointedExtraction:
         With ``table_format="iceberg"`` this is instead an Iceberg table
         identifier prefix (``catalog.db.name``): data lands in
         ``<prefix>_data``, lineage in ``<prefix>_lineage``.
-    buckets : stable hash buckets over conv_id (the resume granularity)
-    chunk_buckets : buckets committed per chunk (the failure granularity)
+    buckets : stable hash buckets over conv_id; each is one commit, so
+        this sets both the resume granularity and the chunk size
     table_format : "parquet" (default; dynamic-partition-overwrite
         emulation, works everywhere) or "iceberg" (real snapshot commits
         via the V2 writeTo API; requires the iceberg-spark-runtime jar
@@ -121,22 +123,18 @@ class CheckpointedExtraction:
         input_df: DataFrame,
         output_dir: str,
         *,
-        buckets: int = 32,
-        chunk_buckets: int = 8,
+        buckets: int = 4,
         run_id: str | None = None,
         table_format: str = "parquet",
     ):
         if table_format not in ("parquet", "iceberg"):
             raise ValueError(f"unknown table_format {table_format!r}")
-        if buckets < 1 or chunk_buckets < 1:
-            raise ValueError(
-                f"buckets={buckets} and chunk_buckets={chunk_buckets} must be >= 1"
-            )
+        if buckets < 1:
+            raise ValueError(f"buckets={buckets} must be >= 1")
         self.spark = spark
         self.input_df = input_df
         self.output_dir = output_dir.rstrip("/")
         self.buckets = buckets
-        self.chunk_buckets = chunk_buckets
         self.run_id = run_id or f"run_{int(time.time() * 1000):x}"
         self.table_format = table_format
         if table_format == "iceberg":
@@ -183,10 +181,10 @@ class CheckpointedExtraction:
 
     # -- storage backends ---------------------------------------------------
 
-    def _read(self, target: str) -> DataFrame:
+    def _read_data(self) -> DataFrame:
         if self.table_format == "iceberg":
-            return self.spark.read.table(target)
-        return self.spark.read.parquet(target)
+            return self.spark.read.table(self.data_dir)
+        return self.spark.read.schema(DATA_SCHEMA).parquet(self.data_dir)
 
     def _read_lineage(self) -> DataFrame:
         if self.table_format == "iceberg":
@@ -291,20 +289,14 @@ class CheckpointedExtraction:
     # -- execution ----------------------------------------------------------
 
     def run(self, max_chunks: int | None = None) -> int:
-        """Process pending buckets chunk by chunk; returns chunks committed.
+        """Commit pending buckets one chunk each; returns chunks committed.
 
         ``max_chunks`` bounds work for tests (simulating a crash between
         chunk commits); production passes None and runs to completion.
         """
         if max_chunks is not None and max_chunks < 0:
             raise ValueError(f"max_chunks must be >= 0, got {max_chunks}")
-        pending = self.pending_buckets()
-        chunks = [
-            pending[i : i + self.chunk_buckets]
-            for i in range(0, len(pending), self.chunk_buckets)
-        ]
-        if max_chunks is not None:
-            chunks = chunks[:max_chunks]
+        chunks = self.pending_buckets()[:max_chunks]
 
         # Dynamic overwrite: INSERT OVERWRITE only touches the bucket
         # partitions present in the written frame (Iceberg's
@@ -314,26 +306,18 @@ class CheckpointedExtraction:
         conf_key = "spark.sql.sources.partitionOverwriteMode"
         prev_mode = self.spark.conf.get(conf_key, None)
         self.spark.conf.set(conf_key, "dynamic")
+        bucket_of = F.pmod(F.hash(F.col("conv_id")), F.lit(self.buckets))
         try:
-            src = _bucketed(self.input_df, self.buckets)
-            for chunk_id, chunk in enumerate(chunks):
-                subset = src.filter(F.col("bucket").isin(chunk))
-                extracted = extract_transcripts(subset.drop("bucket"))
-                # persisted so the data write and the lineage aggregation
-                # share ONE kernel pass (not two)
-                out = _bucketed(extracted, self.buckets).persist()
-                self._commit_data(out)
-                # lineage left-joined with the chunk's bucket list so
-                # buckets with zero input rows still get a (zeroed) lineage
-                # row — without it they would never be marked complete and
-                # every resume would rerun them forever.  The list is a
-                # one-partition JVM relation with the aggregate broadcast
-                # onto it: one Python-free task writes one lineage file.
-                chunk_df = self.spark.range(0, 1, 1, 1).select(
-                    F.explode(F.array(*(F.lit(int(b)) for b in chunk))).alias("bucket")
-                )
+            for chunk_id, b in enumerate(chunks):
+                out = extract_transcripts(self.input_df.filter(bucket_of == b))
+                self._commit_data(out.withColumn("bucket", F.lit(b)))
+                # a global aggregate is one row even over no rows, so an
+                # empty bucket is still marked complete (its sums read as
+                # null, hence the fillna) instead of rerunning forever
+                committed = self._read_data().filter(F.col("bucket") == b)
                 lineage_rows = (
-                    chunk_df.join(F.broadcast(metrics_agg(out, "bucket")), "bucket", "left")
+                    metrics_agg(committed)
+                    .select(F.lit(b).alias("bucket"), "*")
                     .fillna(0, subset=list(_COUNTS))
                     .withColumn("buckets", F.lit(self.buckets))
                     # constant, but kept: the lineage table is durable and
@@ -347,7 +331,6 @@ class CheckpointedExtraction:
                 # leaves the bucket un-marked -> it is simply redone (and the
                 # per-bucket overwrite makes the redo idempotent).
                 self._commit_lineage(lineage_rows)
-                out.unpersist()
         finally:
             if prev_mode is None:
                 self.spark.conf.unset(conf_key)
@@ -359,7 +342,7 @@ class CheckpointedExtraction:
 
     def result(self) -> DataFrame:
         """Extracted rows with the stable-order reassembly window applied."""
-        return reassemble(self._read(self.data_dir))
+        return reassemble(self._read_data())
 
     def validate(self, deep: bool = False) -> dict:
         """Coverage audit from lineage alone (no input rescan): complete

@@ -9,13 +9,17 @@ English part and the French part (label packaging prints the same list
 twice, once per language), each then language-ID'd and corrected
 separately.
 
-The ``regex`` module (fuzzy ``{e<=2}``) isn't available here, so the
-fuzzy match is token-level: a whitespace token within Levenshtein
+The fuzzy match is token-level: a whitespace token within Levenshtein
 distance 2 of the literal ``Ingredients`` (case-sensitive, like the
 reference's pattern) counts as an occurrence at its character offset.
 For header-like tokens ("Ingredients:", "Ingrédients", "lngredients")
 this is the same acceptance set; pathological mid-word substring matches
-the regex form would also hit are not meaningful headers.
+the regex form would also hit are not meaningful headers.  The ``regex``
+module (fuzzy ``{e<=2}``) is installed, but the token form stays: it
+keeps mid-word hits out by construction, and the 3-gram prefilter below
+already confines the Levenshtein check to a few candidate tokens per row.
+Trying ``regex`` on those candidates is a kernel change of its own
+(ROADMAP item 5), under byte parity and batch-split invariance.
 
 The split runs BEFORE the cleanup chain (the reference splits raw OCR
 text before ``process_str``), so the marker's capitalization survives to

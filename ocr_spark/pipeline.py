@@ -102,14 +102,15 @@ def reassemble(extracted: DataFrame) -> DataFrame:
     )
 
 
-def metrics_agg(extracted: DataFrame, group_col: str) -> DataFrame:
+def metrics_agg(extracted: DataFrame, *group_cols: str) -> DataFrame:
     """Shared lineage/metrics aggregation (flags model of
     ``NFT_OCR.py:1470-1478`` generalized per north_rule): conv_id/turn
-    ranges + status counters + token/field totals per ``group_col``.
+    ranges + status counters + token/field totals per ``group_cols``, or
+    one row over the whole frame (even an empty one) with none.
     Used by both the per-physical-partition metrics below and the
     per-bucket checkpoint lineage (ocr_spark/checkpoint.py) so the two
     tables can never drift apart."""
-    return extracted.groupBy(group_col).agg(
+    return extracted.groupBy(*group_cols).agg(
         F.min("conv_id").alias("conv_id_min"),
         F.max("conv_id").alias("conv_id_max"),
         F.min("turn_idx").alias("turn_idx_min"),

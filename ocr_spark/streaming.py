@@ -42,12 +42,16 @@ TRANSCRIPT_SCHEMA = StructType(
 )
 
 
-def stream_source(spark: SparkSession, input_dir: str, max_files: int = 64) -> DataFrame:
+# input files per micro-batch
+MAX_FILES_PER_TRIGGER = 64
+
+
+def stream_source(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming scan of a transcripts parquet directory.  The checkpoint
     remembers processed files, so re-runs only ingest new arrivals."""
     return (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
 

@@ -15,13 +15,11 @@ N_CONVS = 40
 
 @pytest.fixture(scope="module")
 def committed(spark, tmp_path_factory):
-    """One uninterrupted run: 8 buckets in 2 chunks, some buckets empty."""
+    """One uninterrupted run: 8 buckets in 8 chunks, some buckets empty."""
     pdf = synth.generate_local(6, shuffled=True)
     out = str(tmp_path_factory.mktemp("ckpt_commit") / "out")
-    job = CheckpointedExtraction(
-        spark, spark.createDataFrame(pdf), out, buckets=8, chunk_buckets=4
-    )
-    assert job.run() == 2
+    job = CheckpointedExtraction(spark, spark.createDataFrame(pdf), out, buckets=8)
+    assert job.run() == 8
     return job
 
 
@@ -32,21 +30,32 @@ def _keys(df):
     )
 
 
-def test_interrupted_run_resumes_exactly_once(spark, tmp_path):
+def test_interrupted_run_resumes_exactly_once(spark, tmp_path, monkeypatch):
     pdf = synth.generate_local(N_CONVS, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt")
 
-    # first run "crashes" after 2 of 4 chunk commits
-    job1 = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=2)
-    committed = job1.run(max_chunks=2)
-    assert committed == 2
-    assert len(job1.pending_buckets()) == 4
+    # first run "crashes" after 3 of 6 chunk commits
+    job1 = CheckpointedExtraction(spark, sdf, out, buckets=6)
+    committed = job1.run(max_chunks=3)
+    assert committed == 3
+    assert job1.pending_buckets() == [3, 4, 5]
     assert not job1.validate()["complete"]
 
+    # then crashes between the 4th chunk's data and lineage commits: bucket
+    # 3's rows are written but unmarked, so the resume must redo them
+    def crash(rows):
+        raise RuntimeError("crash before lineage")
+
+    monkeypatch.setattr(job1, "_commit_lineage", crash)
+    with pytest.raises(RuntimeError, match="crash before lineage"):
+        job1.run()
+    assert (tmp_path / "ckpt" / "data" / "bucket=3").is_dir()
+    assert job1.pending_buckets() == [3, 4, 5]
+
     # restart: a fresh driver resumes from lineage and finishes
-    job2 = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=2)
-    assert len(job2.pending_buckets()) == 4
+    job2 = CheckpointedExtraction(spark, sdf, out, buckets=6)
+    assert job2.pending_buckets() == [3, 4, 5]
     job2.run()
     audit = job2.validate()
     assert audit["complete"], audit
@@ -60,7 +69,7 @@ def test_interrupted_run_resumes_exactly_once(spark, tmp_path):
     assert got == want
 
     # re-running a completed job is a no-op
-    job3 = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=2)
+    job3 = CheckpointedExtraction(spark, sdf, out, buckets=6)
     assert job3.run() == 0
     assert _keys(job3.result()) == want
 
@@ -69,7 +78,7 @@ def test_stable_turn_order_after_resume(spark, tmp_path):
     pdf = synth.generate_local(12, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt2")
-    job = CheckpointedExtraction(spark, sdf, out, buckets=4, chunk_buckets=1)
+    job = CheckpointedExtraction(spark, sdf, out, buckets=4)
     job.run(max_chunks=1)
     job.run()
     res = job.result().orderBy("conv_id", "turn_idx").toPandas()
@@ -87,37 +96,60 @@ def test_empty_buckets_complete_and_rerun_is_noop(spark, tmp_path):
     pdf = synth.generate_local(3, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt_sparse")
-    job = CheckpointedExtraction(spark, sdf, out, buckets=32, chunk_buckets=8)
+    job = CheckpointedExtraction(spark, sdf, out, buckets=8)
     job.run()
     assert job.pending_buckets() == []
     audit = job.validate(deep=True)
     assert audit["complete"], audit
     assert audit["lineage_turns"] == len(pdf)
     # a fresh driver over the same output does nothing
-    job2 = CheckpointedExtraction(spark, sdf, out, buckets=32, chunk_buckets=8)
+    job2 = CheckpointedExtraction(spark, sdf, out, buckets=8)
     assert job2.run() == 0
 
 
-def test_chunk_writes_at_most_one_file_per_bucket_per_core(spark, tmp_path):
-    """Each chunk's kernel stage runs one task per core, so a chunk writes
-    at most chunk_buckets x defaultParallelism data files — not one per
-    bucket per spark.sql.shuffle.partitions task."""
+def test_chunk_writes_at_most_one_file_per_core(spark, tmp_path):
+    """A chunk is one bucket and its kernel stage runs one task per core,
+    so a chunk writes at most defaultParallelism data files — not one per
+    bucket per core, nor one per spark.sql.shuffle.partitions task."""
     import collections
     import pathlib
 
     pdf = synth.generate_local(N_CONVS, shuffled=True)
     out = tmp_path / "ckpt_files"
-    job = CheckpointedExtraction(
-        spark, spark.createDataFrame(pdf), str(out), buckets=8, chunk_buckets=4
-    )
-    assert job.run() == 2
+    job = CheckpointedExtraction(spark, spark.createDataFrame(pdf), str(out), buckets=4)
+    job.run()
     chunk_of = {r.bucket: r.chunk_id for r in job.lineage().collect()}
     files = collections.Counter(
         chunk_of[int(f.parent.name.split("=")[1])]
         for f in pathlib.Path(out, "data").glob("bucket=*/*.parquet")
     )
-    assert sorted(files) == [0, 1]
-    assert max(files.values()) <= 4 * spark.sparkContext.defaultParallelism, files
+    assert max(files.values()) <= spark.sparkContext.defaultParallelism, files
+    assert sorted(files) == [0, 1, 2, 3], files
+
+
+def test_empty_first_bucket_commits_zeroed_lineage(spark, tmp_path):
+    """A fresh output whose first pending bucket has no input rows: its
+    chunk writes no data file, the lineage read-back over the (still
+    file-less) data table yields one zeroed row, and the run goes on to
+    finish the other buckets."""
+    from pyspark.sql import functions as F
+
+    sdf = spark.createDataFrame(synth.generate_local(6, shuffled=True)).filter(
+        F.pmod(F.hash("conv_id"), F.lit(4)) != 0
+    )
+    n_turns = sdf.count()
+    out = str(tmp_path / "ckpt_empty_first")
+    job = CheckpointedExtraction(spark, sdf, out, buckets=4)
+    assert job.run(max_chunks=1) == 1
+    (row,) = job.lineage().collect()
+    assert (row.bucket, row.chunk_id, row.conv_id_min) == (0, 0, None)
+    assert all(row[c] == 0 for c in ("turn_count", "ok_count", "token_count"))
+    assert job.pending_buckets() == [1, 2, 3]
+
+    assert job.run() == 3
+    audit = job.validate(deep=True)
+    assert audit["complete"] and audit["lineage_turns"] == n_turns, audit
+    assert _keys(job.result()) == _keys(extract_transcripts(sdf))
 
 
 def test_chunk_commits_one_lineage_file(committed):
@@ -127,15 +159,15 @@ def test_chunk_commits_one_lineage_file(committed):
     import pyarrow.parquet as pq
 
     files = sorted(pathlib.Path(committed.lineage_dir).glob("*.parquet"))
-    chunk_ids = [set(pq.read_table(f).column("chunk_id").to_pylist()) for f in files]
-    assert sorted(map(sorted, chunk_ids)) == [[0], [1]], chunk_ids
+    chunk_ids = [pq.read_table(f).column("chunk_id").to_pylist() for f in files]
+    assert sorted(chunk_ids) == [[c] for c in range(8)], chunk_ids
 
 
 def test_lineage_rows_match_reference(spark, committed):
     """Lineage columns, types, order and values (``committed_at`` aside)
     equal a per-bucket ``metrics_agg`` of the committed data left-joined
-    onto the chunk's bucket list with zeroed counts, and match the schema
-    the lineage is read with."""
+    onto the bucket list with zeroed counts, chunk_id in pending order, and
+    match the schema the lineage is read with."""
     from pyspark.sql import functions as F
 
     counts = [
@@ -150,7 +182,7 @@ def test_lineage_rows_match_reference(spark, committed):
         .withColumn("buckets", F.lit(8))
         .withColumn("spans", F.lit(False))
         .withColumn("run_id", F.lit(committed.run_id))
-        .withColumn("chunk_id", F.expr("bucket div 4").cast("int"))
+        .withColumn("chunk_id", F.col("bucket"))
         .withColumn("committed_at", F.current_timestamp())
     )
     lin = spark.read.parquet(committed.lineage_dir)
@@ -185,9 +217,7 @@ def test_unreadable_lineage_raises(spark, tmp_path):
     sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
 
     def job(name):
-        return CheckpointedExtraction(
-            spark, sdf, str(tmp_path / name), buckets=8, chunk_buckets=4
-        )
+        return CheckpointedExtraction(spark, sdf, str(tmp_path / name), buckets=8)
 
     assert job("missing").pending_buckets() == list(range(8))
     (tmp_path / "no_files" / "_lineage").mkdir(parents=True)
@@ -208,14 +238,12 @@ def test_bucket_scheme_mismatch_refused(spark, tmp_path):
     pdf = synth.generate_local(6, shuffled=True)
     sdf = spark.createDataFrame(pdf)
     out = str(tmp_path / "ckpt_scheme")
-    CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4).run(
-        max_chunks=1
-    )
-    bad = CheckpointedExtraction(spark, sdf, out, buckets=16, chunk_buckets=4)
+    CheckpointedExtraction(spark, sdf, out, buckets=4).run(max_chunks=1)
+    bad = CheckpointedExtraction(spark, sdf, out, buckets=8)
     with pytest.raises(ValueError, match="bucket-scheme mismatch"):
         bad.run()
     # the original scheme still resumes fine
-    ok = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4)
+    ok = CheckpointedExtraction(spark, sdf, out, buckets=4)
     ok.run()
     assert ok.validate(deep=True)["complete"]
 
@@ -234,15 +262,13 @@ def test_span_mode_mismatch_refused(spark, tmp_path):
     for name, (rows, schema) in legacy.items():
         out = str(tmp_path / name)
         spark.createDataFrame(rows, schema).write.parquet(f"{out}/_lineage")
-        bad = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4)
+        bad = CheckpointedExtraction(spark, sdf, out, buckets=8)
         with pytest.raises(ValueError, match="span-mode mismatch"):
             bad.run()
 
     out = str(tmp_path / "fresh")
-    CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4).run(
-        max_chunks=1
-    )
-    ok = CheckpointedExtraction(spark, sdf, out, buckets=8, chunk_buckets=4)
+    CheckpointedExtraction(spark, sdf, out, buckets=4).run(max_chunks=1)
+    ok = CheckpointedExtraction(spark, sdf, out, buckets=4)
     ok.run()
     assert ok.validate(deep=True)["complete"]
     assert "spans_json" not in ok.result().columns
@@ -260,7 +286,7 @@ def test_job_script_runs_without_pythonpath(tmp_path):
     proc = subprocess.run(
         [
             sys.executable, os.path.join(root, "jobs", "extract_job.py"),
-            "--synthetic", "3", "--buckets", "2", "--chunk-buckets", "2",
+            "--synthetic", "3", "--buckets", "2",
             "--output", str(tmp_path / "out"),
         ],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
@@ -279,17 +305,17 @@ def test_non_positive_sizes_are_refused(spark, tmp_path):
 
     sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
     out = str(tmp_path / "ckpt_sizes")
-    for sizes in ({"buckets": 0}, {"chunk_buckets": 0}, {"buckets": -4}):
+    for buckets in (0, -4):
         with pytest.raises(ValueError, match="must be >= 1"):
-            CheckpointedExtraction(spark, sdf, out, **sizes)
-    job = CheckpointedExtraction(spark, sdf, out, buckets=4, chunk_buckets=1)
+            CheckpointedExtraction(spark, sdf, out, buckets=buckets)
+    job = CheckpointedExtraction(spark, sdf, out, buckets=4)
     with pytest.raises(ValueError, match="max_chunks"):
         job.run(max_chunks=-1)
     assert job.pending_buckets() == [0, 1, 2, 3]
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = os.path.join(root, "jobs", "extract_job.py")
-    for bad in (["--buckets", "0"], ["--chunk-buckets", "0"], ["--max-chunks", "-1"]):
+    for bad in (["--buckets", "0"], ["--max-chunks", "-1"]):
         proc = subprocess.run(
             [sys.executable, script, "--synthetic", "1", "--output", out, *bad],
             capture_output=True, text=True, timeout=600,
@@ -324,8 +350,7 @@ def test_overwrite_mode_restored(spark, tmp_path):
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     pdf = synth.generate_local(4, shuffled=False)
     job = CheckpointedExtraction(
-        spark, spark.createDataFrame(pdf), str(tmp_path / "c"), buckets=4,
-        chunk_buckets=4,
+        spark, spark.createDataFrame(pdf), str(tmp_path / "c"), buckets=2
     )
     job.run()
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC") == prev
