@@ -7,8 +7,6 @@ Usage (cluster):
     scripts/build_package.sh           # -> dist/ocr_spark.zip
     spark-submit \
         --py-files dist/ocr_spark.zip \
-        --conf spark.sql.adaptive.enabled=true \
-        --conf spark.sql.execution.arrow.maxRecordsPerBatch=10000 \
         jobs/extract_job.py \
         --input  <path or iceberg table>  \
         --output <output root>            \
@@ -58,7 +56,6 @@ def build_session(app: str):
 
     return (
         SparkSession.builder.appName(app)
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )

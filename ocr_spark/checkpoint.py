@@ -28,7 +28,9 @@ On restart, completed buckets are read from the lineage table and skipped
 (the anti-join resume of SURVEY §2.10; the reference's precedent is its
 memoized skip-seen-keys loop, ``Ingredients_OCR.py:222-224``,
 ``Google_OCR_API.py:74-75``).  A job reads the lineage once before its
-first chunk and once in ``validate()``.
+first chunk and once in ``validate()``.  Before the first commit the
+lineage does not exist (a path or table existence check says so); an
+existing lineage that cannot be read raises.
 
 On a real deployment the same structure maps 1:1 onto Iceberg: the chunk
 commit becomes an Iceberg snapshot (atomic MERGE/overwrite of the bucket
@@ -39,20 +41,19 @@ same transaction-ish commit sequence, and resume reads the last snapshot.
 configured Iceberg catalog; it needs the iceberg-spark-runtime jar on the
 session's classpath.  This sandbox ships no Iceberg jar, so the default
 ``table_format="parquet"`` emulation keeps the exact commit/resume
-semantics with dynamic partition overwrite, and the iceberg path fails
-fast with a clear error when the runtime is absent
-(tests/test_resume.py pins both the detection and the fallback).
+semantics with dynamic partition overwrite (an option of each data write,
+never a session conf), and the iceberg path fails fast with a clear error
+when the runtime is absent (tests/test_resume.py pins both the detection
+and the fallback).
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     IntegerType,
     LongType,
     StringType,
@@ -75,8 +76,9 @@ _COUNTS = (
 DATA_SCHEMA = StructType([*OUTPUT_SCHEMA, StructField("bucket", IntegerType())])
 
 # what ``run`` appends per bucket: ``metrics_agg`` over the bucket, then the
-# run bookkeeping.  Lineage is read with this schema, so columns that
-# legacy lineage lacks read as null and an unreadable file raises.
+# run bookkeeping.  Parquet lineage is read with this schema: an unreadable
+# file raises, and lineage without ``buckets`` reads it as null, which the
+# bucket-scheme guard refuses.
 LINEAGE_SCHEMA = StructType(
     [
         StructField("bucket", IntegerType()),
@@ -86,15 +88,11 @@ LINEAGE_SCHEMA = StructType(
         StructField("turn_idx_max", IntegerType()),
         *(StructField(c, LongType()) for c in _COUNTS),
         StructField("buckets", IntegerType()),
-        StructField("spans", BooleanType()),
         StructField("run_id", StringType()),
         StructField("chunk_id", IntegerType()),
         StructField("committed_at", TimestampType()),
     ]
 )
-
-# the only read errors that mean "nothing committed yet"
-_NO_LINEAGE = {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"}
 
 
 class CheckpointedExtraction:
@@ -124,7 +122,6 @@ class CheckpointedExtraction:
         output_dir: str,
         *,
         buckets: int = 4,
-        run_id: str | None = None,
         table_format: str = "parquet",
     ):
         if table_format not in ("parquet", "iceberg"):
@@ -135,7 +132,7 @@ class CheckpointedExtraction:
         self.input_df = input_df
         self.output_dir = output_dir.rstrip("/")
         self.buckets = buckets
-        self.run_id = run_id or f"run_{int(time.time() * 1000):x}"
+        self.run_id = f"run_{int(time.time() * 1000):x}"
         self.table_format = table_format
         if table_format == "iceberg":
             self._require_iceberg_runtime()
@@ -186,20 +183,6 @@ class CheckpointedExtraction:
             return self.spark.read.table(self.data_dir)
         return self.spark.read.schema(DATA_SCHEMA).parquet(self.data_dir)
 
-    def _read_lineage(self) -> DataFrame:
-        if self.table_format == "iceberg":
-            lin = self.spark.read.table(self.lineage_dir)
-            return lin.select(
-                *(
-                    F.col(f.name) if f.name in lin.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in LINEAGE_SCHEMA
-                )
-            )
-        # a declared schema also reads a directory with no data files
-        # (an empty frame, where inference would fail)
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
-
     def _commit_data(self, out: DataFrame) -> None:
         """Idempotent per-bucket commit: only the bucket partitions present
         in ``out`` are replaced (Iceberg: an overwrite-by-partition
@@ -215,7 +198,14 @@ class CheckpointedExtraction:
             else:
                 out.writeTo(self.data_dir).partitionedBy(F.col("bucket")).create()
         else:
-            out.write.mode("overwrite").partitionBy("bucket").parquet(self.data_dir)
+            # set per write, so the session's partitionOverwriteMode is
+            # never changed for other writers
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(self.data_dir)
+            )
 
     def _commit_lineage(self, rows: DataFrame) -> None:
         if self.table_format == "iceberg":
@@ -229,24 +219,30 @@ class CheckpointedExtraction:
     # -- resume bookkeeping -------------------------------------------------
 
     def lineage(self) -> DataFrame | None:
-        """The lineage table, or None before the first commit.  Any other
-        read failure raises: treating an unreadable lineage as a first run
-        would recompute every bucket and skip the resume guards."""
-        try:
-            return self._read_lineage()
-        except AnalysisException as exc:
-            if exc.getCondition() in _NO_LINEAGE:
+        """The lineage table, or None when it does not exist yet.  Reading
+        an existing lineage never falls back to None: treating an unreadable
+        lineage as a first run would recompute every bucket and skip the
+        resume guard."""
+        if self.table_format == "iceberg":
+            if not self.spark.catalog.tableExists(self.lineage_dir):
                 return None
-            raise
+            return self.spark.read.table(self.lineage_dir)
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.lineage_dir)
+        fs = path.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
+        if not fs.exists(path):
+            return None
+        # a declared schema also reads a directory with no data files
+        # (an empty frame, where inference would fail)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
 
     def _lineage_turns(self) -> dict[int, int]:
         """Completed bucket -> its lineage turn count, from one read and one
-        collect of the lineage, after both resume guards."""
+        collect of the lineage, after the resume guard."""
         lin = self.lineage()
         if lin is None:
             return {}
         rows = (
-            lin.groupBy("bucket", "buckets", "spans")
+            lin.groupBy("bucket", "buckets")
             .agg(F.max("turn_count").alias("turn_count"))
             .collect()
         )
@@ -255,24 +251,16 @@ class CheckpointedExtraction:
         # hash schemes — stale data partitions from the old scheme survive
         # dynamic overwrite (duplicates) while buckets "complete" under the
         # old numbering cover different key sets under the new one (missing
-        # rows).  Each lineage row records its scheme; refuse a mismatch.
-        schemes = {r.buckets for r in rows if r.buckets is not None}
+        # rows).  Each lineage row records its scheme; refuse a mismatch,
+        # and refuse lineage that records none (null ``buckets``).
+        schemes = {r.buckets for r in rows}
         if schemes - {self.buckets}:
+            written = sorted(schemes, key=lambda s: -1 if s is None else s)
             raise ValueError(
                 f"resume bucket-scheme mismatch: lineage at {self.lineage_dir} "
-                f"was written with buckets={sorted(schemes)} but this run uses "
+                f"was written with buckets={written} but this run uses "
                 f"buckets={self.buckets}; rerun with the original setting or "
                 "use a fresh output_dir"
-            )
-        # Same guard for the output schema: lineage that says spans=true, or
-        # predates the spans column, belongs to a legacy output whose data
-        # files carry spans_json; resuming it would mix two schemas under
-        # one data table.
-        if any(r.spans is not False for r in rows):
-            raise ValueError(
-                f"resume span-mode mismatch: lineage at {self.lineage_dir} was "
-                "written by a legacy run with inline spans_json; use a fresh "
-                "output_dir"
             )
         turns: dict[int, int] = {}
         for r in rows:
@@ -297,45 +285,27 @@ class CheckpointedExtraction:
         if max_chunks is not None and max_chunks < 0:
             raise ValueError(f"max_chunks must be >= 0, got {max_chunks}")
         chunks = self.pending_buckets()[:max_chunks]
-
-        # Dynamic overwrite: INSERT OVERWRITE only touches the bucket
-        # partitions present in the written frame (Iceberg's
-        # overwrite-by-filter snapshot in parquet form).  Saved/restored so
-        # the shared session's overwrite semantics aren't silently changed
-        # for later writers.
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev_mode = self.spark.conf.get(conf_key, None)
-        self.spark.conf.set(conf_key, "dynamic")
         bucket_of = F.pmod(F.hash(F.col("conv_id")), F.lit(self.buckets))
-        try:
-            for chunk_id, b in enumerate(chunks):
-                out = extract_transcripts(self.input_df.filter(bucket_of == b))
-                self._commit_data(out.withColumn("bucket", F.lit(b)))
-                # a global aggregate is one row even over no rows, so an
-                # empty bucket is still marked complete (its sums read as
-                # null, hence the fillna) instead of rerunning forever
-                committed = self._read_data().filter(F.col("bucket") == b)
-                lineage_rows = (
-                    metrics_agg(committed)
-                    .select(F.lit(b).alias("bucket"), "*")
-                    .fillna(0, subset=list(_COUNTS))
-                    .withColumn("buckets", F.lit(self.buckets))
-                    # constant, but kept: the lineage table is durable and
-                    # an Iceberg append() needs a stable schema
-                    .withColumn("spans", F.lit(False))
-                    .withColumn("run_id", F.lit(self.run_id))
-                    .withColumn("chunk_id", F.lit(chunk_id))
-                    .withColumn("committed_at", F.current_timestamp())
-                )
-                # lineage append AFTER data commit: a crash between the two
-                # leaves the bucket un-marked -> it is simply redone (and the
-                # per-bucket overwrite makes the redo idempotent).
-                self._commit_lineage(lineage_rows)
-        finally:
-            if prev_mode is None:
-                self.spark.conf.unset(conf_key)
-            else:
-                self.spark.conf.set(conf_key, prev_mode)
+        for chunk_id, b in enumerate(chunks):
+            out = extract_transcripts(self.input_df.filter(bucket_of == b))
+            self._commit_data(out.withColumn("bucket", F.lit(b)))
+            # a global aggregate is one row even over no rows, so an
+            # empty bucket is still marked complete (its sums read as
+            # null, hence the fillna) instead of rerunning forever
+            committed = self._read_data().filter(F.col("bucket") == b)
+            lineage_rows = (
+                metrics_agg(committed)
+                .select(F.lit(b).alias("bucket"), "*")
+                .fillna(0, subset=list(_COUNTS))
+                .withColumn("buckets", F.lit(self.buckets))
+                .withColumn("run_id", F.lit(self.run_id))
+                .withColumn("chunk_id", F.lit(chunk_id))
+                .withColumn("committed_at", F.current_timestamp())
+            )
+            # lineage append AFTER data commit: a crash between the two
+            # leaves the bucket un-marked -> it is simply redone (and the
+            # per-bucket overwrite makes the redo idempotent).
+            self._commit_lineage(lineage_rows)
         return len(chunks)
 
     # -- audit --------------------------------------------------------------

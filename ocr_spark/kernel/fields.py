@@ -56,7 +56,6 @@ VOCAB: tuple[tuple[str, str], ...] = (
 )
 
 TERM_TO_FIELD = {t: f for t, f in VOCAB}
-FIELDS = sorted({f for _, f in VOCAB})
 
 UNIT_WHITELIST = ("kcal", "mg", "ml", "ug", "g")
 

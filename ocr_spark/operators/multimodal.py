@@ -24,7 +24,6 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -38,18 +37,6 @@ from ocr_spark.operators.tables import load
 # ---------------------------------------------------------------------------
 # Synthetic assets: deterministic binary payloads derived from `documents`
 # (no external data; every byte is a pure function of doc_id).
-
-ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("kind", StringType()),       # image | audio
-        StructField("payload", BinaryType()),    # opaque bytes
-        StructField("width", IntegerType()),     # typed metadata...
-        StructField("height", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
 
 
 def assets(spark, sf_dir):

@@ -17,8 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
     MapType,
     StringType,
     StructField,
@@ -29,18 +27,6 @@ from ocr_spark.pipeline import extract_transcripts, partition_metrics, reassembl
 from ocr_spark.synth import generate_spark
 
 N_CONVS = 150
-
-# line-grouped columnar span records (see kernel/extract.py
-# _spans_and_counts): token pos is implicit in the "t" array index
-SPAN_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("b", IntegerType()),
-            StructField("l", IntegerType()),
-            StructField("t", ArrayType(StringType())),
-        ]
-    )
-)
 
 FIELD_SCHEMA = MapType(
     StringType(),

@@ -61,8 +61,6 @@ def stream_extract(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """readStream -> `extract_transcripts` (row-key repartition ->
     mapInPandas kernel) -> parquet sink, with the batch output's columns
@@ -74,15 +72,14 @@ def stream_extract(
     exactly as the batch path's `result()` does.
     """
     extracted = extract_transcripts(stream_source(spark, input_dir))
-    writer = (
+    return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 CONV_PROGRESS_SCHEMA = StructType(

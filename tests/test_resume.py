@@ -180,7 +180,6 @@ def test_lineage_rows_match_reference(spark, committed):
         .join(metrics_agg(data, "bucket"), "bucket", "left")
         .fillna(0, subset=counts)
         .withColumn("buckets", F.lit(8))
-        .withColumn("spans", F.lit(False))
         .withColumn("run_id", F.lit(committed.run_id))
         .withColumn("chunk_id", F.col("bucket"))
         .withColumn("committed_at", F.current_timestamp())
@@ -248,30 +247,38 @@ def test_bucket_scheme_mismatch_refused(spark, tmp_path):
     assert ok.validate(deep=True)["complete"]
 
 
-def test_span_mode_mismatch_refused(spark, tmp_path):
-    """Outputs written before spans_json left the schema carry it in their
-    data files; their lineage says spans=true, or predates the spans
-    column.  Resuming one would mix two data schemas, so it must refuse,
-    while a fresh output resumes fine and has no spans_json."""
-    pdf = synth.generate_local(6, shuffled=True)
-    sdf = spark.createDataFrame(pdf)
-    legacy = {
-        "spans_true": ([(0, 8, True)], "bucket INT, buckets INT, spans BOOLEAN"),
-        "no_spans_column": ([(0, 8)], "bucket INT, buckets INT"),
-    }
-    for name, (rows, schema) in legacy.items():
-        out = str(tmp_path / name)
-        spark.createDataFrame(rows, schema).write.parquet(f"{out}/_lineage")
-        bad = CheckpointedExtraction(spark, sdf, out, buckets=8)
-        with pytest.raises(ValueError, match="span-mode mismatch"):
-            bad.run()
+def test_legacy_spans_output_resumes(spark, tmp_path):
+    """An output written before spans_json left the schema carries it in
+    its data files, and its lineage has a spans=true column.  Data and
+    lineage are read with their declared schemas, so it resumes to complete
+    with the single-run rows and no spans_json.  Lineage that records no
+    ``buckets`` at all is refused by the bucket-scheme guard."""
+    import shutil
 
-    out = str(tmp_path / "fresh")
-    CheckpointedExtraction(spark, sdf, out, buckets=4).run(max_chunks=1)
-    ok = CheckpointedExtraction(spark, sdf, out, buckets=4)
-    ok.run()
-    assert ok.validate(deep=True)["complete"]
-    assert "spans_json" not in ok.result().columns
+    from pyspark.sql import functions as F
+
+    sdf = spark.createDataFrame(synth.generate_local(6, shuffled=True))
+    out = tmp_path / "legacy"
+    CheckpointedExtraction(spark, sdf, str(out), buckets=4).run(max_chunks=1)
+    legacy = {"data": ("spans_json", F.lit("[]")), "_lineage": ("spans", F.lit(True))}
+    for sub, (col, value) in legacy.items():
+        df = spark.read.parquet(str(out / sub)).withColumn(col, value)
+        writer = df.write.partitionBy("bucket") if sub == "data" else df.write
+        writer.parquet(str(tmp_path / sub))
+        shutil.rmtree(out / sub)
+        shutil.move(tmp_path / sub, out / sub)
+        assert col in spark.read.parquet(str(out / sub)).columns
+
+    job = CheckpointedExtraction(spark, sdf, str(out), buckets=4)
+    assert job.run() == 3
+    assert job.validate(deep=True)["complete"]
+    assert "spans_json" not in job.result().columns
+    assert _keys(job.result()) == _keys(extract_transcripts(sdf))
+
+    bare = tmp_path / "no_buckets"
+    spark.createDataFrame([(0,)], "bucket INT").write.parquet(str(bare / "_lineage"))
+    with pytest.raises(ValueError, match="bucket-scheme mismatch"):
+        CheckpointedExtraction(spark, sdf, str(bare), buckets=4).run()
 
 
 def test_job_script_runs_without_pythonpath(tmp_path):
@@ -293,6 +300,10 @@ def test_job_script_runs_without_pythonpath(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "'complete': True" in proc.stdout
+    # a fresh output has no lineage yet: the job checks for it instead of
+    # reading it and logging the missing path's stack trace
+    for noise in ("FileNotFoundException", "Assume no metadata directory"):
+        assert noise not in proc.stderr, proc.stderr[-3000:]
 
 
 def test_non_positive_sizes_are_refused(spark, tmp_path):
@@ -346,11 +357,31 @@ def test_iceberg_backend_detection(spark, tmp_path):
         )
 
 
-def test_overwrite_mode_restored(spark, tmp_path):
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    pdf = synth.generate_local(4, shuffled=False)
-    job = CheckpointedExtraction(
-        spark, spark.createDataFrame(pdf), str(tmp_path / "c"), buckets=2
-    )
-    job.run()
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC") == prev
+def test_run_sets_no_session_conf(spark, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is an option of each data write: run()
+    sets no session conf, and with the session at STATIC a later chunk's
+    commit keeps the buckets committed before it."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    assert spark.conf.get(key).upper() == "STATIC"
+    sdf = spark.createDataFrame(synth.generate_local(6, shuffled=False))
+    out = tmp_path / "c"
+    job = CheckpointedExtraction(spark, sdf, str(out), buckets=2)
+
+    calls = []
+    conf_set = RuntimeConfig.set
+
+    def spy(self, *args):
+        calls.append(args)
+        return conf_set(self, *args)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    assert job.run(max_chunks=1) == 1
+    first = sorted((out / "data" / "bucket=0").glob("*.parquet"))
+    assert first
+    assert job.run() == 1
+    assert calls == []
+    assert spark.conf.get(key).upper() == "STATIC"
+    assert sorted((out / "data" / "bucket=0").glob("*.parquet")) == first
+    assert _keys(job.result()) == _keys(extract_transcripts(sdf))
