@@ -17,6 +17,10 @@ Usage (sandbox smoke; at ``--synthetic 200`` the lineage totals are
 
     python jobs/extract_job.py --synthetic 200 --output /tmp/extract_out
 
+``--synthetic`` generates its corpus once, into a temporary parquet
+directory on the driver's local disk (removed when the job ends), and then
+reads it like ``--input``; it is a local-mode smoke path.
+
 Input is an Iceberg transcripts table (``--format iceberg`` on a cluster
 with the Iceberg runtime, its catalog configured with ``spark-submit
 --conf spark.sql.catalog.<name>=...``) or a parquet directory of the same
@@ -44,7 +48,9 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
+import tempfile
 
 # direct `python jobs/extract_job.py` runs (no --py-files zip on the path)
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -59,6 +65,16 @@ def build_session(app: str):
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
+
+
+def synthetic_input(spark, n_convs: int, path: str):
+    """Write ``n_convs`` synthetic conversations to a parquet directory at
+    ``path`` and read it back: the generator runs once, not once per chunk
+    (a lazy generator frame would be recomputed by every chunk's scan)."""
+    from ocr_spark import synth
+
+    synth.generate_spark(spark, n_convs).write.parquet(path)
+    return spark.read.parquet(path)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -93,24 +109,27 @@ def main(argv: list[str] | None = None) -> int:
 
     from ocr_spark.checkpoint import CheckpointedExtraction
 
-    if args.synthetic:
-        from ocr_spark import synth
+    tmp = tempfile.mkdtemp(prefix="ocr_spark_synthetic_") if args.synthetic else None
+    try:
+        if tmp:
+            df = synthetic_input(spark, args.synthetic, os.path.join(tmp, "transcripts"))
+        elif args.format == "iceberg":
+            df = spark.read.format("iceberg").load(args.input)
+        else:
+            df = spark.read.parquet(args.input)
 
-        df = synth.generate_spark(spark, args.synthetic)
-    elif args.format == "iceberg":
-        df = spark.read.format("iceberg").load(args.input)
-    else:
-        df = spark.read.parquet(args.input)
-
-    job = CheckpointedExtraction(
-        spark,
-        df,
-        args.output,
-        buckets=args.buckets,
-        table_format=args.table_format,
-    )
-    n = job.run(max_chunks=args.max_chunks)
-    audit = job.validate(deep=args.deep_audit)
+        job = CheckpointedExtraction(
+            spark,
+            df,
+            args.output,
+            buckets=args.buckets,
+            table_format=args.table_format,
+        )
+        n = job.run(max_chunks=args.max_chunks)
+        audit = job.validate(deep=args.deep_audit)
+    finally:
+        if tmp:
+            shutil.rmtree(tmp, ignore_errors=True)
     print(f"committed {n} chunks; audit: {audit}")
     spark.stop()
     return 0 if (audit["complete"] or args.max_chunks is not None) else 1

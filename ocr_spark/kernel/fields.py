@@ -15,9 +15,14 @@ Re-expresses, over cleaned transcript text, the reference's extraction core:
 - absence inference: "not a significant source of X, Y" -> "absent"
                                            NFT_OCR.py:1360-1395
 
-Everything is whole-Series pandas (extractall / map / groupby) — no per-row
-Python.  Output is a deterministic JSON string per turn (sorted field keys),
-so byte-equality is the parity check.
+Like the reference, which extracts one document at a time, the work is one
+pass per row: match, merge into a small ``field -> [qty, unit, dv]`` dict,
+fill from pass 2, mark absences, emit JSON.  A turn carries a handful of
+matches, too few for vectorized grouping to pay for its setup, so a plain
+dict merge per row is both simpler and cheaper than a long match frame
+grouped per (row, field).  Two vectorized prefilters pick the rows worth
+visiting.  Output is a deterministic JSON string per turn (sorted field
+keys), so byte-equality is the parity check.
 """
 
 from __future__ import annotations
@@ -78,69 +83,68 @@ _P2 = re.compile(
 _ABSENT = re.compile(r"not a significant source of (?P<list>[a-z ,]+)")
 
 # cheap vectorized prefilters (STRING patterns — kept in the RE2∩re subset
-# so Arrow-backed Series stay on the RE2 fast path, see cleanup.py):
-# extractall is the kernel's hottest call, and most rows can be excluded
-# before it runs without changing a single match.
-_ANY_TERM_PAT = "|".join(re.escape(t) for t, _ in VOCAB)
+# so Arrow-backed Series stay on the RE2 fast path, see cleanup.py): most
+# rows are excluded before the per-row matching without changing a match.
+_ANY_TERM_PAT = _TERM_ALT
 _ABSENT_PAT = "not a significant source of "
 
 CONFLICT = "conflict"
 ABSENT = "absent"
-MISSING = ""
+
+# JSON status of a resolved qty: a value is "ok", no value is "missing"
+_STATUS = {None: "missing", CONFLICT: CONFLICT, ABSENT: ABSENT}
 
 
-def _match_frame(s: pd.Series, pattern: re.Pattern) -> pd.DataFrame:
-    """finditer -> (row, field, qty, unit, dv) long frame.
-
-    A direct per-row ``finditer`` loop with flat list accumulation: the
-    same matches in the same order as ``str.extractall``, without its
-    per-match MultiIndex machinery — measured 1.6x faster on termed
-    batches and verified frame- and fields_json-byte-identical before the
-    swap (round 3; extractall was the kernel's hottest call)."""
-    rows: list = []
-    fields: list = []
-    qtys: list = []
-    units: list = []
-    dvs: list = []
-    t2f = TERM_TO_FIELD
-    finditer = pattern.finditer
-    for idx, text in s.items():
-        for m in finditer(text):
-            g = m.groupdict()
-            f = t2f.get(g.get("term"))
-            if f is None:
-                continue
-            rows.append(idx)
-            fields.append(f)
-            qtys.append(g.get("qty"))
-            units.append(g.get("unit"))
-            dvs.append(g.get("dv"))
-    return pd.DataFrame(
-        {"row": rows, "field": fields, "qty": qtys, "unit": units, "dv": dvs}
-    )
+def _resolve(pattern: re.Pattern, text: str) -> dict[str, list]:
+    """``field -> [qty, unit, dv]`` over ``pattern``'s matches in ``text``:
+    the conflict-detecting merge (add_to_dict, A1 semantics).  qty is the
+    one distinct value seen, "conflict" for several, None for none; unit
+    and dv are the first non-null in match order (``_P2`` has no dv)."""
+    cells: dict[str, list] = {}
+    for m in pattern.finditer(text):
+        g = m.groupdict()
+        cell = cells.setdefault(TERM_TO_FIELD[g["term"]], [None, None, None])
+        qty = g["qty"]
+        if qty is not None and qty != cell[0]:
+            cell[0] = qty if cell[0] is None else CONFLICT
+        if cell[1] is None:
+            cell[1] = g["unit"]
+        if cell[2] is None:
+            cell[2] = g.get("dv")
+    return cells
 
 
-def _resolve(frame: pd.DataFrame) -> pd.DataFrame:
-    """Conflict-detecting merge per (row, field) — A1 semantics.
-
-    distinct non-null qty count: 0 -> MISSING, 1 -> that value,
-    >1 -> "conflict".  unit/dv: first non-null in match order.
-    """
-    if frame.empty:
-        return pd.DataFrame(columns=["row", "field", "qty", "unit", "dv"])
-    g = frame.groupby(["row", "field"], sort=False)
-    qty_n = g["qty"].nunique()
-    qty_first = g["qty"].first()  # first non-null per pandas groupby.first
-    unit = g["unit"].first()
-    dv = g["dv"].first()
-    out = pd.DataFrame(
-        {
-            "qty": qty_first.where(qty_n == 1, CONFLICT).where(qty_n > 0, MISSING),
-            "unit": unit,
-            "dv": dv,
-        }
-    ).reset_index()
-    return out
+def _row_fields(text: str, termed: bool, absent: bool, date: str | None) -> tuple[str, int]:
+    """One turn's (fields_json, n_fields)."""
+    cells = _resolve(_P1, text) if termed else {}
+    # pass 2 only fills cells pass 1 left missing (merge_results,
+    # NFT_OCR.py:1415-1441 with test_conflicts=False), column by column:
+    # a field with a qty can still take its unit or dv from pass 2.
+    if termed and (not cells or any(None in cell for cell in cells.values())):
+        for field, alt in _resolve(_P2, text).items():
+            cell = cells.setdefault(field, [None, None, None])
+            for i, value in enumerate(alt):
+                if cell[i] is None:
+                    cell[i] = value
+    # absence inference: a listed field with no extracted qty is "absent"
+    if absent:
+        for m in _ABSENT.finditer(text):
+            for term in m["list"].split(","):
+                field = TERM_TO_FIELD.get(term.strip())
+                if field is not None:
+                    cell = cells.setdefault(field, [None, None, None])
+                    if cell[0] is None:
+                        cell[0] = ABSENT
+    # the expiry date (pre-extracted from raw text) lands in the same
+    # per-document record (extract_expiry, Ingredients_OCR.py:295-305)
+    if date is not None:
+        cells["expiry"] = [date, None, None]
+    items = [
+        f'"{field}":{{"qty":"{qty or ""}","unit":"{unit or ""}","dv":"{dv or ""}",'
+        f'"status":"{_STATUS.get(qty, "ok")}"}}'
+        for field, (qty, unit, dv) in sorted(cells.items())
+    ]
+    return "{" + ",".join(items) + "}", len(items)
 
 
 def extract_fields_series(
@@ -150,118 +154,26 @@ def extract_fields_series(
 
     JSON shape: {"field": {"qty": "15", "unit": "g", "dv": "20", "status":
     "ok|conflict|missing|absent"}} with field keys sorted — deterministic
-    bytes for the parity gate.
+    bytes for the parity gate; "{}" and 0 for a turn with no fields.
 
     ``expiry`` (optional, aligned to ``cleaned``): pre-extracted expiry
     date strings (``extract_expiry``, Ingredients_OCR.py:295-305); non-null
     entries become an ``expiry`` field with the date as qty, status ok.
     """
-    # prefilter: a row with no vocabulary term cannot produce a P1/P2
+    # prefilters: a row with no vocabulary term cannot produce a P1/P2
     # match (both patterns require \b<term>\b, and the unanchored literal
-    # alternation is a superset of the bounded one), so extractall —
-    # per-match Python row assembly, the hottest kernel call — runs only
-    # on term-bearing rows.  Identical matches by construction.
-    has_term = (
-        cleaned.str.contains(_ANY_TERM_PAT, regex=True).fillna(False).astype(bool)
-    )
-    termed = cleaned[has_term]
-    p1 = _resolve(_match_frame(termed, _P1))
-
-    # pass 2 only fills cells that pass 1 left missing (fill-missing merge,
-    # merge_results NFT_OCR.py:1415-1441 with test_conflicts=False) — and
-    # the fill is PER COLUMN: a field with qty present can still backfill
-    # its unit or dv from P2.  Any (row, field) P2 can touch also appears
-    # in P1 (P2's term match is the same \b-bounded alternation, and a
-    # bare term always P1-matches), so P2 only needs the rows where P1
-    # left ANY of qty/unit/dv missing, plus the (theoretical) term-bearing
-    # rows P1 produced nothing for.
-    p1_missing = (
-        p1["qty"].isna()
-        | (p1["qty"] == MISSING)
-        | p1["unit"].isna()
-        | (p1["unit"] == MISSING)
-        | p1["dv"].isna()
-        | (p1["dv"] == MISSING)
-    )
-    p2_rows = set(p1.loc[p1_missing, "row"]) | (
-        set(termed.index) - set(p1["row"])
-    )
-    p2 = _resolve(_match_frame(termed.loc[sorted(p2_rows)], _P2))
-    if not p2.empty:
-        merged = p1.merge(p2, on=["row", "field"], how="outer", suffixes=("", "_2"))
-        for col in ("qty", "unit", "dv"):
-            alt = merged[f"{col}_2"]
-            base = merged[col]
-            take_alt = base.isna() | (base == MISSING)
-            merged[col] = base.where(~take_alt, alt)
-        res = merged[["row", "field", "qty", "unit", "dv"]]
-    else:
-        res = p1
-
-    # absence inference: listed fields with no extracted quantity -> "absent"
-    has_absent = (
-        cleaned.str.contains(_ABSENT_PAT, regex=False).fillna(False).astype(bool)
-    )
-    ab = cleaned[has_absent].str.extractall(_ABSENT)
-    if not ab.empty:
-        ab = ab.reset_index(level=-1, drop=True)["list"]
-        ab = ab.str.split(",").explode().str.strip()
-        ab_frame = pd.DataFrame(
-            {"row": ab.index, "field": ab.map(TERM_TO_FIELD)}
-        ).dropna()
-        if not ab_frame.empty:
-            ab_frame = ab_frame.drop_duplicates()
-            res = res.merge(ab_frame.assign(absent=True), on=["row", "field"], how="outer")
-            res["absent"] = res["absent"].eq(True)
-        else:
-            res = res.assign(absent=False)
-    else:
-        res = res.assign(absent=False)
-
-    # expiry dates (pre-extracted from raw text) join the field table as a
-    # first-class "expiry" field — the reference's extract_expiry result
-    # lands in the same per-document record (Ingredients_OCR.py:295-305)
-    if expiry is not None:
-        exp = expiry.dropna()
-        if not exp.empty:
-            exp_frame = pd.DataFrame(
-                {
-                    "row": exp.index,
-                    "field": "expiry",
-                    "qty": exp.astype(str).values,
-                    "unit": None,
-                    "dv": None,
-                    "absent": False,
-                }
-            )
-            res = pd.concat(
-                [res if not res.empty else None, exp_frame], ignore_index=True
-            )
-
-    if res.empty:
-        empty = pd.Series("{}", index=cleaned.index)
-        return empty, pd.Series(0, index=cleaned.index)
-
-    no_qty = res["qty"].isna() | (res["qty"] == MISSING)
-    res["qty"] = res["qty"].where(~(no_qty & res["absent"]), ABSENT)
-    res["status"] = "ok"
-    res.loc[res["qty"] == CONFLICT, "status"] = CONFLICT
-    res.loc[res["qty"] == ABSENT, "status"] = ABSENT
-    res.loc[res["qty"].isna() | (res["qty"] == MISSING), "status"] = "missing"
-
-    # deterministic JSON assembly, vectorized
-    def _jstr(col: pd.Series) -> pd.Series:
-        return col.fillna("").astype(str)
-
-    item = (
-        '"' + res["field"] + '":{"qty":"' + _jstr(res["qty"])
-        + '","unit":"' + _jstr(res["unit"])
-        + '","dv":"' + _jstr(res["dv"])
-        + '","status":"' + res["status"] + '"}'
-    )
-    res = res.assign(item=item).sort_values(["row", "field"], kind="mergesort")
-    joined = res.groupby("row", sort=False)["item"].agg(",".join)
-    counts = res.groupby("row", sort=False)["item"].size()
-    fields_json = ("{" + joined + "}").reindex(cleaned.index, fill_value="{}")
-    n_fields = counts.reindex(cleaned.index, fill_value=0).astype("int64")
+    # alternation is a superset of the bounded one), so the per-row
+    # matching runs only on term-bearing rows.  Identical matches by
+    # construction.
+    termed = cleaned.str.contains(_ANY_TERM_PAT, regex=True).fillna(False).astype(bool)
+    absent = cleaned.str.contains(_ABSENT_PAT, regex=False).fillna(False).astype(bool)
+    dates = {} if expiry is None else expiry.dropna().astype(str).to_dict()
+    rows = [
+        _row_fields(text, t, a, dates.get(i)) if t or a or i in dates else ("{}", 0)
+        for i, text, t, a in zip(
+            cleaned.index, cleaned.tolist(), termed.tolist(), absent.tolist()
+        )
+    ]
+    fields_json = pd.Series([j for j, _ in rows], index=cleaned.index, dtype=object)
+    n_fields = pd.Series([n for _, n in rows], index=cleaned.index, dtype="int64")
     return fields_json, n_fields

@@ -33,7 +33,7 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -41,6 +41,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from ocr_spark.kernel.extract import extract_batch
@@ -59,7 +60,20 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-INPUT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool"]
+# the transcripts table (the streaming source and the synthetic generator
+# declare it); the kernel reads its first five columns
+TRANSCRIPT_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("role", StringType()),
+        StructField("text", StringType()),
+        StructField("tool", StringType()),
+        StructField("ts", TimestampType()),
+    ]
+)
+
+INPUT_COLUMNS = TRANSCRIPT_SCHEMA.names[:5]
 
 
 def _extract_map(batches):
@@ -102,6 +116,13 @@ def reassemble(extracted: DataFrame) -> DataFrame:
     )
 
 
+def _failed() -> Column:
+    """A failed turn: any status but the three outcomes of a turn the kernel
+    read (ok, empty, rejected) — ``tool_parse_error`` today.  Lineage
+    ``failed_count`` and ``failure_spans`` count the same turns."""
+    return ~F.col("status").isin("ok", "empty", "rejected")
+
+
 def metrics_agg(extracted: DataFrame, *group_cols: str) -> DataFrame:
     """Shared lineage/metrics aggregation (flags model of
     ``NFT_OCR.py:1470-1478`` generalized per north_rule): conv_id/turn
@@ -121,9 +142,7 @@ def metrics_agg(extracted: DataFrame, *group_cols: str) -> DataFrame:
         F.sum(F.when(F.col("status") == "rejected", 1).otherwise(0)).alias(
             "rejected_count"
         ),
-        F.sum(
-            F.when(~F.col("status").isin("ok", "empty", "rejected"), 1).otherwise(0)
-        ).alias("failed_count"),
+        F.sum(F.when(_failed(), 1).otherwise(0)).alias("failed_count"),
         F.sum("n_tokens").alias("token_count"),
         F.sum("n_fields").alias("field_count"),
     )
@@ -141,6 +160,6 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
 def failure_spans(extracted: DataFrame) -> DataFrame:
     """Long-form failure rows (conv_id, turn_idx, reason) — the
     ``failure_spans`` component of the lineage table (FIXTURES.md §4)."""
-    return extracted.filter(
-        ~F.col("status").isin("ok", "empty")
-    ).select("conv_id", "turn_idx", F.col("status").alias("reason"))
+    return extracted.filter(_failed()).select(
+        "conv_id", "turn_idx", F.col("status").alias("reason")
+    )

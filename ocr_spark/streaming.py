@@ -25,21 +25,9 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
-from ocr_spark.pipeline import extract_transcripts
-
-TRANSCRIPT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("tool", StringType()),
-        StructField("ts", TimestampType()),
-    ]
-)
+from ocr_spark.pipeline import TRANSCRIPT_SCHEMA, extract_transcripts
 
 
 # input files per micro-batch

@@ -377,24 +377,11 @@ def generate_spark(spark, n_convs: int, seed: int = 42, partitions: int | None =
     Identical output set to ``generate_local`` (same pure row function);
     row order differs by partitioning, which downstream windows normalize.
     """
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    # imported here: the oracle and the benchmark workloads use this
+    # module without Spark
+    from ocr_spark.pipeline import TRANSCRIPT_SCHEMA
 
-    schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("role", StringType()),
-            StructField("text", StringType()),
-            StructField("tool", StringType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
+    columns = TRANSCRIPT_SCHEMA.names
 
     def gen(batches):
         for b in batches:
@@ -403,12 +390,12 @@ def generate_spark(spark, n_convs: int, seed: int = 42, partitions: int | None =
                 rows.extend(build_conversation(int(c), seed))
             out = pd.DataFrame(rows)
             out["turn_idx"] = out["turn_idx"].astype("int32")
-            yield out[["conv_id", "turn_idx", "role", "text", "tool", "ts"]]
+            yield out[columns]
 
     rng = spark.range(n_convs)
     if partitions:
         rng = rng.repartition(partitions)
-    return rng.mapInPandas(gen, schema)
+    return rng.mapInPandas(gen, TRANSCRIPT_SCHEMA)
 
 
 def lexicon_words(seed: int = 42, n: int = 200) -> list[str]:

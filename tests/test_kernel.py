@@ -146,6 +146,87 @@ def test_fields_pass2_backfills_unit_when_qty_present():
     assert doc["protein"]["unit"] == "g"  # pass 2 backfills the unit
 
 
+def _field_docs(texts, dates=None, index=None):
+    from ocr_spark.kernel.fields import extract_fields_series
+
+    cleaned = pd.Series(texts, index=index)
+    expiry = None if dates is None else pd.Series(dates, index=cleaned.index)
+    fields_json, n = extract_fields_series(cleaned, expiry=expiry)
+    assert n.dtype == "int64" and list(n.index) == list(cleaned.index)
+    return list(fields_json), list(n)
+
+
+def test_fields_conflict_then_pass2_fill():
+    """Pass 1's "conflict" qty is kept while pass 2 fills the missing unit;
+    pass 2's own conflict fills a qty pass 1 left missing."""
+    docs, n = _field_docs(
+        ["protein 10\nprotein 12\n5 g of protein", "fibre\n2 g fibre\n3 g fibre"]
+    )
+    assert docs == [
+        '{"protein":{"qty":"conflict","unit":"g","dv":"","status":"conflict"}}',
+        '{"fibre":{"qty":"conflict","unit":"g","dv":"","status":"conflict"}}',
+    ]
+    assert n == [1, 1]
+
+
+def test_fields_absent_and_expiry():
+    """Absent fields and the expiry date join the matched fields in sorted
+    key order; a row with neither terms nor a date is "{}" / 0, and the
+    output keeps the input's index."""
+    docs, n = _field_docs(
+        [
+            "calories 200\nnot a significant source of fibre, iron",
+            "not a significant source of sodium",
+            "nothing here",
+            "",
+        ],
+        dates=["2024 JAN 05", None, None, "MAR 03 2025"],
+        index=[7, 3, 9, 0],
+    )
+    assert docs == [
+        '{"calories":{"qty":"200","unit":"","dv":"","status":"ok"},'
+        '"expiry":{"qty":"2024 JAN 05","unit":"","dv":"","status":"ok"},'
+        '"fibre":{"qty":"absent","unit":"","dv":"","status":"absent"},'
+        '"iron":{"qty":"absent","unit":"","dv":"","status":"absent"}}',
+        '{"sodium":{"qty":"absent","unit":"","dv":"","status":"absent"}}',
+        "{}",
+        '{"expiry":{"qty":"MAR 03 2025","unit":"","dv":"","status":"ok"}}',
+    ]
+    assert n == [4, 1, 0, 1]
+
+
+def test_fields_dv_only_and_full_row():
+    """A bare "term N %" is dv with a missing qty; a complete pass-1 cell is
+    not touched by pass 2."""
+    docs, n = _field_docs(["calcium 20 %", "iron 2 mg 15 %\n3 mg of iron"])
+    assert docs == [
+        '{"calcium":{"qty":"","unit":"","dv":"20","status":"missing"}}',
+        '{"iron":{"qty":"2","unit":"mg","dv":"15","status":"ok"}}',
+    ]
+    assert n == [1, 1]
+
+
+# sha256 of the kernel's output columns, in (conv_id, turn_idx) order, of
+# the whole-frame oracle on synth.generate_local(200).  Any byte of kernel
+# output that moves changes it: recompute it only for an intended output
+# change, never to absorb a refactor's drift.
+_KERNEL_200_SHA256 = "372fdce09ddcbcd18b7b9365e0031be672db550be2b11ad57ab0ae59672bcb2f"
+
+
+def test_kernel_output_bytes_pinned():
+    import hashlib
+
+    out = oracle_extract(synth.generate_local(200), row_at_a_time=False)
+    h = hashlib.sha256()
+    for col in (
+        "conv_id", "turn_idx", "extracted_text", "fields_json",
+        "n_blocks", "n_lines", "n_tokens", "n_fields", "status",
+    ):
+        h.update("\x1f".join(map(str, out[col])).encode())
+        h.update(b"\x1e")
+    assert h.hexdigest() == _KERNEL_200_SHA256
+
+
 def test_layout_two_column_reading_order():
     """Band/column order: full-width title first, then the left column
     top-to-bottom, then the right column — NOT global y-order (which would

@@ -130,6 +130,10 @@ def test_window_reassembly_columns(spark):
 
 def test_lineage_tables(spark):
     pdf = synth.generate_local(25, shuffled=True)
+    # one malformed tool payload, so the failure tables are not empty
+    bad_row = pdf.iloc[[0]].copy()
+    bad_row[["conv_id", "role", "tool"]] = ["malformed", "tool", '{"output": ']
+    pdf = pd.concat([pdf, bad_row], ignore_index=True)
     extracted = extract_transcripts(spark.createDataFrame(pdf))
     extracted = extracted.cache()
     try:
@@ -143,10 +147,16 @@ def test_lineage_tables(spark):
         )
         assert (total == metrics["turn_count"]).all()
 
+        # failure_spans lists exactly the turns lineage counts as failed:
+        # rejected documents are neither
         fs = failure_spans(extracted).toPandas()
+        assert len(fs) == metrics["failed_count"].sum() > 0
         want = oracle_extract(pdf)
-        bad = want[~want["status"].isin(["ok", "empty"])]
-        assert len(fs) == len(bad)
+        bad = want[~want["status"].isin(["ok", "empty", "rejected"])]
+        assert sorted(zip(fs["conv_id"], fs["turn_idx"], fs["reason"])) == sorted(
+            zip(bad["conv_id"], bad["turn_idx"], bad["status"])
+        )
+        assert (want["status"] == "rejected").any()
     finally:
         extracted.unpersist()
 

@@ -8,7 +8,7 @@ import pytest
 
 from ocr_spark import synth
 from ocr_spark.checkpoint import LINEAGE_SCHEMA, CheckpointedExtraction
-from ocr_spark.pipeline import extract_transcripts, metrics_agg
+from ocr_spark.pipeline import TRANSCRIPT_SCHEMA, extract_transcripts, metrics_agg
 
 N_CONVS = 40
 
@@ -290,6 +290,9 @@ def test_job_script_runs_without_pythonpath(tmp_path):
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env["TMPDIR"] = str(tmp)
     proc = subprocess.run(
         [
             sys.executable, os.path.join(root, "jobs", "extract_job.py"),
@@ -304,6 +307,28 @@ def test_job_script_runs_without_pythonpath(tmp_path):
     # reading it and logging the missing path's stack trace
     for noise in ("FileNotFoundException", "Assume no metadata directory"):
         assert noise not in proc.stderr, proc.stderr[-3000:]
+    # the synthetic corpus's temporary parquet is gone with the job
+    assert not list(tmp.glob("ocr_spark_synthetic_*"))
+
+
+def test_synthetic_input_is_generated_once(spark, tmp_path):
+    """`--synthetic` reads a written parquet corpus: no chunk's plan reruns
+    the generator, so the kernel is the job's only Python stage."""
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "extract_job", os.path.join(root, "jobs", "extract_job.py")
+    )
+    extract_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(extract_job)
+
+    df = extract_job.synthetic_input(spark, 5, str(tmp_path / "transcripts"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "Scan parquet" in plan, plan
+    assert df.schema == TRANSCRIPT_SCHEMA
+    assert df.count() == len(synth.generate_local(5))
 
 
 def test_non_positive_sizes_are_refused(spark, tmp_path):
