@@ -17,12 +17,16 @@ after it the job commits
 2. one lineage row for the bucket to ``<output>/_lineage`` — (bucket,
    conv_id range, turn range, status counters, token/field totals, run_id,
    chunk_id) — the generalized flags model of the reference
-   (``NFT_OCR.py:1470-1478,1510`` per-file status lists).  The row is a
-   global aggregate over the committed ``bucket=b`` partition read back
-   from storage, so it attests what was written (an empty bucket still
-   gets one zeroed row).  It is built in the JVM (no ``createDataFrame`` of
-   a Python list, which would run a PythonRDD through a second worker
-   pool) and written by one task as one file per chunk.
+   (``NFT_OCR.py:1470-1478,1510`` per-file status lists, recorded while
+   each file is processed).  The row is what the data write observed: the
+   write carries ``metrics_columns`` as an ``Observation``, whose
+   aggregates merge the successful task attempts only, so the lineage
+   attests what was committed without a second pass over the data (an
+   empty bucket still gets one zeroed row).  The row is then built in the
+   JVM from one literal per ``LINEAGE_SCHEMA`` field (no
+   ``createDataFrame`` of a Python list, which would run a PythonRDD
+   through a second worker pool) and written by one task as one file per
+   chunk.
 
 On restart, completed buckets are read from the lineage table and skipped
 (the anti-join resume of SURVEY §2.10; the reference's precedent is its
@@ -50,8 +54,9 @@ and the fallback).
 from __future__ import annotations
 
 import time
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -62,7 +67,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.pipeline import OUTPUT_SCHEMA, extract_transcripts, metrics_agg, reassemble
+from ocr_spark.pipeline import OUTPUT_SCHEMA, extract_transcripts, metrics_columns, reassemble
 
 LINEAGE_SUBDIR = "_lineage"
 DATA_SUBDIR = "data"
@@ -75,9 +80,11 @@ _COUNTS = (
 # the committed data: ``data/`` is partitioned by bucket
 DATA_SCHEMA = StructType([*OUTPUT_SCHEMA, StructField("bucket", IntegerType())])
 
-# what ``run`` appends per bucket: ``metrics_agg`` over the bucket, then the
-# run bookkeeping.  Parquet lineage is read with this schema: an unreadable
-# file raises, and lineage without ``buckets`` reads it as null, which the
+# what ``run`` appends per bucket, field by field: the aggregates the data
+# write observed, then the run bookkeeping.  Every file writes the key
+# ranges as nullable (null over an empty bucket) and every other field as
+# required.  Parquet lineage is read with this schema: an unreadable file
+# raises, and lineage without ``buckets`` reads it as null, which the
 # bucket-scheme guard refuses.
 LINEAGE_SCHEMA = StructType(
     [
@@ -162,10 +169,7 @@ class CheckpointedExtraction:
                 "semantics via dynamic partition overwrite)"
             ) from exc
         catalog = self.output_dir.split(".", 1)[0] if "." in self.output_dir else ""
-        try:
-            configured = self.spark.conf.get(f"spark.sql.catalog.{catalog}")
-        except Exception:
-            configured = None
+        configured = self.spark.conf.get(f"spark.sql.catalog.{catalog}", None)
         if not catalog or not configured:
             raise RuntimeError(
                 f"table_format='iceberg' needs output_dir to be a table "
@@ -262,10 +266,8 @@ class CheckpointedExtraction:
                 f"buckets={self.buckets}; rerun with the original setting or "
                 "use a fresh output_dir"
             )
-        turns: dict[int, int] = {}
-        for r in rows:
-            turns[r.bucket] = max(turns.get(r.bucket, 0), r.turn_count or 0)
-        return turns
+        # one row per bucket: every row past the guard has this scheme
+        return {r.bucket: r.turn_count or 0 for r in rows}
 
     def completed_buckets(self) -> set[int]:
         return set(self._lineage_turns())
@@ -288,25 +290,33 @@ class CheckpointedExtraction:
         bucket_of = F.pmod(F.hash(F.col("conv_id")), F.lit(self.buckets))
         for chunk_id, b in enumerate(chunks):
             out = extract_transcripts(self.input_df.filter(bucket_of == b))
-            self._commit_data(out.withColumn("bucket", F.lit(b)))
-            # a global aggregate is one row even over no rows, so an
-            # empty bucket is still marked complete (its sums read as
-            # null, hence the fillna) instead of rerunning forever
-            committed = self._read_data().filter(F.col("bucket") == b)
-            lineage_rows = (
-                metrics_agg(committed)
-                .select(F.lit(b).alias("bucket"), "*")
-                .fillna(0, subset=list(_COUNTS))
-                .withColumn("buckets", F.lit(self.buckets))
-                .withColumn("run_id", F.lit(self.run_id))
-                .withColumn("chunk_id", F.lit(chunk_id))
-                .withColumn("committed_at", F.current_timestamp())
-            )
+            # the data write observes the lineage aggregates, merged over
+            # successful task attempts only: no second pass over the data
+            obs = Observation()
+            self._commit_data(out.observe(obs, *metrics_columns()).withColumn("bucket", F.lit(b)))
             # lineage append AFTER data commit: a crash between the two
             # leaves the bucket un-marked -> it is simply redone (and the
             # per-bucket overwrite makes the redo idempotent).
-            self._commit_lineage(lineage_rows)
+            self._commit_lineage(self._lineage_row(obs.get, b, chunk_id))
         return len(chunks)
+
+    def _lineage_row(self, metrics: dict, bucket: int, chunk_id: int) -> DataFrame:
+        """One lineage row: a literal per ``LINEAGE_SCHEMA`` field over a
+        one-partition range, so one task writes one file and no Python
+        worker runs.  Over an empty bucket the observed count is 0 and the
+        sums and key ranges are null; the sums are zeroed."""
+        row = dict(metrics, bucket=bucket, buckets=self.buckets, run_id=self.run_id,
+                   chunk_id=chunk_id, committed_at=datetime.now(timezone.utc))
+        row.update((c, row[c] or 0) for c in _COUNTS)
+        cols = []
+        for f in LINEAGE_SCHEMA:
+            col = F.lit(row[f.name]).cast(f.dataType)
+            if f.name in metrics and f.name not in _COUNTS:
+                # a key range: null over an empty bucket, so `optional` in
+                # every file (a constant alone is written `required`)
+                col = F.when(F.col("id") == 0, col)
+            cols.append(col.alias(f.name))
+        return self.spark.range(0, 1, 1, 1).select(*cols)
 
     # -- audit --------------------------------------------------------------
 

@@ -90,6 +90,7 @@ STATUS_OK = "ok"
 STATUS_EMPTY = "empty"
 STATUS_REJECTED = "rejected"
 STATUS_TOOL_ERROR = "tool_parse_error"
+STATUS_NULL_KEY = "null_key"
 
 OUTPUT_COLUMNS = [
     "conv_id",
@@ -230,6 +231,9 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
         failed = parsed.isna()
         status.loc[parsed.index[failed]] = STATUS_TOOL_ERROR
         payload.loc[tool_mask] = parsed.fillna("")
+    # a turn with no key cannot be placed in its conversation: it fails
+    # with a status of its own (over a tool parse error) and is not parsed
+    status.loc[pdf["conv_id"].isna() | pdf["turn_idx"].isna()] = STATUS_NULL_KEY
 
     # 2-3. classification + structure parse -> list-of-blocks per row
     layout_mask = payload.map(looks_like_layout) & (status == STATUS_OK)
@@ -300,8 +304,8 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
     )
 
     cols = {
-        "conv_id": pdf["conv_id"].astype(str),
-        "turn_idx": pdf["turn_idx"].astype("int32"),
+        "conv_id": pdf["conv_id"],
+        "turn_idx": pdf["turn_idx"],
         "extracted_text": cleaned,
         "spans_json": spans_json,
         "fields_json": fields_json,

@@ -61,8 +61,13 @@ def _cap_buckets(df, key_cols: list[str], cap: int | None = None):
     the guard adds no new shuffle pattern.  Simhash segments are
     deliberately NOT capped: a 15-bit segment bucket only grows huge when
     millions of docs share an identical segment, i.e. exact-dup mass that
-    dedup_exact removes upstream."""
+    dedup_exact removes upstream.
+
+    Incremental signature tables carry ``band=-1`` sentinel rows for
+    shingle-less docs (signed-set bookkeeping only); they are never a
+    bucket, so a ``band`` key drops them here, for every caller."""
     cap = MAX_BUCKET if cap is None else cap
+    df = df.filter(F.col("band") >= 0) if "band" in key_cols else df
     sizes = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_bn"))
     return df.join(
         sizes.filter(F.col("_bn") <= cap).drop("_bn"), key_cols
@@ -299,9 +304,6 @@ def _minhash_verify_pairs(spark, sha, bands=None, docs=None):
     candidate set."""
     if bands is None:
         bands = minhash_bands(spark, None, shingle_arrays=sha)
-    # incremental signature tables carry band=-1 sentinel rows for
-    # shingle-less docs (signed-set bookkeeping only) — never join keys
-    bands = bands.filter(F.col("band") >= 0)
     bands = _cap_buckets(bands, ["band", "s0", "s1"])
     a = bands.alias("a")
     b = bands.alias("b")

@@ -118,34 +118,39 @@ def reassemble(extracted: DataFrame) -> DataFrame:
 
 def _failed() -> Column:
     """A failed turn: any status but the three outcomes of a turn the kernel
-    read (ok, empty, rejected) — ``tool_parse_error`` today.  Lineage
-    ``failed_count`` and ``failure_spans`` count the same turns."""
+    read (ok, empty, rejected) — ``tool_parse_error`` and ``null_key``
+    today.  Lineage ``failed_count`` and ``failure_spans`` count the same
+    turns."""
     return ~F.col("status").isin("ok", "empty", "rejected")
 
 
-def metrics_agg(extracted: DataFrame, *group_cols: str) -> DataFrame:
-    """Shared lineage/metrics aggregation (flags model of
+def metrics_columns() -> list[Column]:
+    """The lineage/metrics aggregates (flags model of
     ``NFT_OCR.py:1470-1478`` generalized per north_rule): conv_id/turn
-    ranges + status counters + token/field totals per ``group_cols``, or
-    one row over the whole frame (even an empty one) with none.
-    Used by both the per-physical-partition metrics below and the
-    per-bucket checkpoint lineage (ocr_spark/checkpoint.py) so the two
-    tables can never drift apart."""
-    return extracted.groupBy(*group_cols).agg(
+    ranges + status counters + token/field totals.  The one definition
+    behind both ``metrics_agg`` (``partition_metrics``) and the checkpoint
+    lineage, which observes these same columns on its data write
+    (ocr_spark/checkpoint.py), so the two tables can never drift apart."""
+    return [
         F.min("conv_id").alias("conv_id_min"),
         F.max("conv_id").alias("conv_id_max"),
         F.min("turn_idx").alias("turn_idx_min"),
         F.max("turn_idx").alias("turn_idx_max"),
         F.count(F.lit(1)).alias("turn_count"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok_count"),
-        F.sum(F.when(F.col("status") == "empty", 1).otherwise(0)).alias("empty_count"),
-        F.sum(F.when(F.col("status") == "rejected", 1).otherwise(0)).alias(
-            "rejected_count"
+        *(
+            F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(f"{s}_count")
+            for s in ("ok", "empty", "rejected")
         ),
         F.sum(F.when(_failed(), 1).otherwise(0)).alias("failed_count"),
         F.sum("n_tokens").alias("token_count"),
         F.sum("n_fields").alias("field_count"),
-    )
+    ]
+
+
+def metrics_agg(extracted: DataFrame, *group_cols: str) -> DataFrame:
+    """``metrics_columns`` per ``group_cols``, or one row over the whole
+    frame (even an empty one) with none."""
+    return extracted.groupBy(*group_cols).agg(*metrics_columns())
 
 
 def partition_metrics(extracted: DataFrame) -> DataFrame:

@@ -506,3 +506,20 @@ def test_lone_surrogate_reads_as_replacement_char(name):
 def test_valid_surrogate_pair_survives():
     r = extract_turn("", tool='{"output":"salt \\ud83d\\ude00 free"}', role="tool")
     assert "\U0001F600" in r["extracted_text"]
+
+
+def test_null_key_fails_its_row_only():
+    """A turn with a null conv_id or turn_idx gets status ``null_key``,
+    which wins over a tool parse error; the keys come back exactly as
+    received and the rest of the batch is untouched."""
+    bad_tool = {"role": "tool", "text": "", "tool": '{"output": '}
+    pdf = _batch(_HEALTHY, _HEALTHY, bad_tool, _HEALTHY)
+    pdf.loc[0, "conv_id"] = None
+    pdf["turn_idx"] = pd.array([0, None, None, 0], dtype="Int32")
+    out = extract_batch(pdf)
+    assert out["status"].tolist() == ["null_key"] * 3 + ["ok"]
+    assert out["conv_id"].equals(pdf["conv_id"])
+    assert out["turn_idx"].equals(pdf["turn_idx"])
+    assert (out["extracted_text"].iloc[:3] == "").all()
+    alone = extract_batch(_batch(_HEALTHY)).iloc[0].drop(["conv_id", "turn_idx"])
+    assert out.iloc[3].drop(["conv_id", "turn_idx"]).equals(alone)

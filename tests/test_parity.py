@@ -18,9 +18,11 @@ import json
 import pandas as pd
 
 from ocr_spark import synth
+from ocr_spark.checkpoint import CheckpointedExtraction
 from ocr_spark.operators.transcripts import derive_spans
 from ocr_spark.oracle import oracle_extract
 from ocr_spark.pipeline import (
+    OUTPUT_SCHEMA,
     extract_transcripts,
     failure_spans,
     partition_metrics,
@@ -159,6 +161,34 @@ def test_lineage_tables(spark):
         assert (want["status"] == "rejected").any()
     finally:
         extracted.unpersist()
+
+
+def test_null_keys_fail_their_turns_only(spark, tmp_path):
+    """One null turn_idx and one null conv_id among ~1k turns: the
+    checkpointed run completes, lineage counts exactly those 2 turns as
+    failed, and every committed row, keys included, equals the oracle's."""
+    pdf = synth.generate_local(200, shuffled=True)
+    pdf["turn_idx"] = pdf["turn_idx"].astype("Int32")
+    pdf.loc[0, "turn_idx"] = None
+    pdf.loc[1, "conv_id"] = None
+    job = CheckpointedExtraction(
+        spark, spark.createDataFrame(pdf), str(tmp_path / "out"), buckets=2
+    )
+    assert job.run() == 2
+    assert job.validate(deep=True)["complete"]
+    assert sum(r.failed_count for r in job.lineage().collect()) == 2
+
+    data = spark.read.parquet(job.data_dir).select(*OUTPUT_SCHEMA.names)
+    got = {r[:2]: tuple(r) for r in data.collect()}
+    want = oracle_extract(pdf, row_at_a_time=False)[OUTPUT_SCHEMA.names]
+    want = want.astype(object).where(want.notna(), None)
+    want = {t[:2]: t for t in want.itertuples(index=False, name=None)}
+    assert len(got) == len(pdf)
+    assert got == want
+    assert {k for k, v in got.items() if v[-1] == "null_key"} == {
+        (None, pdf.loc[1, "turn_idx"]),
+        (pdf.loc[0, "conv_id"], None),
+    }
 
 
 def test_distributed_generator_matches_local(spark):

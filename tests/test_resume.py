@@ -129,9 +129,9 @@ def test_chunk_writes_at_most_one_file_per_core(spark, tmp_path):
 
 def test_empty_first_bucket_commits_zeroed_lineage(spark, tmp_path):
     """A fresh output whose first pending bucket has no input rows: its
-    chunk writes no data file, the lineage read-back over the (still
-    file-less) data table yields one zeroed row, and the run goes on to
-    finish the other buckets."""
+    chunk writes no data file, its write's observation over zero rows
+    yields one zeroed lineage row, and the run goes on to finish the other
+    buckets."""
     from pyspark.sql import functions as F
 
     sdf = spark.createDataFrame(synth.generate_local(6, shuffled=True)).filter(
@@ -410,3 +410,110 @@ def test_run_sets_no_session_conf(spark, tmp_path, monkeypatch):
     assert spark.conf.get(key).upper() == "STATIC"
     assert sorted((out / "data" / "bucket=0").glob("*.parquet")) == first
     assert _keys(job.result()) == _keys(extract_transcripts(sdf))
+
+
+def test_chunk_commit_shape(spark, committed, tmp_path, monkeypatch):
+    """A chunk is the data job, which carries the lineage observation, and
+    a one-row lineage job: run() never reads ``data/`` back, a 4-chunk run
+    issues 3 Spark jobs per chunk, and every lineage file, an empty
+    bucket's included, keeps the file schema lineage has always had."""
+    import pathlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def no_read(self):
+        raise AssertionError("run() read data/ back")
+
+    monkeypatch.setattr(CheckpointedExtraction, "_read_data", no_read)
+    sdf = spark.createDataFrame(synth.generate_local(N_CONVS, shuffled=True))
+    job = CheckpointedExtraction(spark, sdf, str(tmp_path / "out"), buckets=4)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert job.run() == 4
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 3 * 4
+
+    counts = (
+        "turn_count", "ok_count", "empty_count", "rejected_count",
+        "failed_count", "token_count", "field_count",
+    )
+    want = pa.schema(
+        [
+            pa.field("bucket", pa.int32(), nullable=False),
+            pa.field("conv_id_min", pa.string()),
+            pa.field("conv_id_max", pa.string()),
+            pa.field("turn_idx_min", pa.int32()),
+            pa.field("turn_idx_max", pa.int32()),
+            *(pa.field(c, pa.int64(), nullable=False) for c in counts),
+            pa.field("buckets", pa.int32(), nullable=False),
+            pa.field("run_id", pa.string(), nullable=False),
+            pa.field("chunk_id", pa.int32(), nullable=False),
+            pa.field("committed_at", pa.timestamp("ns"), nullable=False),
+        ]
+    )
+    files = [
+        f for d in (job.lineage_dir, committed.lineage_dir)
+        for f in sorted(pathlib.Path(d).glob("*.parquet"))
+    ]
+    assert len(files) == 4 + 8
+    assert any(pq.read_table(f).column("turn_count")[0].as_py() == 0 for f in files)
+    for f in files:
+        assert pq.read_schema(f) == want, f
+
+
+# Runs in its own driver: a local master retries a failed task only with
+# ``local[N,F]``.  The kernel wrapper yields its rows, then fails the first
+# attempt of partition 0 in every chunk.
+_RETRIED_RUN = """
+import sys
+
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+
+from ocr_spark import pipeline, synth
+from ocr_spark.checkpoint import CheckpointedExtraction
+
+extract = pipeline._extract_map
+
+
+def flaky(batches):
+    yield from extract(batches)
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        raise RuntimeError("injected task failure")
+
+
+pipeline._extract_map = flaky
+spark = SparkSession.builder.master("local[4,2]").config("spark.ui.enabled", "false").getOrCreate()
+sdf = spark.createDataFrame(synth.generate_local(int(sys.argv[2]), shuffled=True))
+print("chunks", CheckpointedExtraction(spark, sdf, sys.argv[1], buckets=4).run())
+tracker = spark.sparkContext.statusTracker()
+stages = [tracker.getStageInfo(s) for j in tracker.getJobIdsForGroup(None)
+          for s in tracker.getJobInfo(j).stageIds]
+print("failed_tasks", sum(s.numFailedTasks for s in stages if s is not None))
+"""
+
+
+def test_retried_task_lineage_matches_committed_data(spark, tmp_path):
+    """A kernel task that yields rows and then fails is retried; the
+    observed lineage merges the successful attempts only, so it equals
+    ``metrics_agg`` over the committed data read back."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "out")
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRIED_RUN, out, str(N_CONVS)],
+        cwd=root, env={**os.environ, "PYTHONPATH": root},
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "chunks 4\nfailed_tasks 4\n" in proc.stdout, proc.stdout
+
+    data = spark.read.parquet(f"{out}/data")
+    assert data.count() == len(synth.generate_local(N_CONVS))
+    want = metrics_agg(data, "bucket")
+    got = spark.read.parquet(f"{out}/_lineage").select(*want.columns)
+    assert sorted(got.collect()) == sorted(want.collect())
