@@ -113,10 +113,12 @@ def _ensure_transcripts(cpus: int) -> tuple[str, int]:
 
 def worker(cpus: int, parquet: str) -> int:
     """One timed run of the shipped job in this fresh process: start a
-    ``local[cpus]`` session, then time ``extract_job.main`` only (session
-    start is excluded; there is no warm-up job).  Prints the seconds as
-    one JSON line and returns 0 only when the job returned 0; a job that
-    raises or returns non-zero prints no time."""
+    ``local[cpus]`` session that sets nothing else (the job's own
+    ``build_session`` picks it up and adds its settings), then time
+    ``extract_job.main`` only (session start is excluded; there is no
+    warm-up job).  Prints the seconds as one JSON line and returns 0 only
+    when the job returned 0; a job that raises or returns non-zero prints
+    no time."""
     import importlib.util
 
     # the Python workers the session forks import ocr_spark too
@@ -128,7 +130,11 @@ def worker(cpus: int, parquet: str) -> int:
     )
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
-    _session(cpus)  # the job's getOrCreate() picks this session up
+    # only the master and a quiet UI: the job's build_session supplies the
+    # rest, so the timed job runs under the settings it ships with
+    from pyspark.sql import SparkSession
+
+    SparkSession.builder.master(f"local[{cpus}]").config("spark.ui.enabled", "false").getOrCreate()
     with tempfile.TemporaryDirectory(prefix="bench_extract_") as out:
         t0 = time.time()
         rc = job.main(["--input", parquet, "--output", os.path.join(out, "out")])

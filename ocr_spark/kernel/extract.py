@@ -4,18 +4,19 @@
 it on a whole pandas frame single-threaded) and the Spark pipeline (which
 calls it per Arrow batch inside ``mapInPandas``).  Stages:
 
-1. payload resolution  — tool turns carry ``{"name":..., "output":...}``
-   JSON in the ``tool`` column; the output string is the payload
-   (C22 in SURVEY §2.8 — new JSON surface for transcripts).
-2. payload classification — layout JSON / HTML / plain text
-   (the engine-choice analog of the reference's tesseract-vs-Google split).
-3. structure parse -> content blocks
-   - HTML: tag-tree segmentation + text/link-density boilerplate strip
-   - layout JSON: page->block->line->span reading-order parse
-   - plain: paragraph split on blank lines
+1-3. payload, classification and structure parse — one pass per turn:
+   a tool turn's ``{"name":..., "output":...}`` JSON in the ``tool``
+   column yields the payload (C22 in SURVEY §2.8 — new JSON surface for
+   transcripts); the payload is then parsed as layout JSON
+   (page->block->line->span reading order), else HTML (tag-tree
+   segmentation + text/link-density boilerplate strip), else plain text
+   split into paragraphs on blank lines (the engine-choice analog of the
+   reference's tesseract-vs-Google split).
+3b. bilingual split + expiry date — one pass per turn on the raw text.
 4. cleanup chain (ordered, vectorized)   — kernel.cleanup
 5. document gate (reject wrong-type docs) — port of ``is_american_nft``
-   (NFT_OCR.py:959-978): >=3 lines each containing >=2 vitamin terms.
+   (NFT_OCR.py:959-978): >=3 lines each containing >=2 vitamin terms,
+   found by one vocabulary scan per line.
 6. field extraction + conflict/absence   — kernel.fields
 7. token spans + counters                — vectorized explode pipeline.
 
@@ -46,8 +47,8 @@ _PARA_SPLIT_RE = re.compile(r"\n\s*\n")
 # the "JAN 05 2024" order as fallback.  Run on the RAW text (pre-cleanup,
 # like the reference, which scans the raw OCR string) — the cleanup chain
 # lowercases, which would kill the [A-Z] month token.
-_EXPIRY_RE1 = r"(20[0-9]{2}[ :/]?[A-Z]{2,3}[ :/]?[0-9]{2})"
-_EXPIRY_RE2 = r"([A-Z]{2,3}[ :/][0-9]{2}[ :/]20[0-9]{2})"
+_EXPIRY_RE1 = re.compile(r"(20[0-9]{2}[ :/]?[A-Z]{2,3}[ :/]?[0-9]{2})")
+_EXPIRY_RE2 = re.compile(r"([A-Z]{2,3}[ :/][0-9]{2}[ :/]20[0-9]{2})")
 
 # Faithful port of the reject-gate vocabulary and counting rule of
 # ``is_american_nft`` (NFT_OCR.py:959-978): for each vocabulary term, look
@@ -59,32 +60,25 @@ _VIT_TERMS = (
     "thiamin", "folate", "pantothenic", "phosphorus", "magnesium", "zinc",
     "manganese", "niacin",
 )
-_VIT_RES = tuple(re.compile(r"\b" + re.escape(t) + r"\b") for t in _VIT_TERMS)
-_ANY_VIT_RE = re.compile("|".join(re.escape(t) for t in _VIT_TERMS))
+# One scan finds every term a line holds: no term occurs inside another or
+# overlaps one at word boundaries (tests/test_property.py pins this), so
+# the alternation's non-overlapping matches are exactly the terms a
+# per-term ``\bterm\b`` search would find.  Compiled, so the vectorized
+# prefilter runs Python ``re`` too and ``\b`` means the same on both sides.
+_VIT_RE = re.compile(r"\b(?:" + "|".join(re.escape(t) for t in _VIT_TERMS) + r")\b")
 _REJECT_MIN_COUNT = 3
 
 
-_EMPTY_SET: frozenset = frozenset()
-
-
 def _is_american(text: str) -> bool:
-    lines = [ln for block in text.split("\n\n") for ln in block.split("\n")]
-    first_line: dict[str, int] = {}
-    line_terms: list = []
-    for idx, line in enumerate(lines):
-        # cheap superset prefilter: the unanchored alternation can only
-        # over-match vs the \b-bounded per-term scans, so a miss here
-        # proves no term is present — skips the 14 per-term searches on
-        # the (vast majority of) term-free lines.  Same `present` sets.
-        if _ANY_VIT_RE.search(line) is None:
-            line_terms.append(_EMPTY_SET)
-            continue
-        present = {t for t, rx in zip(_VIT_TERMS, _VIT_RES) if rx.search(line)}
-        line_terms.append(present)
-        for t in present:
-            first_line.setdefault(t, idx)
-    count = sum(1 for t, ln in first_line.items() if len(line_terms[ln]) >= 2)
-    return count >= _REJECT_MIN_COUNT
+    # term -> number of distinct terms on the line of its first occurrence;
+    # a blank line between blocks only adds an empty, term-free line
+    first: dict[str, int] = {}
+    for line in text.split("\n"):
+        terms = set(_VIT_RE.findall(line))
+        for t in terms:
+            first.setdefault(t, len(terms))
+    return sum(n >= 2 for n in first.values()) >= _REJECT_MIN_COUNT
+
 
 STATUS_OK = "ok"
 STATUS_EMPTY = "empty"
@@ -121,6 +115,23 @@ def _tool_output(raw: str) -> str | None:
         return json.dumps(doc, sort_keys=True)
     except (ValueError, TypeError, RecursionError):
         return None
+
+
+def _parse_turn(keyed: bool, role: str, text: str, tool: str) -> tuple[str, list[str]]:
+    """Stages 1-3 for one turn: (status, content blocks)."""
+    if not keyed:
+        # a turn with no key cannot be placed in its conversation: it fails
+        # with a status of its own and is not parsed
+        return STATUS_NULL_KEY, []
+    if role == "tool" and tool:
+        text = _tool_output(tool)
+        if text is None:
+            return STATUS_TOOL_ERROR, []
+    if looks_like_layout(text):
+        return STATUS_OK, layout_extract(text)
+    if looks_like_html(text):
+        return STATUS_OK, html_extract(text)
+    return STATUS_OK, [x for x in _PARA_SPLIT_RE.split(text) if x.strip()]
 
 
 def _spans_and_counts(
@@ -217,37 +228,15 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
     tests/test_parity.py::test_derived_spans_match_kernel)."""
     pdf = pdf.reset_index(drop=True)
     n = len(pdf)
-    text = pdf["text"].fillna("").astype(str)
-    tool = pdf.get("tool", pd.Series([""] * n)).fillna("").astype(str)
-    role = pdf.get("role", pd.Series(["user"] * n)).fillna("").astype(str)
+    keyed = (pdf["conv_id"].notna() & pdf["turn_idx"].notna()).tolist()
+    role = pdf.get("role", pd.Series(["user"] * n)).fillna("").astype(str).tolist()
+    text = pdf["text"].fillna("").astype(str).tolist()
+    tool = pdf.get("tool", pd.Series([""] * n)).fillna("").astype(str).tolist()
 
-    status = pd.Series(STATUS_OK, index=text.index)
-
-    # 1. payload resolution
-    payload = text.copy()
-    tool_mask = (role == "tool") & (tool != "")
-    if tool_mask.any():
-        parsed = tool[tool_mask].map(_tool_output)
-        failed = parsed.isna()
-        status.loc[parsed.index[failed]] = STATUS_TOOL_ERROR
-        payload.loc[tool_mask] = parsed.fillna("")
-    # a turn with no key cannot be placed in its conversation: it fails
-    # with a status of its own (over a tool parse error) and is not parsed
-    status.loc[pdf["conv_id"].isna() | pdf["turn_idx"].isna()] = STATUS_NULL_KEY
-
-    # 2-3. classification + structure parse -> list-of-blocks per row
-    layout_mask = payload.map(looks_like_layout) & (status == STATUS_OK)
-    html_mask = payload.map(looks_like_html) & ~layout_mask & (status == STATUS_OK)
-    plain_mask = ~layout_mask & ~html_mask & (status == STATUS_OK)
-
-    blocks = pd.Series([[]] * n, index=payload.index, dtype=object)
-    if layout_mask.any():
-        blocks.loc[layout_mask] = payload[layout_mask].map(layout_extract)
-    if html_mask.any():
-        blocks.loc[html_mask] = payload[html_mask].map(html_extract)
-    if plain_mask.any():
-        plain = payload[plain_mask].str.split(_PARA_SPLIT_RE)
-        blocks.loc[plain_mask] = plain.map(lambda xs: [x for x in xs if x.strip()])
+    # 1-3. payload + structure parse, one pass per turn
+    parsed = [_parse_turn(*turn) for turn in zip(keyed, role, text, tool)]
+    status = [st for st, _ in parsed]
+    blocks = [bl for _, bl in parsed]
 
     # 3b. bilingual duplicate split (split_ingrdients,
     # Ingredients_OCR.py:14-25): a block carrying the content twice — EN
@@ -256,47 +245,41 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
     # Vectorized prefilter: two fuzzy occurrences always retain >= 2
     # literal marker 3-grams (see kernel/bilingual.py), so the per-row
     # token scan runs only on candidate rows.
-    joined_pre = blocks.str.join("\n\n").fillna("")
+    joined = ["\n\n".join(bl) for bl in blocks]
     bi_cand = (
-        joined_pre.astype("string[pyarrow]")
-        .str.count(bilingual.PREFILTER_PAT)
-        .fillna(0)
-        .astype(int)
-        >= 2
-    )
-    if bi_cand.any():
-        blocks = blocks.copy()
-        blocks.loc[bi_cand] = blocks[bi_cand].map(bilingual.split_blocks)
-        raw = blocks.str.join("\n\n").fillna("")
-    else:
-        raw = joined_pre
-
+        pd.Series(joined, dtype="string[pyarrow]").str.count(bilingual.PREFILTER_PAT) >= 2
+    ).tolist()
     # 3c. expiry dates from the RAW text (extract_expiry,
     # Ingredients_OCR.py:295-305): pattern 1, else pattern 2, else none
-    expiry = raw.str.extract(_EXPIRY_RE1, expand=False)
-    need2 = expiry.isna()
-    if need2.any():
-        expiry.loc[need2] = raw[need2].str.extract(_EXPIRY_RE2, expand=False)
+    raw, dates = [], []
+    for bl, jn, cand in zip(blocks, joined, bi_cand):
+        r = "\n\n".join(bilingual.split_blocks(bl)) if cand else jn
+        m = _EXPIRY_RE1.search(r) or _EXPIRY_RE2.search(r)
+        raw.append(r)
+        dates.append(m and m[1])
 
     # 4. ordered cleanup chain (vectorized)
-    cleaned = cleanup_series(raw)
+    cleaned = cleanup_series(pd.Series(raw, dtype=object))
 
-    # 5. document gate (is_american_nft port, NFT_OCR.py:959-978); cheap
-    # vectorized prefilter, then the exact first-occurrence-line rule on
-    # the few candidate rows
-    has_vit = cleaned.str.contains(_ANY_VIT_RE, regex=True).fillna(False).astype(bool)
-    reject_mask = pd.Series(False, index=cleaned.index)
-    if has_vit.any():
-        reject_mask.loc[has_vit] = cleaned[has_vit].map(_is_american).astype(bool)
-    reject_mask = reject_mask & (status == STATUS_OK)
-    status.loc[reject_mask] = STATUS_REJECTED
-    cleaned = cleaned.where(~reject_mask, "")
-    status.loc[(cleaned == "") & (status == STATUS_OK)] = STATUS_EMPTY
+    # 5. document gate (is_american_nft port, NFT_OCR.py:959-978) on the
+    # rows the vectorized vocabulary prefilter flags; a gated-out turn
+    # (rejected or empty) carries no text and no fields, dates included
+    gate_cand = cleaned.str.contains(_VIT_RE).tolist()
+    texts = cleaned.tolist()
+    for i, (st, tx, cand) in enumerate(zip(status, texts, gate_cand)):
+        if st == STATUS_OK:
+            if cand and _is_american(tx):
+                status[i], texts[i] = STATUS_REJECTED, ""
+            elif not tx:
+                status[i] = STATUS_EMPTY
+        if not texts[i]:
+            dates[i] = None
+    cleaned = pd.Series(texts, dtype=object)
 
-    # 6. fields (expiry blanked on rejected/empty rows: a gated-out turn
-    # carries no fields at all, dates included)
-    expiry = expiry.where(cleaned != "", None)
-    fields_json, n_fields = extract_fields_series(cleaned, expiry=expiry)
+    # 6. fields
+    fields_json, n_fields = extract_fields_series(
+        cleaned, expiry=pd.Series(dates, dtype=object)
+    )
 
     # 7. spans + counters
     spans_json, n_blocks, n_lines, n_tokens = _spans_and_counts(
@@ -313,7 +296,7 @@ def extract_batch(pdf: pd.DataFrame, with_spans: bool = True) -> pd.DataFrame:
         "n_lines": n_lines,
         "n_tokens": n_tokens,
         "n_fields": n_fields,
-        "status": status,
+        "status": pd.Series(status, dtype=object),
     }
     if not with_spans:
         del cols["spans_json"]
