@@ -22,19 +22,18 @@ after it the job commits
    write carries ``metrics_columns`` as an ``Observation``, whose
    aggregates merge the successful task attempts only, so the lineage
    attests what was committed without a second pass over the data (an
-   empty bucket still gets one zeroed row).  The row is then built in the
-   JVM from one literal per ``LINEAGE_SCHEMA`` field (no
-   ``createDataFrame`` of a Python list, which would run a PythonRDD
-   through a second worker pool) and written by one task as one file per
-   chunk.
+   empty bucket still gets one zeroed row).  The row is handed to the JVM
+   as a one-row Arrow table (a Python list would run a PythonRDD through
+   a second worker pool; an Arrow table becomes a ``LocalRelation``) and
+   written by one task as one file per chunk.
 
 On restart, completed buckets are read from the lineage table and skipped
 (the anti-join resume of SURVEY §2.10; the reference's precedent is its
 memoized skip-seen-keys loop, ``Ingredients_OCR.py:222-224``,
 ``Google_OCR_API.py:74-75``).  A job reads the lineage once before its
-first chunk and once in ``validate()``.  Before the first commit the
-lineage does not exist (a path or table existence check says so); an
-existing lineage that cannot be read raises.
+first chunk and once in ``validate()``, one Spark job each.  Before the
+first commit the lineage does not exist (a path or table existence check
+says so); an existing lineage that cannot be read raises.
 
 On a real deployment the same structure maps 1:1 onto Iceberg: the chunk
 commit becomes an Iceberg snapshot (atomic MERGE/overwrite of the bucket
@@ -56,6 +55,7 @@ from __future__ import annotations
 import time
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -81,23 +81,24 @@ _COUNTS = (
 DATA_SCHEMA = StructType([*OUTPUT_SCHEMA, StructField("bucket", IntegerType())])
 
 # what ``run`` appends per bucket, field by field: the aggregates the data
-# write observed, then the run bookkeeping.  Every file writes the key
-# ranges as nullable (null over an empty bucket) and every other field as
-# required.  Parquet lineage is read with this schema: an unreadable file
-# raises, and lineage without ``buckets`` reads it as null, which the
+# write observed, then the run bookkeeping.  Its nullability is the file
+# schema lineage has always had: the key ranges nullable (null over an
+# empty bucket), every other field required.  Parquet lineage is read with
+# this schema, and a file read makes every field nullable: an unreadable
+# file raises, and lineage without ``buckets`` reads it as null, which the
 # bucket-scheme guard refuses.
 LINEAGE_SCHEMA = StructType(
     [
-        StructField("bucket", IntegerType()),
+        StructField("bucket", IntegerType(), False),
         StructField("conv_id_min", StringType()),
         StructField("conv_id_max", StringType()),
         StructField("turn_idx_min", IntegerType()),
         StructField("turn_idx_max", IntegerType()),
-        *(StructField(c, LongType()) for c in _COUNTS),
-        StructField("buckets", IntegerType()),
-        StructField("run_id", StringType()),
-        StructField("chunk_id", IntegerType()),
-        StructField("committed_at", TimestampType()),
+        *(StructField(c, LongType(), False) for c in _COUNTS),
+        StructField("buckets", IntegerType(), False),
+        StructField("run_id", StringType(), False),
+        StructField("chunk_id", IntegerType(), False),
+        StructField("committed_at", TimestampType(), False),
     ]
 )
 
@@ -240,16 +241,13 @@ class CheckpointedExtraction:
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
 
     def _lineage_turns(self) -> dict[int, int]:
-        """Completed bucket -> its lineage turn count, from one read and one
-        collect of the lineage, after the resume guard."""
+        """Completed bucket -> its largest lineage turn count, after the
+        resume guard.  One Spark job: a plain scan and collect of three
+        columns, one row per committed chunk; the max is taken here."""
         lin = self.lineage()
         if lin is None:
             return {}
-        rows = (
-            lin.groupBy("bucket", "buckets")
-            .agg(F.max("turn_count").alias("turn_count"))
-            .collect()
-        )
+        rows = lin.select("bucket", "buckets", "turn_count").collect()
         # Resume guard: the bucketing scheme is part of the lineage contract.
         # Resuming the same output with a different ``buckets`` would mix two
         # hash schemes — stale data partitions from the old scheme survive
@@ -266,8 +264,10 @@ class CheckpointedExtraction:
                 f"buckets={self.buckets}; rerun with the original setting or "
                 "use a fresh output_dir"
             )
-        # one row per bucket: every row past the guard has this scheme
-        return {r.bucket: r.turn_count or 0 for r in rows}
+        turns: dict[int, int] = {}
+        for r in rows:
+            turns[r.bucket] = max(turns.get(r.bucket, 0), r.turn_count or 0)
+        return turns
 
     def completed_buckets(self) -> set[int]:
         return set(self._lineage_turns())
@@ -288,12 +288,13 @@ class CheckpointedExtraction:
             raise ValueError(f"max_chunks must be >= 0, got {max_chunks}")
         chunks = self.pending_buckets()[:max_chunks]
         bucket_of = F.pmod(F.hash(F.col("conv_id")), F.lit(self.buckets))
+        metrics = metrics_columns()
         for chunk_id, b in enumerate(chunks):
             out = extract_transcripts(self.input_df.filter(bucket_of == b))
             # the data write observes the lineage aggregates, merged over
             # successful task attempts only: no second pass over the data
             obs = Observation()
-            self._commit_data(out.observe(obs, *metrics_columns()).withColumn("bucket", F.lit(b)))
+            self._commit_data(out.observe(obs, *metrics).withColumn("bucket", F.lit(b)))
             # lineage append AFTER data commit: a crash between the two
             # leaves the bucket un-marked -> it is simply redone (and the
             # per-bucket overwrite makes the redo idempotent).
@@ -301,22 +302,16 @@ class CheckpointedExtraction:
         return len(chunks)
 
     def _lineage_row(self, metrics: dict, bucket: int, chunk_id: int) -> DataFrame:
-        """One lineage row: a literal per ``LINEAGE_SCHEMA`` field over a
-        one-partition range, so one task writes one file and no Python
-        worker runs.  Over an empty bucket the observed count is 0 and the
-        sums and key ranges are null; the sums are zeroed."""
+        """One lineage row as a one-row Arrow table: a ``LocalRelation``, so
+        one task writes one file, no Python worker runs and no per-chunk
+        literal reaches codegen.  Over an empty bucket the observed count is
+        0 and the sums and key ranges are null; the sums are zeroed."""
         row = dict(metrics, bucket=bucket, buckets=self.buckets, run_id=self.run_id,
                    chunk_id=chunk_id, committed_at=datetime.now(timezone.utc))
         row.update((c, row[c] or 0) for c in _COUNTS)
-        cols = []
-        for f in LINEAGE_SCHEMA:
-            col = F.lit(row[f.name]).cast(f.dataType)
-            if f.name in metrics and f.name not in _COUNTS:
-                # a key range: null over an empty bucket, so `optional` in
-                # every file (a constant alone is written `required`)
-                col = F.when(F.col("id") == 0, col)
-            cols.append(col.alias(f.name))
-        return self.spark.range(0, 1, 1, 1).select(*cols)
+        return self.spark.createDataFrame(
+            pa.table({f.name: [row[f.name]] for f in LINEAGE_SCHEMA}), LINEAGE_SCHEMA
+        )
 
     # -- audit --------------------------------------------------------------
 

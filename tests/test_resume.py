@@ -188,14 +188,20 @@ def test_lineage_rows_match_reference(spark, committed):
     assert [(f.name, f.dataType) for f in lin.schema] == [
         (f.name, f.dataType) for f in ref.schema
     ]
-    assert lin.schema == LINEAGE_SCHEMA
+    # a file read makes every field nullable; the files' own nullability is
+    # pinned by test_chunk_commit_shape
+    assert lin.schema == committed.lineage().schema
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
     assert data.select("bucket").distinct().count() < 8  # empty buckets zeroed
     assert sorted(lin.drop("committed_at").collect()) == sorted(
         ref.drop("committed_at").collect()
     )
 
 
-def test_validate_reads_lineage_once(committed, monkeypatch):
+def test_validate_reads_lineage_once(spark, committed, monkeypatch):
+    """One read of the lineage, a plain scan and collect: one Spark job."""
     calls = []
     read = CheckpointedExtraction.lineage
 
@@ -204,9 +210,54 @@ def test_validate_reads_lineage_once(committed, monkeypatch):
         return read(self)
 
     monkeypatch.setattr(CheckpointedExtraction, "lineage", spy)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     audit = committed.validate()
     assert audit["complete"] and audit["lineage_turns"] > 0, audit
     assert len(calls) == 1
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+
+
+def test_lineage_row_is_a_local_relation(committed):
+    """A chunk's lineage row is a one-row local relation (no range, no
+    literal projection to compile) that holds the values it was given."""
+    row = committed.lineage().orderBy("chunk_id").first().asDict()
+    df = committed._lineage_row(row, row["bucket"], row["chunk_id"])
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+    assert df.schema == LINEAGE_SCHEMA
+    (got,) = df.collect()
+    assert got.asDict() | {"committed_at": None} == row | {"committed_at": None}
+
+
+def test_repeated_bucket_lineage_resumes_with_max(spark, tmp_path):
+    """Lineage may hold more than one row for a bucket (a chunk committed
+    twice): the bucket is complete, ``validate()`` reports its largest turn
+    count, and a row from another bucket scheme is still refused."""
+    sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
+    out = str(tmp_path / "repeated")
+
+    def commit(buckets, bucket, turns):
+        job = CheckpointedExtraction(spark, sdf, out, buckets=buckets)
+        observed = dict(
+            conv_id_min="c", conv_id_max="c", turn_idx_min=0,
+            turn_idx_max=turns - 1, turn_count=turns, ok_count=turns,
+            empty_count=None, rejected_count=None, failed_count=None,
+            token_count=None, field_count=None,
+        )
+        job._commit_lineage(job._lineage_row(observed, bucket, bucket))
+
+    commit(2, 0, 3)
+    commit(2, 1, 4)
+    commit(2, 0, 7)
+    job = CheckpointedExtraction(spark, sdf, out, buckets=2)
+    assert job.run() == 0
+    assert job.validate() == {
+        "buckets_total": 2, "buckets_done": 2, "lineage_turns": 7 + 4, "complete": True,
+    }
+    commit(3, 1, 4)
+    with pytest.raises(ValueError, match="bucket-scheme mismatch"):
+        job.validate()
 
 
 def test_unreadable_lineage_raises(spark, tmp_path):
@@ -417,6 +468,7 @@ def test_chunk_commit_shape(spark, committed, tmp_path, monkeypatch):
     a one-row lineage job: run() never reads ``data/`` back, a 4-chunk run
     issues 3 Spark jobs per chunk, and every lineage file, an empty
     bucket's included, keeps the file schema lineage has always had."""
+    import json
     import pathlib
 
     import pyarrow as pa
@@ -457,8 +509,22 @@ def test_chunk_commit_shape(spark, committed, tmp_path, monkeypatch):
     ]
     assert len(files) == 4 + 8
     assert any(pq.read_table(f).column("turn_count")[0].as_py() == 0 for f in files)
+    # the Spark schema each file records, as lineage has always written it
+    spark_type = {
+        pa.int32(): "integer", pa.int64(): "long", pa.string(): "string",
+        pa.timestamp("ns"): "timestamp",
+    }
+    row_metadata = {
+        "type": "struct",
+        "fields": [
+            {"name": f.name, "type": spark_type[f.type], "nullable": f.nullable, "metadata": {}}
+            for f in want
+        ],
+    }
     for f in files:
         assert pq.read_schema(f) == want, f
+        metadata = pq.read_schema(f).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+        assert json.loads(metadata) == row_metadata, f
 
 
 # Runs in its own driver: a local master retries a failed task only with
