@@ -8,8 +8,8 @@ Usage (cluster):
     spark-submit \
         --py-files dist/ocr_spark.zip \
         jobs/extract_job.py \
-        --input  <path or iceberg table>  \
-        --output <output root>            \
+        --input  <path or table identifier>  \
+        --output <path or table identifier>  \
         --buckets 16
 
 Usage (sandbox smoke; at ``--synthetic 200`` the lineage totals are
@@ -21,13 +21,14 @@ Usage (sandbox smoke; at ``--synthetic 200`` the lineage totals are
 directory on the driver's local disk (removed when the job ends), and then
 reads it like ``--input``; it is a local-mode smoke path.
 
-Input is an Iceberg transcripts table (``--format iceberg`` on a cluster
-with the Iceberg runtime, its catalog configured with ``spark-submit
---conf spark.sql.catalog.<name>=...``) or a parquet directory of the same
-schema (conv_id, turn_idx, role, text, tool, ts).  The job is resumable:
-re-running with the same --output continues from the lineage table (see
-ocr_spark/checkpoint.py); completed buckets are skipped, a half-written
-bucket is overwritten idempotently.
+Storage is chosen by name: a value holding ``/`` or ``:`` is a parquet
+path (``./name`` for a relative one), anything else a table identifier.
+``--input`` is a parquet directory of transcripts (conv_id, turn_idx, role,
+text, tool, ts) or a table (Iceberg or any configured catalog); ``--output``
+is a root for ``data/`` and ``_lineage/`` or an Iceberg table prefix.  The
+job is resumable: re-running with the same --output continues from the
+lineage table (see ocr_spark/checkpoint.py); completed buckets are
+skipped, a half-written bucket is overwritten idempotently.
 
 Sizing guidance at 10^12 turns:
 
@@ -79,13 +80,11 @@ def synthetic_input(spark, n_convs: int, path: str):
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--input", help="parquet dir or iceberg table of transcripts")
-    p.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
-    p.add_argument("--output", required=True, help="output root (data/ + _lineage/)")
-    p.add_argument("--table-format", default="parquet", choices=["parquet", "iceberg"],
-                   help="OUTPUT backend: parquet emulation (default) or real "
-                        "Iceberg snapshot commits (needs the runtime jar + a "
-                        "catalog; --output is then a table-identifier prefix)")
+    p.add_argument("--input", help="transcripts: a parquet path (holds '/' or ':') "
+                                   "or a table identifier")
+    p.add_argument("--output", required=True,
+                   help="a path (data/ + _lineage/ under it) or an Iceberg "
+                        "table identifier prefix (<name>_data + <name>_lineage)")
     p.add_argument("--buckets", type=int, default=4,
                    help="conv_id hash buckets, committed one per chunk")
     p.add_argument("--max-chunks", type=int, default=None,
@@ -107,24 +106,18 @@ def main(argv: list[str] | None = None) -> int:
     spark = build_session("ocr-spark-extract")
     spark.sparkContext.setLogLevel("WARN")
 
-    from ocr_spark.checkpoint import CheckpointedExtraction
+    from ocr_spark.checkpoint import CheckpointedExtraction, is_path
 
     tmp = tempfile.mkdtemp(prefix="ocr_spark_synthetic_") if args.synthetic else None
     try:
         if tmp:
             df = synthetic_input(spark, args.synthetic, os.path.join(tmp, "transcripts"))
-        elif args.format == "iceberg":
-            df = spark.read.format("iceberg").load(args.input)
-        else:
+        elif is_path(args.input):
             df = spark.read.parquet(args.input)
+        else:
+            df = spark.read.table(args.input)
 
-        job = CheckpointedExtraction(
-            spark,
-            df,
-            args.output,
-            buckets=args.buckets,
-            table_format=args.table_format,
-        )
+        job = CheckpointedExtraction(spark, df, args.output, buckets=args.buckets)
         n = job.run(max_chunks=args.max_chunks)
         audit = job.validate(deep=args.deep_audit)
     finally:

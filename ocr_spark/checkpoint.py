@@ -31,23 +31,22 @@ On restart, completed buckets are read from the lineage table and skipped
 (the anti-join resume of SURVEY §2.10; the reference's precedent is its
 memoized skip-seen-keys loop, ``Ingredients_OCR.py:222-224``,
 ``Google_OCR_API.py:74-75``).  A job reads the lineage once before its
-first chunk and once in ``validate()``, one Spark job each.  Before the
-first commit the lineage does not exist (a path or table existence check
-says so); an existing lineage that cannot be read raises.
+first chunk and once in ``validate()``, one Spark job each.  Lineage exists
+when its files do: nothing is committed while ``_lineage/`` holds no
+parquet file (or the Iceberg table is absent), and the files that exist are
+read by name, so an unreadable one raises.
 
-On a real deployment the same structure maps 1:1 onto Iceberg: the chunk
-commit becomes an Iceberg snapshot (atomic MERGE/overwrite of the bucket
-partitions), `_lineage` becomes a second Iceberg table appended in the
-same transaction-ish commit sequence, and resume reads the last snapshot.
-``table_format="iceberg"`` activates that path (V2 writeTo API:
-``overwritePartitions()`` for data, ``append()`` for lineage) against a
-configured Iceberg catalog; it needs the iceberg-spark-runtime jar on the
-session's classpath.  This sandbox ships no Iceberg jar, so the default
-``table_format="parquet"`` emulation keeps the exact commit/resume
-semantics with dynamic partition overwrite (an option of each data write,
-never a session conf), and the iceberg path fails fast with a clear error
-when the runtime is absent (tests/test_resume.py pins both the detection
-and the fallback).
+Storage is chosen by the output's name.  A path (it holds ``/`` or ``:``)
+is the parquet emulation: ``data/`` and ``_lineage/`` under it, with
+dynamic partition overwrite as an option of each data write, never a
+session conf.  Anything else is an Iceberg table identifier
+(``catalog.db.name``): the chunk commit becomes an Iceberg snapshot (V2
+writeTo API: ``overwritePartitions()`` of the bucket partitions in
+``<name>_data``) and lineage an ``append()`` to ``<name>_lineage``; resume
+reads the last snapshot.  That path needs the named catalog configured and
+the iceberg-spark-runtime jar on the session's classpath, and construction
+fails fast with guidance when either is missing (tests/test_resume.py pins
+both guards; no Iceberg jar ships in this repository's test environment).
 """
 
 from __future__ import annotations
@@ -103,46 +102,45 @@ LINEAGE_SCHEMA = StructType(
 )
 
 
+def is_path(name: str) -> bool:
+    """A storage name holding ``/`` or ``:`` is a parquet path (or URI);
+    anything else is a table identifier such as ``catalog.db.table``."""
+    return "/" in name or ":" in name
+
+
 class CheckpointedExtraction:
     """Drive `extract_transcripts` over an input table in resumable chunks.
 
     Parameters
     ----------
     input_df : transcripts DataFrame (conv_id, turn_idx, role, text, tool, ts)
-    output_dir : root directory; extracted rows under ``data/``
-        (partitioned by bucket), lineage rows under ``_lineage/``.
-        With ``table_format="iceberg"`` this is instead an Iceberg table
-        identifier prefix (``catalog.db.name``): data lands in
-        ``<prefix>_data``, lineage in ``<prefix>_lineage``.
+    output : a path (see `is_path`): extracted rows under ``data/``
+        (partitioned by bucket), lineage rows under ``_lineage/``.  Or an
+        Iceberg table identifier prefix (``catalog.db.name``): data lands
+        in ``<prefix>_data``, lineage in ``<prefix>_lineage``; it needs the
+        catalog configured and the iceberg-spark-runtime jar, and raises
+        RuntimeError with guidance at construction when either is missing.
     buckets : stable hash buckets over conv_id; each is one commit, so
         this sets both the resume granularity and the chunk size
-    table_format : "parquet" (default; dynamic-partition-overwrite
-        emulation, works everywhere) or "iceberg" (real snapshot commits
-        via the V2 writeTo API; requires the iceberg-spark-runtime jar
-        and a configured catalog — raises RuntimeError with guidance when
-        the runtime is missing)
     """
 
     def __init__(
         self,
         spark: SparkSession,
         input_df: DataFrame,
-        output_dir: str,
+        output: str,
         *,
         buckets: int = 4,
-        table_format: str = "parquet",
     ):
-        if table_format not in ("parquet", "iceberg"):
-            raise ValueError(f"unknown table_format {table_format!r}")
         if buckets < 1:
             raise ValueError(f"buckets={buckets} must be >= 1")
         self.spark = spark
         self.input_df = input_df
-        self.output_dir = output_dir.rstrip("/")
+        self.output_dir = output.rstrip("/")
         self.buckets = buckets
         self.run_id = f"run_{int(time.time() * 1000):x}"
-        self.table_format = table_format
-        if table_format == "iceberg":
+        self._iceberg = not is_path(output)
+        if self._iceberg:
             self._require_iceberg_runtime()
             self.data_dir = f"{self.output_dir}_data"
             self.lineage_dir = f"{self.output_dir}_lineage"
@@ -151,40 +149,38 @@ class CheckpointedExtraction:
             self.lineage_dir = f"{self.output_dir}/{LINEAGE_SUBDIR}"
 
     def _require_iceberg_runtime(self) -> None:
-        """Fail fast (at construction, not mid-job) when the Iceberg
-        runtime isn't on the classpath, or when the catalog named by the
-        table-identifier prefix isn't configured — with the jar present
-        but no ``spark.sql.catalog.<name>`` set, the first
-        tableExists/writeTo call would otherwise die mid-run."""
+        """Fail fast (at construction, not mid-job) when the catalog named
+        by the identifier's first part isn't configured (most often a
+        relative path given without ``./``), or when the Iceberg runtime
+        isn't on the classpath; either would otherwise die at the first
+        tableExists/writeTo call, mid-run."""
+        catalog = self.output_dir.split(".", 1)[0] if "." in self.output_dir else ""
+        if not catalog or not self.spark.conf.get(f"spark.sql.catalog.{catalog}", None):
+            raise RuntimeError(
+                f"output {self.output_dir!r} has no '/' or ':', so it names an "
+                "Iceberg table and must be prefixed with a configured catalog: "
+                f"set spark.sql.catalog.{catalog or '<name>'}="
+                "org.apache.iceberg.spark.SparkCatalog (plus its type/warehouse "
+                "confs) on the session, or give a path (./name) for the parquet "
+                "emulation"
+            )
         try:
             self.spark._jvm.java.lang.Class.forName(
                 "org.apache.iceberg.spark.SparkCatalog"
             )
         except Exception as exc:
             raise RuntimeError(
-                "table_format='iceberg' needs the iceberg-spark-runtime jar "
-                "on the Spark classpath and an Iceberg catalog configured "
-                "(spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog); "
-                "this environment has neither — use the default "
-                "table_format='parquet' emulation (identical commit/resume "
-                "semantics via dynamic partition overwrite)"
+                f"the Iceberg table output {self.output_dir!r} needs the "
+                "iceberg-spark-runtime jar on the Spark classpath, and this "
+                "environment has none; give a path for the parquet emulation "
+                "(identical commit/resume semantics via dynamic partition "
+                "overwrite)"
             ) from exc
-        catalog = self.output_dir.split(".", 1)[0] if "." in self.output_dir else ""
-        configured = self.spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-        if not catalog or not configured:
-            raise RuntimeError(
-                f"table_format='iceberg' needs output_dir to be a table "
-                f"identifier prefixed with a configured catalog "
-                f"(got {self.output_dir!r}); set "
-                f"spark.sql.catalog.{catalog or '<name>'}="
-                "org.apache.iceberg.spark.SparkCatalog (plus its type/warehouse "
-                "confs) on the session, or use table_format='parquet'"
-            )
 
     # -- storage backends ---------------------------------------------------
 
     def _read_data(self) -> DataFrame:
-        if self.table_format == "iceberg":
+        if self._iceberg:
             return self.spark.read.table(self.data_dir)
         return self.spark.read.schema(DATA_SCHEMA).parquet(self.data_dir)
 
@@ -192,7 +188,7 @@ class CheckpointedExtraction:
         """Idempotent per-bucket commit: only the bucket partitions present
         in ``out`` are replaced (Iceberg: an overwrite-by-partition
         snapshot; parquet: dynamic partition overwrite)."""
-        if self.table_format == "iceberg":
+        if self._iceberg:
             # existence is checked explicitly, NOT via try/except around the
             # write: a real overwritePartitions failure (schema mismatch,
             # catalog auth, executor loss) must surface as-is so the resume
@@ -213,7 +209,7 @@ class CheckpointedExtraction:
             )
 
     def _commit_lineage(self, rows: DataFrame) -> None:
-        if self.table_format == "iceberg":
+        if self._iceberg:
             if self.spark.catalog.tableExists(self.lineage_dir):
                 rows.writeTo(self.lineage_dir).append()
             else:
@@ -224,21 +220,24 @@ class CheckpointedExtraction:
     # -- resume bookkeeping -------------------------------------------------
 
     def lineage(self) -> DataFrame | None:
-        """The lineage table, or None when it does not exist yet.  Reading
-        an existing lineage never falls back to None: treating an unreadable
-        lineage as a first run would recompute every bucket and skip the
-        resume guard."""
-        if self.table_format == "iceberg":
+        """The lineage table, or None while nothing is committed: no Iceberg
+        lineage table, or no parquet file under ``_lineage/``.  The files
+        found are read by name (Spark hides a ``_``-prefixed directory, so
+        reading the directory logs "All paths were ignored"), and an
+        unreadable file raises: taking it for a first run would recompute
+        every bucket and skip the resume guard."""
+        if self._iceberg:
             if not self.spark.catalog.tableExists(self.lineage_dir):
                 return None
             return self.spark.read.table(self.lineage_dir)
-        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.lineage_dir)
-        fs = path.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
-        if not fs.exists(path):
+        pattern = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.lineage_dir}/*.parquet")
+        fs = pattern.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
+        files = fs.globStatus(pattern)
+        if not files:
             return None
-        # a declared schema also reads a directory with no data files
-        # (an empty frame, where inference would fail)
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
+            *(f.getPath().toString() for f in files)
+        )
 
     def _lineage_turns(self) -> dict[int, int]:
         """Completed bucket -> its largest lineage turn count, after the

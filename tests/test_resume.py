@@ -358,8 +358,20 @@ def test_job_script_runs_without_pythonpath(tmp_path):
     # reading it and logging the missing path's stack trace
     for noise in ("FileNotFoundException", "Assume no metadata directory"):
         assert noise not in proc.stderr, proc.stderr[-3000:]
+    # lineage is read by file, never as the hidden `_lineage` directory
+    assert "All paths were ignored" not in proc.stderr, proc.stderr[-3000:]
     # the synthetic corpus's temporary parquet is gone with the job
     assert not list(tmp.glob("ocr_spark_synthetic_*"))
+
+    # storage is chosen by name: the old format options are refused
+    for removed in (["--format", "parquet"], ["--table-format", "iceberg"]):
+        proc = subprocess.run(
+            [sys.executable, os.path.join(root, "jobs", "extract_job.py"),
+             "--synthetic", "1", "--output", str(tmp_path / "refused"), *removed],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 2, (removed, proc.stderr[-2000:])
+        assert "unrecognized arguments" in proc.stderr, removed
 
 
 def test_synthetic_input_is_generated_once(spark, tmp_path):
@@ -412,25 +424,47 @@ def test_non_positive_sizes_are_refused(spark, tmp_path):
 
 
 def test_iceberg_backend_detection(spark, tmp_path):
-    """table_format='iceberg' maps 1:1 onto the parquet emulation (V2
-    writeTo snapshot commits); in an environment without the
-    iceberg-spark-runtime jar it must fail fast at construction with
-    guidance, and bogus formats are rejected outright."""
-    pdf = synth.generate_local(2, shuffled=False)
-    sdf = spark.createDataFrame(pdf)
-    with pytest.raises(ValueError, match="unknown table_format"):
-        CheckpointedExtraction(spark, sdf, str(tmp_path / "x"), table_format="delta")
-    has_iceberg = True
+    """The output's name picks the backend: a path or URI is the parquet
+    emulation; anything else is an Iceberg table identifier, which fails
+    fast at construction without a configured catalog or, in an
+    environment without the iceberg-spark-runtime jar, without the jar."""
+    sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
+    for out in (str(tmp_path / "x"), (tmp_path / "x").as_uri(), "s3a://bucket/x"):
+        job = CheckpointedExtraction(spark, sdf, out)
+        assert job.lineage_dir == f"{out}/_lineage", out
+    with pytest.raises(RuntimeError, match="spark.sql.catalog.local="):
+        CheckpointedExtraction(spark, sdf, "local.db.extract")
+    with pytest.raises(RuntimeError, match=r"spark.sql.catalog.<name>="):
+        CheckpointedExtraction(spark, sdf, "extract")
     try:
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
     except Exception:
-        has_iceberg = False
-    if has_iceberg:
+        pass
+    else:
         pytest.skip("iceberg runtime present; covered by the real-backend path")
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        CheckpointedExtraction(
-            spark, sdf, "local.db.extract", table_format="iceberg"
-        )
+    spark.conf.set("spark.sql.catalog.local", "org.apache.iceberg.spark.SparkCatalog")
+    try:
+        with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
+            CheckpointedExtraction(spark, sdf, "local.db.extract")
+    finally:
+        spark.conf.unset("spark.sql.catalog.local")
+
+
+def test_lineage_exists_when_its_files_do(spark, committed, tmp_path):
+    """``lineage()`` is None while ``_lineage/`` holds no parquet file, and
+    otherwise reads exactly the committed ``part-*.parquet`` files."""
+    import pathlib
+
+    sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
+    out = tmp_path / "no_parquet"
+    (out / "_lineage").mkdir(parents=True)
+    (out / "_lineage" / "_SUCCESS").touch()
+    (out / "_lineage" / ".part-00000.parquet.crc").touch()
+    assert CheckpointedExtraction(spark, sdf, str(out)).lineage() is None
+
+    files = sorted(pathlib.Path(committed.lineage_dir).glob("part-*.parquet"))
+    assert len(files) == 8
+    assert sorted(committed.lineage().inputFiles()) == [f.as_uri() for f in files]
 
 
 def test_run_sets_no_session_conf(spark, tmp_path, monkeypatch):
