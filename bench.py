@@ -99,10 +99,12 @@ def _ensure_transcripts(cpus: int) -> tuple[str, int]:
             return path, json.load(f)["turns"]
     os.makedirs(BENCH_DIR, exist_ok=True)
     from ocr_spark import synth
+    from ocr_spark.pipeline import TRANSCRIPT_SCHEMA
 
     spark = _session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    df = synth.generate_spark(spark, SCALE_CONVS, partitions=cpus * 4)
+    pdf = synth.generate_local(SCALE_CONVS, shuffled=False)
+    df = spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA).repartition(cpus * 4)
     df.write.mode("overwrite").parquet(path)
     turns = spark.read.parquet(path).count()
     spark.stop()

@@ -70,11 +70,13 @@ def build_session(app: str):
 
 def synthetic_input(spark, n_convs: int, path: str):
     """Write ``n_convs`` synthetic conversations to a parquet directory at
-    ``path`` and read it back: the generator runs once, not once per chunk
-    (a lazy generator frame would be recomputed by every chunk's scan)."""
+    ``path`` and read it back, so the chunks scan parquet exactly as they
+    do for ``--input``."""
     from ocr_spark import synth
+    from ocr_spark.pipeline import TRANSCRIPT_SCHEMA
 
-    synth.generate_spark(spark, n_convs).write.parquet(path)
+    pdf = synth.generate_local(n_convs, shuffled=False)
+    spark.createDataFrame(pdf, TRANSCRIPT_SCHEMA).write.parquet(path)
     return spark.read.parquet(path)
 
 

@@ -14,15 +14,15 @@ Layout
   the pandas-on-Arrow UDF → parity by construction.
 - ``ocr_spark.oracle``    — single-threaded ground-truth runner (row loop).
 - ``ocr_spark.pipeline``  — the Spark pipeline: repartition on the row key
-  (conv_id, turn_idx) → mapInPandas extraction → window reassembly → lineage/metrics.
-- ``ocr_spark.synth``     — deterministic transcript generator (local pandas
-  and distributed Spark variants derive every row from a pure function of
-  (conv_idx, turn_idx) — identical output at any parallelism).
+  (conv_id, turn_idx) → mapInPandas extraction → window reassembly; the lineage aggregates.
+- ``ocr_spark.synth``     — deterministic transcript generator: one pandas
+  builder derives every row from a pure function of (conv_idx, turn_idx);
+  Spark callers take it with ``createDataFrame(..., TRANSCRIPT_SCHEMA)``.
 - ``ocr_spark.operators`` — SQL-expressible operator library mapped 1:1 from
   SURVEY.md §2 (each has a DuckDB oracle in ``__spark_entry__.py``), plus
   training-data-pipeline ops (dedup family, ANN, text quality).
-- ``ocr_spark.checkpoint`` — batch-incremental resume: per-bucket lineage
-  rows + anti-join of completed buckets (the memoization pattern of
+- ``ocr_spark.checkpoint`` — the one extraction sink: per-bucket commits,
+  lineage rows, skip of completed buckets (the memoization pattern of
   ``Ingredients_OCR.py:222-224`` generalized).
 """
 

@@ -5,8 +5,8 @@ a metrics table").
 Model
 -----
 The input keyspace is divided into ``buckets`` stable hash buckets of
-``conv_id`` (`pmod(hash(conv_id), buckets)`) — a conversation always lands
-in the same bucket, so bucket completion is a durable unit of progress.
+``conv_id`` (`bucket_of`) — a conversation always lands in the same
+bucket, so bucket completion is a durable unit of progress.
 A bucket is also the unit of commit: each pending bucket is one chunk, and
 after it the job commits
 
@@ -55,7 +55,7 @@ import time
 from datetime import datetime, timezone
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -102,6 +102,11 @@ LINEAGE_SCHEMA = StructType(
 )
 
 
+def bucket_of(buckets: int) -> Column:
+    """The stable hash bucket of a row's ``conv_id``, in ``[0, buckets)``."""
+    return F.pmod(F.hash(F.col("conv_id")), F.lit(buckets))
+
+
 def is_path(name: str) -> bool:
     """A storage name holding ``/`` or ``:`` is a parquet path (or URI);
     anything else is a table identifier such as ``catalog.db.table``."""
@@ -113,7 +118,9 @@ class CheckpointedExtraction:
 
     Parameters
     ----------
-    input_df : transcripts DataFrame (conv_id, turn_idx, role, text, tool, ts)
+    input_df : transcripts DataFrame (conv_id, turn_idx, role, text, tool);
+        each column is cast to its ``TRANSCRIPT_SCHEMA`` type, see
+        `extract_transcripts`
     output : a path (see `is_path`): extracted rows under ``data/``
         (partitioned by bucket), lineage rows under ``_lineage/``.  Or an
         Iceberg table identifier prefix (``catalog.db.name``): data lands
@@ -134,6 +141,9 @@ class CheckpointedExtraction:
     ):
         if buckets < 1:
             raise ValueError(f"buckets={buckets} must be >= 1")
+        # analysis only, no Spark job: a missing or uncastable input column
+        # raises here, naming it, instead of in the first chunk
+        extract_transcripts(input_df)
         self.spark = spark
         self.input_df = input_df
         self.output_dir = output.rstrip("/")
@@ -286,10 +296,10 @@ class CheckpointedExtraction:
         if max_chunks is not None and max_chunks < 0:
             raise ValueError(f"max_chunks must be >= 0, got {max_chunks}")
         chunks = self.pending_buckets()[:max_chunks]
-        bucket_of = F.pmod(F.hash(F.col("conv_id")), F.lit(self.buckets))
+        bucket = bucket_of(self.buckets)
         metrics = metrics_columns()
         for chunk_id, b in enumerate(chunks):
-            out = extract_transcripts(self.input_df.filter(bucket_of == b))
+            out = extract_transcripts(self.input_df.filter(bucket == b))
             # the data write observes the lineage aggregates, merged over
             # successful task attempts only: no second pass over the data
             obs = Observation()

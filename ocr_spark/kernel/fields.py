@@ -82,9 +82,10 @@ _P2 = re.compile(
 )
 _ABSENT = re.compile(r"not a significant source of (?P<list>[a-z ,]+)")
 
-# cheap vectorized prefilters (STRING patterns — kept in the RE2∩re subset
-# so Arrow-backed Series stay on the RE2 fast path, see cleanup.py): most
-# rows are excluded before the per-row matching without changing a match.
+# cheap vectorized prefilters (STRING patterns in the RE2∩re subset):
+# most rows are excluded before the per-row matching without changing a
+# match.  ``extract_batch`` passes an object-dtype Series, so they run
+# Python ``re``, not RE2.
 _ANY_TERM_PAT = _TERM_ALT
 _ABSENT_PAT = "not a significant source of "
 

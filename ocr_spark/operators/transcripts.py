@@ -23,8 +23,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ocr_spark.pipeline import extract_transcripts, partition_metrics, reassemble
-from ocr_spark.synth import generate_spark
+from ocr_spark.checkpoint import bucket_of
+from ocr_spark.pipeline import TRANSCRIPT_SCHEMA, extract_transcripts, metrics_agg, reassemble
+from ocr_spark.synth import generate_local
 
 N_CONVS = 150
 
@@ -41,12 +42,15 @@ FIELD_SCHEMA = MapType(
 )
 
 
+def _transcripts(spark, n_convs=N_CONVS):
+    return spark.createDataFrame(generate_local(n_convs, shuffled=False), TRANSCRIPT_SCHEMA)
+
+
 def extract_pipeline(spark, sf_dir):
     """Full extraction pipeline over synthetic transcripts: row-key
     repartition -> Arrow-batch kernel -> stable (conv_id, turn_idx) window
     reassembly.  Deterministic output."""
-    df = generate_spark(spark, N_CONVS, partitions=8)
-    out = reassemble(extract_transcripts(df))
+    out = reassemble(extract_transcripts(_transcripts(spark)))
     return out.select(
         "conv_id",
         "turn_idx",
@@ -72,8 +76,7 @@ def extract_status_counts(spark, sf_dir):
     expected table.  Unlike the rows-only extraction stamps, a kernel
     change that alters ANY status, token count, field count, or character
     of extracted text now fails the driver's cross-engine value-hash."""
-    df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df)
+    out = extract_transcripts(_transcripts(spark))
     return out.groupBy("status").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
@@ -99,8 +102,7 @@ def extract_fields_long(spark, sf_dir):
     """Long-form extracted fields: fields_json parsed JVM-side (from_json)
     and exploded to (conv_id, turn_idx, field, qty, unit, dv, status) —
     the reference's return_df shape (NFT_OCR.py:1315-1321) as a table."""
-    df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df)
+    out = extract_transcripts(_transcripts(spark))
     parsed = out.select(
         "conv_id",
         "turn_idx",
@@ -157,16 +159,15 @@ def extract_spans_typed(spark, sf_dir):
     """Typed span rows: the (doc, block, line, pos, token) relation every
     downstream layout operator consumes, derived JVM-side from
     extracted_text (see derive_spans)."""
-    df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df)
-    return derive_spans(out)
+    return derive_spans(extract_transcripts(_transcripts(spark)))
 
 
 def extract_lineage(spark, sf_dir):
-    """Per-partition lineage/metrics rows for the same run (north_rule)."""
-    df = generate_spark(spark, N_CONVS, partitions=8)
-    out = extract_transcripts(df)
-    return partition_metrics(out)
+    """The lineage aggregates per conv_id bucket, at the job's default of 4
+    buckets: the rows the checkpointed job commits over the same corpus
+    (north_rule), pinned by tests/test_parity.py."""
+    out = extract_transcripts(_transcripts(spark))
+    return metrics_agg(out.withColumn("bucket", bucket_of(4)), "bucket")
 
 
 def extract_enriched(spark, sf_dir):
@@ -177,8 +178,7 @@ def extract_enriched(spark, sf_dir):
     from ocr_spark.enrich import enrich_extracted
     from ocr_spark.synth import lexicon_words
 
-    df = generate_spark(spark, 60, partitions=8)
-    out = extract_transcripts(df)
+    out = extract_transcripts(_transcripts(spark, 60))
     return enrich_extracted(out, lexicon_words()).select(
         "conv_id", "turn_idx", "extracted_text", "corrected_text",
         "n_corrections", "language", "status",
@@ -230,8 +230,7 @@ def extract_bilingual(spark, sf_dir):
     tests/test_kernel.py, language vote by tests/test_enrich.py."""
     from ocr_spark.enrich import EN_MARKERS, FR_MARKERS
 
-    df = generate_spark(spark, 60, partitions=8)
-    out = extract_transcripts(df)
+    out = extract_transcripts(_transcripts(spark, 60))
     blocks = out.select(
         "conv_id",
         "turn_idx",

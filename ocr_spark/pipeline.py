@@ -21,10 +21,10 @@ Design notes (100 TB posture):
   output partitioned by bucket and applies it in ``result()``.
 - only (conv_id, turn_idx, role, text, tool) cross the JVM->Python Arrow
   boundary; ts and any extra columns are joined back by key only if needed.
-- one output schema (``OUTPUT_SCHEMA``) for every entry point — batch,
-  checkpointed and streaming.  It carries no inline ``spans_json``: the
-  span relation is a pure function of ``extracted_text`` (canonical
-  separators), derived losslessly JVM-side by
+- one output schema (``OUTPUT_SCHEMA``); the checkpointed job commits it
+  plus a ``bucket`` column.  It carries no inline ``spans_json``: the span relation
+  is a pure function of ``extracted_text`` (canonical separators),
+  derived losslessly JVM-side by
   ``ocr_spark.operators.transcripts.derive_spans`` instead of paying ~45%
   of the output bytes through the Arrow hop and the sink (SCALE.md §7).
 - the whole cleanup chain is ONE mapInPandas stage: each extra UDF hop would
@@ -60,7 +60,7 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# the transcripts table (the streaming source and the synthetic generator
+# the transcripts table (the streaming source and the synthetic corpus
 # declare it); the kernel reads its first five columns
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -85,6 +85,14 @@ def extract_transcripts(df: DataFrame) -> DataFrame:
     """Run the extraction kernel over a transcripts DataFrame; returns the
     kernel output (``OUTPUT_SCHEMA``) in no particular order.
 
+    Input contract: the five ``INPUT_COLUMNS`` are read with ``try_cast``
+    to their ``TRANSCRIPT_SCHEMA`` types (a no-op the optimizer removes for
+    input that already has them).  A value that does not fit, such as a
+    ``bigint`` ``turn_idx`` above 2^31, becomes null, so a key that does
+    not fit gets status ``null_key`` and lineage counts it as failed.  A
+    missing column, or one of a type that cannot be cast, fails analysis
+    and the error names it.
+
     The kernel stage is fed by one hash repartition on the row key
     ``(conv_id, turn_idx)`` into one task per core (the session's
     ``defaultParallelism``): every conversation spreads over every kernel
@@ -97,8 +105,9 @@ def extract_transcripts(df: DataFrame) -> DataFrame:
     :func:`reassemble` for the stable per-conversation turn order.
     """
     n_tasks = df.sparkSession.sparkContext.defaultParallelism
+    typed = (F.col(c).try_cast(TRANSCRIPT_SCHEMA[c].dataType).alias(c) for c in INPUT_COLUMNS)
     return (
-        df.select(*INPUT_COLUMNS)
+        df.select(*typed)
         .repartition(n_tasks, "conv_id", "turn_idx")
         .mapInPandas(_extract_map, OUTPUT_SCHEMA)
     )
@@ -128,9 +137,9 @@ def metrics_columns() -> list[Column]:
     """The lineage/metrics aggregates (flags model of
     ``NFT_OCR.py:1470-1478`` generalized per north_rule): conv_id/turn
     ranges + status counters + token/field totals.  The one definition
-    behind both ``metrics_agg`` (``partition_metrics``) and the checkpoint
-    lineage, which observes these same columns on its data write
-    (ocr_spark/checkpoint.py), so the two tables can never drift apart."""
+    behind both ``metrics_agg`` and the checkpoint lineage, which observes
+    these same columns on its data write (ocr_spark/checkpoint.py), so the
+    two can never drift apart."""
     return [
         F.min("conv_id").alias("conv_id_min"),
         F.max("conv_id").alias("conv_id_max"),
@@ -151,15 +160,6 @@ def metrics_agg(extracted: DataFrame, *group_cols: str) -> DataFrame:
     """``metrics_columns`` per ``group_cols``, or one row over the whole
     frame (even an empty one) with none."""
     return extracted.groupBy(*group_cols).agg(*metrics_columns())
-
-
-def partition_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-physical-partition lineage/metrics rows — one row per executor
-    partition, written alongside the output so a resumed job can audit
-    coverage without rescanning data."""
-    return metrics_agg(
-        extracted.withColumn("partition_id", F.spark_partition_id()), "partition_id"
-    )
 
 
 def failure_spans(extracted: DataFrame) -> DataFrame:

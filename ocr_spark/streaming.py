@@ -1,19 +1,18 @@
-"""Structured Streaming ingestion for the extraction pipeline.
+"""Structured Streaming over a transcripts directory: stateful metrics.
 
-SURVEY §2.10: the reference is strictly batch, and the north rule's
-resumability is batch-incremental (see ocr_spark/checkpoint.py).  This
-module is the idiomatic Structured Streaming alternative: a file/Iceberg
-stream source -> the same Arrow-batched extraction kernel ->
-checkpointed sink, with ``Trigger.AvailableNow`` draining whatever has
+SURVEY §2.10/§2.11: the reference is strictly batch, and the north rule's
+resumability is batch-incremental: extraction output is committed only by
+the checkpointed job (ocr_spark/checkpoint.py), the one sink with lineage.
+This module streams the same transcripts table (`stream_source`) into
+metrics beside it, with ``Trigger.AvailableNow`` draining whatever has
 landed and exactly-once file tracking in the stream checkpoint (the
 engine-level version of the reference's memoized skip-seen-keys loop,
 ``Ingredients_OCR.py:222-224``).
 
-The per-turn kernel is stateless, so the stream needs no watermark for
-extraction itself; `turn_rate_metrics` shows the stateful side — a
-watermarked sliding-window throughput aggregation over event time `ts`
-(late turns beyond the watermark are dropped from the metric, never from
-extraction).
+`conversation_progress` keeps per-conversation counters in
+``applyInPandasWithState`` state; `turn_rate_metrics` is a watermarked
+sliding-window throughput aggregation over event time `ts` (late turns
+beyond the watermark are dropped from the metric).
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ocr_spark.pipeline import TRANSCRIPT_SCHEMA, extract_transcripts
+from ocr_spark.pipeline import TRANSCRIPT_SCHEMA
 
 
 # input files per micro-batch
@@ -41,32 +40,6 @@ def stream_source(spark: SparkSession, input_dir: str) -> DataFrame:
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_dir)
-    )
-
-
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-):
-    """readStream -> `extract_transcripts` (row-key repartition ->
-    mapInPandas kernel) -> parquet sink, with the batch output's columns
-    (``pipeline.OUTPUT_SCHEMA``).  Returns the started StreamingQuery;
-    callers awaitTermination().
-
-    No window reassembly inside the stream (a global row_number window is
-    not streamable); readers apply `pipeline.reassemble` at query time,
-    exactly as the batch path's `result()` does.
-    """
-    extracted = extract_transcripts(stream_source(spark, input_dir))
-    return (
-        extracted.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
 
 

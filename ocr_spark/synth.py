@@ -3,11 +3,11 @@
 Schema: (conv_id:string, turn_idx:int32, role:string, text:string,
 tool:string, ts:timestamp) — see FIXTURES.md §1.
 
-Every row is a pure function of (seed, conv_idx, turn_idx) via md5, so the
-local pandas generator and the distributed Spark generator (spark.range over
-conv indices -> mapInPandas over the same per-conversation builder) produce
-identical tables at any parallelism — the property the parity suite and the
-two-parallelism throughput bench both rely on.
+Every row is a pure function of (seed, conv_idx, turn_idx) via md5, so
+``generate_local`` builds the same table in any process.  Spark callers
+take it with ``spark.createDataFrame(generate_local(n, shuffled=False),
+TRANSCRIPT_SCHEMA)``: the explicit schema keeps ``turn_idx`` an int
+(inference without Arrow reads it as bigint).
 
 Conversation lengths are heavy-tailed (Zipf-ish) so a few conversations are
 very long — this exercises the salted-repartition skew defense the north
@@ -338,7 +338,7 @@ def build_conversation(conv_idx: int, seed: int = 42) -> list[dict]:
 
 
 def generate_local(n_convs: int, seed: int = 42, shuffled: bool = True) -> pd.DataFrame:
-    """Local pandas generator (oracle + tests).
+    """The transcripts table of ``n_convs`` conversations as a pandas frame.
 
     ``shuffled=True`` emits rows in a deterministic scrambled order so the
     pipeline's stable (conv_id, turn_idx) reordering is actually exercised
@@ -369,33 +369,6 @@ def write_transcripts_parquet(pdf: pd.DataFrame, path: str) -> None:
 
     table = pa.Table.from_pandas(pdf, preserve_index=False)
     pq.write_table(table, path, coerce_timestamps="us", allow_truncated_timestamps=True)
-
-
-def generate_spark(spark, n_convs: int, seed: int = 42, partitions: int | None = None):
-    """Distributed generator: spark.range over conv indices -> mapInPandas.
-
-    Identical output set to ``generate_local`` (same pure row function);
-    row order differs by partitioning, which downstream windows normalize.
-    """
-    # imported here: the oracle and the benchmark workloads use this
-    # module without Spark
-    from ocr_spark.pipeline import TRANSCRIPT_SCHEMA
-
-    columns = TRANSCRIPT_SCHEMA.names
-
-    def gen(batches):
-        for b in batches:
-            rows = []
-            for c in b["id"].tolist():
-                rows.extend(build_conversation(int(c), seed))
-            out = pd.DataFrame(rows)
-            out["turn_idx"] = out["turn_idx"].astype("int32")
-            yield out[columns]
-
-    rng = spark.range(n_convs)
-    if partitions:
-        rng = rng.repartition(partitions)
-    return rng.mapInPandas(gen, TRANSCRIPT_SCHEMA)
 
 
 def lexicon_words(seed: int = 42, n: int = 200) -> list[str]:

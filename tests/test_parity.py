@@ -23,9 +23,10 @@ from ocr_spark.operators.transcripts import derive_spans
 from ocr_spark.oracle import oracle_extract
 from ocr_spark.pipeline import (
     OUTPUT_SCHEMA,
+    TRANSCRIPT_SCHEMA,
     extract_transcripts,
     failure_spans,
-    partition_metrics,
+    metrics_agg,
     reassemble,
 )
 
@@ -139,7 +140,7 @@ def test_lineage_tables(spark):
     extracted = extract_transcripts(spark.createDataFrame(pdf))
     extracted = extracted.cache()
     try:
-        metrics = partition_metrics(extracted).toPandas()
+        metrics = metrics_agg(extracted).toPandas()
         assert metrics["turn_count"].sum() == len(pdf)
         total = (
             metrics["ok_count"]
@@ -191,15 +192,38 @@ def test_null_keys_fail_their_turns_only(spark, tmp_path):
     }
 
 
-def test_distributed_generator_matches_local(spark):
-    pdf_local = synth.generate_local(15, shuffled=False)
-    pdf_spark = (
-        synth.generate_spark(spark, 15, partitions=4)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    pdf_local = pdf_local.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    pdf_spark["ts"] = pd.to_datetime(pdf_spark["ts"], utc=True)
-    pdf_local["ts"] = pd.to_datetime(pdf_local["ts"], utc=True)
-    pd.testing.assert_frame_equal(pdf_local, pdf_spark)
+def test_out_of_range_turn_idx_fails_its_turn_only(spark, tmp_path):
+    """A bigint turn_idx above 2^31 among ~1k turns: the input contract
+    casts it to null, so the checkpointed run completes, lineage counts
+    that one turn as failed, and every other committed row equals the
+    oracle's."""
+    pdf = synth.generate_local(200, shuffled=True)
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int64")
+    pdf.loc[0, "turn_idx"] = 2**31 + 7
+    sdf = spark.createDataFrame(pdf)
+    assert dict(sdf.dtypes)["turn_idx"] == "bigint"
+    job = CheckpointedExtraction(spark, sdf, str(tmp_path / "out"), buckets=2)
+    assert job.run() == 2
+    assert job.validate(deep=True)["complete"]
+    assert sum(r.failed_count for r in job.lineage().collect()) == 1
+
+    data = spark.read.parquet(job.data_dir).select(*OUTPUT_SCHEMA.names)
+    got = {r[:2]: tuple(r) for r in data.collect()}
+    assert got.pop((pdf.loc[0, "conv_id"], None))[-1] == "null_key"
+    want = oracle_extract(pdf.drop(index=0), row_at_a_time=False)[OUTPUT_SCHEMA.names]
+    want = want.astype(object).where(want.notna(), None)
+    assert got == {t[:2]: t for t in want.itertuples(index=False, name=None)}
+
+
+def test_operator_lineage_is_the_job_lineage(spark, tmp_path):
+    """The ``extract_lineage`` operator's rows are the lineage aggregates
+    that the checkpointed job commits at its default of 4 buckets, on the
+    operator's corpus."""
+    from ocr_spark.operators.transcripts import N_CONVS, extract_lineage
+
+    sdf = spark.createDataFrame(synth.generate_local(N_CONVS, shuffled=False), TRANSCRIPT_SCHEMA)
+    job = CheckpointedExtraction(spark, sdf, str(tmp_path / "out"))
+    assert job.buckets == 4 and job.run() == 4
+    ops = extract_lineage(spark, None)
+    assert ops.count() == 4
+    assert sorted(ops.collect()) == sorted(job.lineage().select(*ops.columns).collect())

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from ocr_spark import synth
-from ocr_spark.checkpoint import LINEAGE_SCHEMA, CheckpointedExtraction
+from ocr_spark.checkpoint import LINEAGE_SCHEMA, CheckpointedExtraction, bucket_of
 from ocr_spark.pipeline import TRANSCRIPT_SCHEMA, extract_transcripts, metrics_agg
 
 N_CONVS = 40
@@ -132,10 +132,8 @@ def test_empty_first_bucket_commits_zeroed_lineage(spark, tmp_path):
     chunk writes no data file, its write's observation over zero rows
     yields one zeroed lineage row, and the run goes on to finish the other
     buckets."""
-    from pyspark.sql import functions as F
-
     sdf = spark.createDataFrame(synth.generate_local(6, shuffled=True)).filter(
-        F.pmod(F.hash("conv_id"), F.lit(4)) != 0
+        bucket_of(4) != 0
     )
     n_turns = sdf.count()
     out = str(tmp_path / "ckpt_empty_first")
@@ -421,6 +419,24 @@ def test_non_positive_sizes_are_refused(spark, tmp_path):
         )
         assert proc.returncode == 2, (bad, proc.stdout[-2000:], proc.stderr[-2000:])
         assert "must be >= " in proc.stderr, bad
+
+
+def test_input_contract_is_checked_at_construction(spark, tmp_path):
+    """A kernel column that is missing, or of a type that cannot be cast to
+    the declared one, fails at construction, before any Spark job, and the
+    error names the column."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    sdf = spark.createDataFrame(synth.generate_local(2, shuffled=False))
+    out = str(tmp_path / "ckpt_contract")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(AnalysisException, match="`tool`"):
+        CheckpointedExtraction(spark, sdf.drop("tool"), out)
+    with pytest.raises(AnalysisException, match="turn_idx"):
+        CheckpointedExtraction(spark, sdf.withColumn("turn_idx", F.array("turn_idx")), out)
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 def test_iceberg_backend_detection(spark, tmp_path):

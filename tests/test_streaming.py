@@ -1,57 +1,13 @@
-"""Structured Streaming path: AvailableNow drain, exactly-once file
-tracking across restarts, and parity with the batch pipeline."""
+"""Structured Streaming metrics: AvailableNow drain, and state and
+exactly-once file tracking that survive a restart."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark import synth
-from ocr_spark.pipeline import extract_transcripts
-from ocr_spark.streaming import stream_extract
 
 
 def _write_chunk(spark, pdf, path):
     spark.createDataFrame(pdf).repartition(2).write.mode("append").parquet(path)
-
-
-def _keys(df):
-    return sorted(
-        (r.conv_id, r.turn_idx, r.extracted_text)
-        for r in df.select("conv_id", "turn_idx", "extracted_text").collect()
-    )
-
-
-def test_stream_matches_batch_and_resumes_incrementally(spark, tmp_path):
-    indir = str(tmp_path / "in")
-    outdir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    pdf = synth.generate_local(30, shuffled=True)
-    half = len(pdf) // 2
-    _write_chunk(spark, pdf.iloc[:half], indir)
-
-    q = stream_extract(spark, indir, outdir, ckpt)
-    q.awaitTermination()
-    got1 = _keys(spark.read.parquet(outdir))
-    assert len(got1) == half
-
-    # second micro-deployment: new files land; restart drains ONLY them
-    _write_chunk(spark, pdf.iloc[half:], indir)
-    q = stream_extract(spark, indir, outdir, ckpt)
-    q.awaitTermination()
-
-    got = _keys(spark.read.parquet(outdir))
-    sdf = spark.createDataFrame(pdf)
-    want = _keys(extract_transcripts(sdf))
-    assert got == want  # no duplicates, no missing, byte-equal text
-
-    # re-running with nothing new is a no-op
-    n_files = len([f for f in os.listdir(outdir) if f.endswith(".parquet")])
-    q = stream_extract(spark, indir, outdir, ckpt)
-    q.awaitTermination()
-    assert _keys(spark.read.parquet(outdir)) == want
-    n_files2 = len([f for f in os.listdir(outdir) if f.endswith(".parquet")])
-    assert n_files2 >= n_files  # empty commits may add zero-row files, never rows
 
 
 def test_stateful_conversation_progress(spark, tmp_path):
