@@ -9,8 +9,7 @@ Usage (cluster):
         --py-files dist/ocr_spark.zip \
         jobs/extract_job.py \
         --input  <path or table identifier>  \
-        --output <path or table identifier>  \
-        --buckets 16
+        --output <path or table identifier>
 
 Usage (sandbox smoke; at ``--synthetic 200`` the lineage totals are
 889 ok / 58 rejected / 28 empty turns):
@@ -41,6 +40,11 @@ Sizing guidance at 10^12 turns:
   one parquet file; measured in SCALE.md §6), so pick it small enough that
   tasks carry thousands of turns, and large enough that redoing one bucket
   after a crash stays cheap.
+- ``--buckets`` also multiplies the input read: a chunk selects its bucket
+  with a hash filter, which scans every input file, so the job reads the
+  whole input once per bucket (the 4-bucket bench job read 214,199 input
+  records for 42,839 turns).  More buckets buy a smaller redo with that
+  many more full input scans.
 - nothing to size for skew: the kernel stage hashes the row key
   (conv_id, turn_idx), so a 10^5-turn conversation spreads over every core.
 """

@@ -128,7 +128,9 @@ class CheckpointedExtraction:
         catalog configured and the iceberg-spark-runtime jar, and raises
         RuntimeError with guidance at construction when either is missing.
     buckets : stable hash buckets over conv_id; each is one commit, so
-        this sets both the resume granularity and the chunk size
+        this sets both the resume granularity and the chunk size.  Each
+        chunk's hash filter scans every input file, so the input is read
+        once per bucket
     """
 
     def __init__(

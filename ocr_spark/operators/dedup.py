@@ -61,13 +61,8 @@ def _cap_buckets(df, key_cols: list[str], cap: int | None = None):
     the guard adds no new shuffle pattern.  Simhash segments are
     deliberately NOT capped: a 15-bit segment bucket only grows huge when
     millions of docs share an identical segment, i.e. exact-dup mass that
-    dedup_exact removes upstream.
-
-    Incremental signature tables carry ``band=-1`` sentinel rows for
-    shingle-less docs (signed-set bookkeeping only); they are never a
-    bucket, so a ``band`` key drops them here, for every caller."""
+    dedup_exact removes upstream."""
     cap = MAX_BUCKET if cap is None else cap
-    df = df.filter(F.col("band") >= 0) if "band" in key_cols else df
     sizes = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_bn"))
     return df.join(
         sizes.filter(F.col("_bn") <= cap).drop("_bn"), key_cols
@@ -134,8 +129,7 @@ def _shingle_arrays(spark, sf_dir, docs=None):
     old exploded-shingle exchange it replaces.
 
     ``docs`` overrides the source relation (any (doc_id, text) DataFrame —
-    e.g. the exact-dedup survivors in ``dedup_pipeline``, or the unsigned
-    remainder in ``minhash_bands_incremental``)."""
+    e.g. the exact-dedup survivors in ``dedup_pipeline``)."""
     d = (docs if docs is not None else load(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     )
@@ -289,22 +283,14 @@ def dedup_minhash_lsh(spark, sf_dir):
     return _minhash_verify_pairs(spark, sha)
 
 
-def _minhash_verify_pairs(spark, sha, bands=None, docs=None):
+def _minhash_verify_pairs(spark, sha):
     """Banded candidate generation + exact-Jaccard verify over a persisted
     (doc_id, sh_arr) shingle-array relation — the shared back half of
-    ``dedup_minhash_lsh`` / ``dedup_pipeline`` / ``dedup_minhash_incremental``.
-
-    ``bands`` overrides the signature relation (the incremental path feeds
-    the union of stored and freshly-signed bands); default derives it from
-    ``sha`` map-side.  ``docs`` switches the verify stage's shingle source:
-    instead of semi-joining an existing shingle-array relation, re-shingle
-    ONLY the candidate docs from the raw (doc_id, text) relation — the
-    incremental posture, where no corpus-wide shingle relation exists and
-    the hash chain must run over nothing bigger than the (bucket-bounded)
-    candidate set."""
-    if bands is None:
-        bands = minhash_bands(spark, None, shingle_arrays=sha)
-    bands = _cap_buckets(bands, ["band", "s0", "s1"])
+    ``dedup_minhash_lsh`` / ``dedup_pipeline``.  The signatures come from
+    ``sha`` map-side."""
+    bands = _cap_buckets(
+        minhash_bands(spark, None, shingle_arrays=sha), ["band", "s0", "s1"]
+    )
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -327,12 +313,7 @@ def _minhash_verify_pairs(spark, sha, bands=None, docs=None):
         .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    if docs is not None:
-        csh = _shingle_arrays(
-            spark, None, docs=docs.join(cand_docs, "doc_id", "left_semi")
-        ).persist()
-    else:
-        csh = sha.join(cand_docs, "doc_id", "left_semi").persist()
+    csh = sha.join(cand_docs, "doc_id", "left_semi").persist()
     sizes = csh.select("doc_id", F.size("sh_arr").alias("n"))
     shx = csh.select("doc_id", F.explode("sh_arr").alias("sh"))
     inter = (
@@ -632,60 +613,6 @@ SELECT doc_id, label AS cluster_rep FROM l{CC_ROUNDS}
 
 
 DEDUP_CLUSTERS_SQL = _cc_sql()
-
-
-def minhash_bands_incremental(spark, docs, signed):
-    """Incremental signing for a growing corpus (the SCALE.md §9
-    refinement): given the raw (doc_id, text) relation and a previously
-    persisted (doc_id, band, s0, s1) signature table, run the shingle +
-    minhash chain — the pipeline's dominant map cost — ONLY for docs the
-    table has not signed yet.
-
-    Returns ``(new_bands, all_bands)``: append ``new_bands`` to the
-    signature table (idempotent by doc_id anti-join), feed ``all_bands``
-    to ``dedup_minhash_incremental``.  Signatures are 4 small rows per doc
-    and a pure function of the text, so the table needs no invalidation —
-    re-signing an unchanged doc is the only thing the anti-join prevents.
-
-    Docs too short to shingle (< 3 tokens — no band rows) get ONE sentinel
-    row ``(doc_id, band=-1, s0=NULL, s1=NULL)`` so they land in the signed
-    set too: without it the anti-join re-ran the shingle pass over the
-    entire short-doc tail on EVERY incremental run (round-4 ADVICE).
-    Sentinels can never produce candidates (the bucket join is an equality
-    on (band, s0, s1), and ``_minhash_verify_pairs`` drops ``band < 0``
-    rows before the guard/join anyway) — they are signed-set bookkeeping
-    only, so full-recompute equality is unchanged.
-
-    Assumed corpus contract (SCALE.md §9): APPEND-ONLY with immutable
-    text per doc_id.  A mutated doc would keep its stale signature —
-    callers that edit documents must delete those doc_ids from the
-    signature table first."""
-    new_docs = docs.join(
-        signed.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    sha_new = _shingle_arrays(spark, None, docs=new_docs)
-    new_bands = minhash_bands(spark, None, shingle_arrays=sha_new)
-    sentinels = sha_new.filter(F.size("sh_arr") == 0).select(
-        "doc_id",
-        F.lit(-1).alias("band"),
-        F.lit(None).cast("bigint").alias("s0"),
-        F.lit(None).cast("bigint").alias("s1"),
-    )
-    new_bands = new_bands.unionByName(sentinels)
-    return new_bands, signed.select("doc_id", "band", "s0", "s1").unionByName(
-        new_bands
-    )
-
-
-def dedup_minhash_incremental(spark, docs, signed):
-    """``dedup_minhash_lsh`` for a growing corpus: signatures come from the
-    persisted table plus a fresh signing pass over unsigned docs only
-    (``minhash_bands_incremental``), and the verify stage re-shingles
-    nothing bigger than the candidate set (no corpus-wide shingle relation
-    ever materializes).  Result is identical to a full recompute over
-    ``docs`` — pinned by tests/test_incremental.py."""
-    _, all_bands = minhash_bands_incremental(spark, docs, signed)
-    return _minhash_verify_pairs(spark, None, bands=all_bands, docs=docs)
 
 
 N_SEGMENTS = HAMMING_MAX + 1  # pigeonhole: Hamming<=3 => >=1 of 4 segments equal

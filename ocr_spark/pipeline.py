@@ -44,7 +44,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ocr_spark.kernel.extract import extract_batch
+from ocr_spark.kernel.extract import (
+    STATUS_EMPTY,
+    STATUS_OK,
+    STATUS_REJECTED,
+    extract_batch,
+)
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -60,8 +65,8 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# the transcripts table (the streaming source and the synthetic corpus
-# declare it); the kernel reads its first five columns
+# the transcripts table (the synthetic corpus declares it); the kernel
+# reads its first five columns
 TRANSCRIPT_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -117,7 +122,7 @@ def reassemble(extracted: DataFrame) -> DataFrame:
     """Stable-order reassembly: ``turn_rank`` (dense 1..n in ``turn_idx``
     order) and ``conv_turns`` per ``conv_id`` — one hash exchange on
     conv_id; for full-fidelity artifacts, never inside the checkpointed
-    job or a stream (a global window is not streamable)."""
+    job."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     wc = Window.partitionBy("conv_id")
     return extracted.withColumn("turn_rank", F.row_number().over(w)).withColumn(
@@ -125,12 +130,16 @@ def reassemble(extracted: DataFrame) -> DataFrame:
     )
 
 
+# the three outcomes of a turn the kernel read; lineage counts each in
+# its own ``<status>_count`` column
+_READ_STATUSES = (STATUS_OK, STATUS_EMPTY, STATUS_REJECTED)
+
+
 def _failed() -> Column:
-    """A failed turn: any status but the three outcomes of a turn the kernel
-    read (ok, empty, rejected) — ``tool_parse_error`` and ``null_key``
-    today.  Lineage ``failed_count`` and ``failure_spans`` count the same
-    turns."""
-    return ~F.col("status").isin("ok", "empty", "rejected")
+    """A failed turn: any status but ``_READ_STATUSES`` —
+    ``tool_parse_error`` and ``null_key`` today.  Lineage ``failed_count``
+    and ``failure_spans`` count the same turns."""
+    return ~F.col("status").isin(*_READ_STATUSES)
 
 
 def metrics_columns() -> list[Column]:
@@ -148,7 +157,7 @@ def metrics_columns() -> list[Column]:
         F.count(F.lit(1)).alias("turn_count"),
         *(
             F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(f"{s}_count")
-            for s in ("ok", "empty", "rejected")
+            for s in _READ_STATUSES
         ),
         F.sum(F.when(_failed(), 1).otherwise(0)).alias("failed_count"),
         F.sum("n_tokens").alias("token_count"),
