@@ -33,6 +33,7 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -95,8 +96,10 @@ def extract_transcripts(df: DataFrame) -> DataFrame:
     input that already has them).  A value that does not fit, such as a
     ``bigint`` ``turn_idx`` above 2^31, becomes null, so a key that does
     not fit gets status ``null_key`` and lineage counts it as failed.  A
-    missing column, or one of a type that cannot be cast, fails analysis
-    and the error names it.
+    missing column raises ``AnalysisException`` naming it, checked against
+    ``df.columns`` before Spark analyses the select (whose own error
+    PySpark would first log with the whole Java stack trace); a column of
+    a type that cannot be cast fails Spark's analysis, which names it.
 
     The kernel stage is fed by one hash repartition on the row key
     ``(conv_id, turn_idx)`` into one task per core (the session's
@@ -109,6 +112,13 @@ def extract_transcripts(df: DataFrame) -> DataFrame:
     ``extracted_text`` with ``transcripts.derive_spans``.  Wrap it in
     :func:`reassemble` for the stable per-conversation turn order.
     """
+    have = {c.lower() for c in df.columns}
+    missing = [c for c in INPUT_COLUMNS if c not in have]
+    if missing:
+        names = ", ".join(f"`{c}`" for c in missing)
+        raise AnalysisException(
+            message=f"transcripts input lacks kernel column(s) {names}; it has {df.columns}"
+        )
     n_tasks = df.sparkSession.sparkContext.defaultParallelism
     typed = (F.col(c).try_cast(TRANSCRIPT_SCHEMA[c].dataType).alias(c) for c in INPUT_COLUMNS)
     return (

@@ -342,6 +342,9 @@ def test_job_script_runs_without_pythonpath(tmp_path):
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     env["TMPDIR"] = str(tmp)
+    local = tmp_path / "spark-local"
+    local.mkdir()
+    env["SPARK_LOCAL_DIRS"] = str(local)
     proc = subprocess.run(
         [
             sys.executable, os.path.join(root, "jobs", "extract_job.py"),
@@ -360,6 +363,11 @@ def test_job_script_runs_without_pythonpath(tmp_path):
     assert "All paths were ignored" not in proc.stderr, proc.stderr[-3000:]
     # the synthetic corpus's temporary parquet is gone with the job
     assert not list(tmp.glob("ocr_spark_synthetic_*"))
+    # main() leaves the session running; run() returns only once the JVM,
+    # which holds the pipes, has exited, so its shutdown hook stopped the
+    # context and removed the context's and block manager's local dirs
+    left = [p.name for p in local.iterdir() if p.name.startswith(("spark-", "blockmgr-"))]
+    assert not left, left
 
     # storage is chosen by name: the old format options are refused
     for removed in (["--format", "parquet"], ["--table-format", "iceberg"]):
@@ -372,9 +380,8 @@ def test_job_script_runs_without_pythonpath(tmp_path):
         assert "unrecognized arguments" in proc.stderr, removed
 
 
-def test_synthetic_input_is_generated_once(spark, tmp_path):
-    """`--synthetic` reads a written parquet corpus: no chunk's plan reruns
-    the generator, so the kernel is the job's only Python stage."""
+def _job_module():
+    """`jobs/extract_job.py` imported as a module (it is not a package)."""
     import importlib.util
     import os
 
@@ -382,9 +389,24 @@ def test_synthetic_input_is_generated_once(spark, tmp_path):
     spec = importlib.util.spec_from_file_location(
         "extract_job", os.path.join(root, "jobs", "extract_job.py")
     )
-    extract_job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(extract_job)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
 
+
+def test_job_main_leaves_the_session_running(spark, tmp_path):
+    """`main()` runs in the session it finds and never stops it: the
+    session's owner (here the test fixture) ends it."""
+    extract_job = _job_module()
+    argv = ["--synthetic", "2", "--buckets", "1", "--output", str(tmp_path / "out")]
+    assert extract_job.main(argv) == 0
+    assert spark.range(1).count() == 1
+
+
+def test_synthetic_input_is_generated_once(spark, tmp_path):
+    """`--synthetic` reads a written parquet corpus: no chunk's plan reruns
+    the generator, so the kernel is the job's only Python stage."""
+    extract_job = _job_module()
     df = extract_job.synthetic_input(spark, 5, str(tmp_path / "transcripts"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan and "Scan parquet" in plan, plan
@@ -421,10 +443,12 @@ def test_non_positive_sizes_are_refused(spark, tmp_path):
         assert "must be >= " in proc.stderr, bad
 
 
-def test_input_contract_is_checked_at_construction(spark, tmp_path):
+def test_input_contract_is_checked_at_construction(spark, tmp_path, capfd):
     """A kernel column that is missing, or of a type that cannot be cast to
     the declared one, fails at construction, before any Spark job, and the
-    error names the column."""
+    error names the column.  A missing column is caught before Spark's
+    analysis, so PySpark logs no query-context ERROR line (the Java stack
+    trace, about 12 KB) ahead of the exception."""
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
@@ -432,8 +456,10 @@ def test_input_contract_is_checked_at_construction(spark, tmp_path):
     out = str(tmp_path / "ckpt_contract")
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
+    capfd.readouterr()
     with pytest.raises(AnalysisException, match="`tool`"):
         CheckpointedExtraction(spark, sdf.drop("tool"), out)
+    assert "DataFrameQueryContextLogger" not in capfd.readouterr().err
     with pytest.raises(AnalysisException, match="turn_idx"):
         CheckpointedExtraction(spark, sdf.withColumn("turn_idx", F.array("turn_idx")), out)
     assert set(tracker.getJobIdsForGroup(None)) == before
